@@ -86,7 +86,10 @@ def main() -> None:
     # __spark_entry__.WARMUP_STORES (shared with tools/time_queries.py),
     # and every build is TIMED so the warmup cost is itself visible in
     # the payload (warmup_store_sec).
-    warmup_store_sec: dict[str, float] = {}
+    # A failed build is recorded as {"error": <first line of the error>},
+    # so the payload tells a failed store apart from an instant one; the
+    # full error (a JVM trace can run to kilobytes) goes to stderr.
+    warmup_store_sec: dict[str, float | dict[str, str]] = {}
     for warm in entry_mod.WARMUP_STORES:
         w0 = time.perf_counter()
         try:
@@ -94,6 +97,7 @@ def main() -> None:
             warmup_store_sec[warm] = round(time.perf_counter() - w0, 3)
         except Exception as e:  # never let warmup kill the bench
             print(f"bench warmup {warm}: {e}", file=sys.stderr)
+            warmup_store_sec[warm] = {"error": (str(e).splitlines() or [repr(e)])[0]}
 
     # host-speed canary: this sandbox's effective CPU speed swings ~2x
     # between phases (measured: the same query, same code, 6.7 s vs

@@ -116,8 +116,13 @@ def variant_load3(argv):
     a = p.parse_args(argv)
     if len(a.sampleId) != len(a.inputFile):
         p.error("need matching -s/-i pairs")
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
     from rat_strain_loader_pipeline_spark.pipelines.load import (
-        derive_variants, load_variants,
+        derive_variants_multi, load_variants,
     )
     from rat_strain_loader_pipeline_spark.schemas import (
         VARIANT_MAP_DATA_SCHEMA, VARIANT_SAMPLE_DETAIL_SCHEMA, VARIANT_SCHEMA,
@@ -127,10 +132,19 @@ def variant_load3(argv):
 
     spark = _spark("variant-load3")
     genes = _dims(spark, a.dims, "genes") if a.dims else None
-    derived = None
-    for sid, path in zip(a.sampleId, a.inputFile):
-        d = derive_variants(read_cf2(spark, path), sid, a.gender, a.mapKey, genes=genes)
-        derived = d if derived is None else derived.unionByName(d)
+    # every -s/-i pair derives in ONE staged pass: the lazy CSV reads are
+    # tagged with their sample id and unioned, and gender/map_key come
+    # from a samples dimension (one row per id, or a repeated -s id would
+    # duplicate its rows in the broadcast join)
+    cf2 = reduce(DataFrame.unionByName, (
+        read_cf2(spark, path).select("*", F.lit(sid).alias("sample_id"))
+        for sid, path in zip(a.sampleId, a.inputFile)
+    ))
+    samples = spark.createDataFrame(
+        [(sid, a.gender, a.mapKey) for sid in dict.fromkeys(a.sampleId)],
+        "sample_id int, gender string, map_key int",
+    )
+    derived = derive_variants_multi(cf2, samples, genes=genes)
     v = _store_or_empty(spark, a.store, "variant", VARIANT_SCHEMA)
     # positions only collide within ONE assembly: probe THIS map_key's
     # map data, or a same-key row from another assembly suppresses the

@@ -65,7 +65,8 @@ def derive_variants(
 ) -> DataFrame:
     """All row-level derivations of processLine (VariantLoad3.java:222-365)
     for ONE sample (scalar gender/map_key — the reference's per-process
-    configuration).
+    configuration). The ``VariantLoad3`` tool derives all of its samples
+    at once through :func:`derive_variants_multi`.
 
     Input: CF2_SCHEMA columns. Output adds: chromosome (renamed), start_pos,
     end_pos, variant_type, total_depth (derived), quality_score, zygosity_*,
@@ -100,6 +101,11 @@ def derive_variants_multi(
     instead of per-process scalars, so a thousand samples derive in one
     partitioned pass. Identical per-row semantics to
     :func:`derive_variants` (property-tested).
+
+    This is the ``VariantLoad3`` path (``cli.variant_load3``): every
+    ``-s/-i`` pair of a call derives here together, behind ONE stage
+    barrier whatever the strain count. ``samples`` must hold one row per
+    ``sample_id``; a repeated id duplicates that sample's rows.
 
     ``cf2_with_sample``: CF2_SCHEMA columns + ``sample_id``.
     """

@@ -13,7 +13,15 @@ So the engine stages through parquet — which is also the honest design
 at cluster scale: the reference pipeline lands every stage in staging
 tables, and a 100 TB Spark deployment would land them in parquet/Delta.
 
-Stages are written under a per-process temp dir, cleaned up by the OS.
+Stages are written under a per-process temp dir (``_stage_root``).
+Nothing deletes them, neither while the process runs nor after it
+exits: a long-lived process accumulates every stage it wrote.
+
+The read-back passes the schema the stage was written with. Spark
+would otherwise infer it by reading the parquet footers back, which
+costs one Spark job per barrier; the written schema is already known
+and the inferred one equals it (tests/test_store.py pins both the
+schema and the rows).
 """
 
 from __future__ import annotations
@@ -52,4 +60,4 @@ def stage_to_parquet_path(
     files written) and scheme-prefixed (``file:``) otherwise."""
     path = os.path.join(_stage_root(), f"{label}-{uuid.uuid4().hex[:12]}")
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path), path
+    return df.sparkSession.read.schema(df.schema).parquet(path), path

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn, *args, **kwargs)`` -> ``(fn's result, the number
+    of Spark jobs fn ran)``, counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        group = f"count-jobs-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, "counted call")
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

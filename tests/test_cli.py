@@ -17,6 +17,15 @@ VCF = """##fileformat=VCFv4.1
 1\t14\t.\tG\tC\t99\tPASS\t.\tGT:AD:DP\t1/1:0,40:40
 """
 
+# two strains: A and B call disjoint sites plus one identical shared call
+VCF2 = """##fileformat=VCFv4.1
+#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tA\tB
+1\t8\trs8\tA\tG\t50\tPASS\tDP=60\tGT:AD:DP\t0/1:30,30:60\t./.:.:.
+1\t14\t.\tG\tC\t99\tPASS\t.\tGT:AD:DP\t./.:.:.\t1/1:0,40:40
+1\t20\trs20\tT\tA\t99\tPASS\t.\tGT:AD:DP\t1/1:0,20:20\t1/1:0,20:20
+2\t30\t.\tC\tT\t60\tPASS\t.\tGT:AD:DP\t0/1:10,5:15\t./.:.:.
+"""
+
 WIG = """fixedStep chrom=chr1 start=5 step=1
 0.5
 0.75
@@ -53,37 +62,44 @@ def dims_root(spark, tmp_path_factory):
     return str(root)
 
 
-def test_cli_full_chain(spark, tmp_path, dims_root, capsys):
+def test_cli_full_chain(spark, tmp_path, dims_root, capsys, count_jobs):
+    jobs = {}  # Spark jobs per tool, summed over its calls
+
+    def run(argv):
+        rc, n = count_jobs(cli.main, argv)
+        jobs[argv[1]] = jobs.get(argv[1], 0) + n
+        return rc
+
     vcf = tmp_path / "in.vcf"
     vcf.write_text(VCF)
     cf2_dir = tmp_path / "cf2"
     store = str(tmp_path / "store")
 
     # STAGE2: VcfConverter2
-    assert cli.main([
+    assert run([
         "--tool", "VcfConverter2", "--vcfFile", str(vcf), "--outDir", str(cf2_dir),
         "--mapKey", "360",
     ]) == 0
     assert "rows=2" in capsys.readouterr().out
 
     # STAGE3: VariantLoad3 into a fresh store
-    assert cli.main([
+    assert run([
         "--tool", "VariantLoad3", "-s", "7", "-i", str(cf2_dir / "strain=BN"),
         "--store", store, "--dims", dims_root, "--mapKey", "360",
     ]) == 0
     assert "rows_new_variants=2" in capsys.readouterr().out
 
     # rerun is a pure upsert: no new variants on identical input
-    assert cli.main([
+    assert run([
         "--tool", "VariantLoad3", "-s", "8", "-i", str(cf2_dir / "strain=BN"),
         "--store", store, "--dims", dims_root, "--mapKey", "360",
     ]) == 0
     assert "rows_new_variants=0" in capsys.readouterr().out
 
     # fixups are idempotent recomputes over the store
-    assert cli.main(["--tool", "VariantTypeFixUp", "--store", store]) == 0
+    assert run(["--tool", "VariantTypeFixUp", "--store", store]) == 0
     assert "rows_fixed=0" in capsys.readouterr().out
-    assert cli.main([
+    assert run([
         "--tool", "GenicStatusFixUp", "--store", store, "--dims", dims_root,
     ]) == 0
     assert "rows_fixed=0" in capsys.readouterr().out
@@ -91,18 +107,18 @@ def test_cli_full_chain(spark, tmp_path, dims_root, capsys):
     # STAGE4: VariantPostProcessing from a FASTA file
     fasta = tmp_path / "g.fa"
     fasta.write_text("".join(f">{c}\n{s}\n" for c, s in SEQS.items()))
-    assert cli.main([
+    assert run([
         "--tool", "VariantPostProcessing", "--fastaFile", str(fasta),
         "--store", store, "--dims", dims_root, "--mapKey", "360",
     ]) == 0
     assert "variant_transcript_rows=2" in capsys.readouterr().out
 
-    assert cli.main(["--tool", "FrameShiftFixUp", "--store", store]) == 0
+    assert run(["--tool", "FrameShiftFixUp", "--store", store]) == 0
     assert "rows_total=2" in capsys.readouterr().out
 
     # Polyphen export over the store (the pos-8 A>G Q→R row qualifies)
     pp_out = tmp_path / "pp"
-    assert cli.main([
+    assert run([
         "--tool", "Polyphen", "--outDir", str(pp_out), "--store", store,
         "--dims", dims_root,
     ]) == 0
@@ -111,6 +127,82 @@ def test_cli_full_chain(spark, tmp_path, dims_root, capsys):
         ln for f in pp_out.glob("part-*.txt") for ln in f.read_text().splitlines()
     ]
     assert line == "NP_001 2 Q R"
+
+    # job-count pin for the tool path (114 measured at 2, 4 and 8 cores):
+    # a change that adds Spark jobs to a tool call fails here
+    assert sum(jobs.values()) <= 114, jobs
+
+
+def _store_rows(spark, store):
+    from rat_strain_loader_pipeline_spark.store import read_table
+
+    out = {}
+    for table in ("variant", "variant_map_data", "variant_sample_detail"):
+        df = read_table(spark, store, table)
+        cols = sorted(df.columns)
+        out[table] = sorted(tuple(r) for r in df.select(*cols).collect())
+    return out
+
+
+def test_variant_load3_pairs_derive_in_one_pass(spark, tmp_path, dims_root, capsys,
+                                               count_jobs):
+    """Several -s/-i pairs load the same store as a per-pair derive loop
+    + union, and the call runs as many Spark jobs as a one-pair call. The
+    repeated -s id pins the one-row-per-id samples dimension: a duplicate
+    row would double that id's rows in the derive join (rows_in)."""
+    from rat_strain_loader_pipeline_spark.pipelines.load import (
+        derive_variants, load_variants,
+    )
+    from rat_strain_loader_pipeline_spark.schemas import (
+        VARIANT_MAP_DATA_SCHEMA, VARIANT_SAMPLE_DETAIL_SCHEMA,
+    )
+    from rat_strain_loader_pipeline_spark.sources.cf2 import read_cf2
+    from rat_strain_loader_pipeline_spark.store import write_load_result
+
+    vcf = tmp_path / "in.vcf"
+    vcf.write_text(VCF2)
+    cf2_dir = tmp_path / "cf2"
+    assert cli.main([
+        "--tool", "VcfConverter2", "--vcfFile", str(vcf), "--outDir", str(cf2_dir),
+        "--mapKey", "360",
+    ]) == 0
+    capsys.readouterr()
+    pairs = [(7, cf2_dir / "strain=A"), (8, cf2_dir / "strain=B"), (7, cf2_dir / "strain=B")]
+
+    def load(store, pairs):
+        args = ["--tool", "VariantLoad3", "--store", store, "--dims", dims_root,
+                "--mapKey", "360"]
+        for sid, path in pairs:
+            args += ["-s", str(sid), "-i", str(path)]
+        assert cli.main(args) == 0
+        return capsys.readouterr().out.strip()
+
+    store = str(tmp_path / "store")
+    printed, jobs3 = count_jobs(load, store, pairs)
+    _, jobs1 = count_jobs(load, str(tmp_path / "store1"), pairs[:1])
+    assert jobs3 == jobs1
+
+    # the per-pair path: one derive_variants call per pair, then a union
+    genes = spark.read.parquet(f"{dims_root}/genes.parquet")
+    derived = None
+    for sid, path in pairs:
+        d = derive_variants(read_cf2(spark, str(path)), sid, "F", 360, genes=genes)
+        derived = d if derived is None else derived.unionByName(d)
+    existing_md = spark.createDataFrame([], VARIANT_MAP_DATA_SCHEMA)
+    existing_v = spark.createDataFrame(
+        [], "rgd_id long, chromosome string, start_pos long, end_pos long, "
+        "ref_nuc string, var_nuc string, variant_type string",
+    )
+    res = load_variants(
+        derived, existing_v, existing_md,
+        spark.createDataFrame([], VARIANT_SAMPLE_DETAIL_SCHEMA),
+    )
+    ref_store = str(tmp_path / "ref_store")
+    write_load_result(res, ref_store, 360)
+
+    assert printed == " ".join(f"{k}={v}" for k, v in res.counters.items())
+    assert res.counters["rows_in"] == 7  # A: 3 calls, B: 2 calls, loaded twice
+    assert _store_rows(spark, store) == _store_rows(spark, ref_store)
 
 
 def test_cli_conservation(spark, tmp_path, capsys):

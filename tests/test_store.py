@@ -2,10 +2,14 @@
 
 from __future__ import annotations
 
+import datetime
 import os
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
+from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
 from rat_strain_loader_pipeline_spark.store import (
     overwrite_partitions,
     read_table,
@@ -116,3 +120,79 @@ def test_compact_table_content_invariant(spark, tmp_path):
     after = read_table(spark, root, "variant_map_data").collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
     assert stats["files_after"] < stats["files_before"]
+
+
+def _nested(spark):
+    return spark.createDataFrame(
+        [
+            (1, (2, ["a", None]), [(1.5,), None], {"k": 1}),
+            (2, None, [], {}),
+        ],
+        "id int, s struct<x:int, tags:array<string>>, "
+        "arr array<struct<v:double>>, m map<string,int>",
+    )
+
+
+def _decimal(spark):
+    return spark.createDataFrame(
+        [(Decimal("12345678901234567890.1234567890"), Decimal("-1.25")), (None, None)],
+        "wide decimal(38,10), narrow decimal(5,2)",
+    )
+
+
+def _times(spark):
+    return spark.createDataFrame(
+        [
+            (
+                datetime.datetime(2024, 2, 29, 23, 59, 59, 123456),
+                datetime.datetime(2024, 1, 1, 0, 0, tzinfo=datetime.timezone.utc),
+                datetime.date(1900, 1, 1),
+            ),
+            (None, None, None),
+        ],
+        "ntz timestamp_ntz, ltz timestamp, d date",
+    )
+
+
+def _metadata(spark):
+    return spark.range(3).select(
+        F.col("id").alias("id", metadata={"comment": "row id", "unit": "count"}),
+        F.lit("x").alias("tag", metadata={"max_length": 1}),
+    )
+
+
+def _vector(spark):
+    from pyspark.ml.linalg import Vectors
+
+    return spark.createDataFrame(
+        [(1, Vectors.dense([1.0, 2.0])), (2, Vectors.sparse(3, [1], [4.0]))],
+        ["id", "features"],
+    )
+
+
+def _non_nullable(spark):
+    # range ids and the literal are non-nullable in the written schema
+    return spark.range(4).withColumn("one", F.lit(1))
+
+
+def _empty(spark):
+    return _nested(spark).filter(F.col("id") < 0)
+
+
+@pytest.mark.parametrize(
+    "make", [_nested, _decimal, _times, _metadata, _vector, _non_nullable, _empty]
+)
+def test_stage_read_back_runs_no_job_and_keeps_schema(spark, tmp_path, count_jobs, make):
+    """A stage barrier reads back with the schema it wrote: the read-back
+    adds no Spark job to the write's, and its schema and rows equal a
+    plain footer-inferring read of the same directory."""
+    df = make(spark)
+    (staged, path), stage_jobs = count_jobs(stage_to_parquet_path, df, "t")
+    _, write_jobs = count_jobs(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain"))
+    )
+    assert stage_jobs == write_jobs
+
+    inferred = spark.read.parquet(path)
+    assert staged.schema.json() == inferred.schema.json()
+    assert sorted(map(repr, staged.collect())) == sorted(map(repr, inferred.collect()))

@@ -20,6 +20,7 @@ Usage: SPARK_GRAFT_CPUS=32 python tools/gate_scale_probe.py
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import time
 import uuid
@@ -47,7 +48,10 @@ def main() -> None:
     ensure_shipped(spark)
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
+    max_id = docs.agg(F.max("doc_id")).collect()[0][0]
+    if max_id is None:
+        sys.exit(f"gate_scale_probe: no rows in {sf_dir}/documents; nothing to enlarge")
+    n = max_id + 1
     corpus = docs
     for i, expr in enumerate(
         ("reverse(text)", "upper(text)", "reverse(upper(text))"), start=1
@@ -61,31 +65,35 @@ def main() -> None:
 
     work = os.path.join(_stage_root(), f"gate-scale-{uuid.uuid4().hex[:8]}")
     src_dir = os.path.join(work, "src")
-    # id-ordered arrival in 4 batches (same ordering idiom as the entry
-    # query: sequential single-file writes, lower ids first)
-    bounds = [n, 2 * n, 3 * n, 4 * n + 1]
-    lo = 0
-    for i, hi in enumerate(bounds):
-        corpus.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.parquet(os.path.join(src_dir, f"p{i}"))
-        lo = hi
+    try:
+        # id-ordered arrival in 4 batches (same ordering idiom as the entry
+        # query: sequential single-file writes, lower ids first)
+        bounds = [n, 2 * n, 3 * n, 4 * n + 1]
+        lo = 0
+        for i, hi in enumerate(bounds):
+            corpus.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+            ).coalesce(1).write.parquet(os.path.join(src_dir, f"p{i}"))
+            lo = hi
 
-    cpus = spark.sparkContext.defaultParallelism
-    t0 = time.perf_counter()
-    with stream_partition_scope(spark):
-        out = dedup_gate_available_now(
-            spark,
-            src_dir + "/p*",
-            work,
-            jaccard_threshold=0.5,
-            max_files_per_trigger=1,
-        )
-        tally = sorted(
-            (r["admitted"], r["count"])
-            for r in out.groupBy("admitted").count().collect()
-        )
-    dt = time.perf_counter() - t0
+        cpus = spark.sparkContext.defaultParallelism
+        t0 = time.perf_counter()
+        with stream_partition_scope(spark):
+            out = dedup_gate_available_now(
+                spark,
+                src_dir + "/p*",
+                work,
+                jaccard_threshold=0.5,
+                max_files_per_trigger=1,
+            )
+            tally = sorted(
+                (r["admitted"], r["count"])
+                for r in out.groupBy("admitted").count().collect()
+            )
+        dt = time.perf_counter() - t0
+    finally:
+        # the 4x corpus and the gate's state are only needed for the tally
+        shutil.rmtree(work, ignore_errors=True)
     n_docs = corpus.count()
     print(
         f"cores={cpus} docs={n_docs} batches=4 gate_wall={dt:.2f}s tally={tally}"
