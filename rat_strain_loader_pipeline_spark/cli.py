@@ -55,6 +55,17 @@ def _write_lines(df, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").text(path)
 
 
+def _counted(df, name: str):
+    """``df`` with a row count observed on the write that consumes it:
+    (df', observation); ``observation.get["n"]`` after that write is the
+    number of rows it landed, with no recount of the output."""
+    from pyspark.sql import functions as F
+
+    from rat_strain_loader_pipeline_spark.observe import with_counters
+
+    return with_counters(df, name, n=F.count(F.lit(1)))
+
+
 # ---------------------------------------------------------------- converters
 
 @tool("VcfConverter2")
@@ -67,17 +78,16 @@ def vcf_converter2(argv):
     p.add_argument("--compressOutputFile", action="store_true")
     a = p.parse_args(argv)
     from rat_strain_loader_pipeline_spark.pipelines.convert import vcf_to_cf2
-    from rat_strain_loader_pipeline_spark.sources.cf2 import read_cf2, write_cf2
+    from rat_strain_loader_pipeline_spark.sources.cf2 import write_cf2
 
     spark = _spark("vcf-convert")
-    out = vcf_to_cf2(
+    out, rows = _counted(vcf_to_cf2(
         spark, a.vcfFile, map_key=a.mapKey,
         process_variants_same_as_ref=a.processVariantsSameAsRef,
-    )
+    ), "cf2-rows")
     write_cf2(out, a.outDir, partition_by_strain=True,
               compression="gzip" if a.compressOutputFile else "none")
-    n = read_cf2(spark, a.outDir).count()  # count the landed files, not a re-run
-    print(f"rows={n} outDir={a.outDir}")
+    print(f"rows={rows.get['n']} outDir={a.outDir}")
 
 
 @tool("Vcf8ColConverter2")
@@ -217,8 +227,9 @@ def variant_post_processing(argv):
         verify_against=verify,
         fasta_blocks=blocks,
     )
-    write_table(res.variant_transcript, a.store, "variant_transcript")
-    print(f"variant_transcript_rows={res.variant_transcript.count()}")
+    vt, rows = _counted(res.variant_transcript, "variant-transcript-rows")
+    write_table(vt, a.store, "variant_transcript")
+    print(f"variant_transcript_rows={rows.get['n']}")
 
 
 # ------------------------------------------------------------------ polyphen
@@ -260,9 +271,9 @@ def polyphen(argv):
 
     spark = _spark("polyphen")
     cand = _polyphen_candidates(spark, a.store, a.dims, a.sample, a.chrom)
-    _write_lines(polyphen_input_lines(cand), a.outDir)
-    n = spark.read.text(a.outDir).count()
-    print(f"candidates={n} outDir={a.outDir}")
+    lines, rows = _counted(polyphen_input_lines(cand), "polyphen-candidates")
+    _write_lines(lines, a.outDir)
+    print(f"candidates={rows.get['n']} outDir={a.outDir}")
 
 
 @tool("PolyphenFasta")
@@ -317,14 +328,13 @@ def polyphen_loader(argv):
 # -------------------------------------------------------------------- fixups
 
 def _run_fixup(name, compute):
-    """Run a fixup and land the patched rows back OVER the source table:
-    stage first (the patched plan reads the same parquet path it is
-    about to truncate), then overwrite."""
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
-
+    """Run a fixup and print its counters. The fixup returns its patched
+    rows already staged (the patched plan must not read the parquet path
+    it is about to truncate), so the caller overwrites the table with
+    them."""
     patched, counters = compute()
     print(f"{name}: " + " ".join(f"{k}={v}" for k, v in counters.items()))
-    return stage_to_parquet(patched, f"fixup-{name.lower()}")
+    return patched
 
 
 @tool("VariantTypeFixUp")

@@ -10,6 +10,17 @@ plan — they aggregate DURING the action that consumes the DataFrame
 (map-side, zero extra passes), unlike a separate ``.count()`` which
 re-executes upstream. ``run_log_row`` then renders the collected
 metrics as a SYSTEM_LOG-shaped row.
+
+Callers, each observing on the write that lands the rows:
+
+- ``pipelines.fixups._apply``: rows total and fixed, on the stage write
+  of the patched rows;
+- ``pipelines.load.load_variants``: rows in, rows already in RGD and the
+  new-id span, on the ``load-with-ids`` stage write;
+- ``cli._counted``: the ``rows=`` (VcfConverter2),
+  ``variant_transcript_rows=`` (VariantPostProcessing) and
+  ``candidates=`` (Polyphen) counts, on the output write;
+- the ``load_counters`` engine query (``__spark_entry__``).
 """
 
 from __future__ import annotations

@@ -9,7 +9,10 @@ ZygosityPercReadFixUp.java:60-117).
 Spark-first: recompute the column, compare, and overwrite — a fixup is
 ``recompute(derivation).withColumn(changed)``. Running any fixup twice
 changes nothing (idempotence — the engine's own consistency check).
-Each returns (patched_df, counters).
+Each returns (patched_df, counters). With ``count_changes=True`` the
+patched rows are already staged to parquet and the counters are
+complete: they are observed on that stage write, so reporting them runs
+no Spark job of its own.
 
 The standalone UpdateVariantStatus tool (UpdateVariantStatus.java:15-66,
 batched ``UPDATE variant SET genic_status`` by id list, batch 1000) is
@@ -24,28 +27,36 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rat_strain_loader_pipeline_spark.functions.variant import variant_type
+from rat_strain_loader_pipeline_spark.observe import with_counters
 from rat_strain_loader_pipeline_spark.operators.interval_join import (
     point_in_interval_flag,
 )
+from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
 
 
 def _apply(
-    df: DataFrame, col: str, recomputed, count_changes: bool = True
+    df: DataFrame, col: str, recomputed, count_changes: bool = True,
+    drop: tuple[str, ...] = (),
 ) -> tuple[DataFrame, dict[str, int]]:
     out = df.withColumn("__new", recomputed)
-    patched = out.withColumn(col, F.col("__new")).drop("__new")
     if not count_changes:
-        # counting executes the upstream plan once just for the report;
-        # callers that only consume the patched rows skip it so the whole
-        # fixup stays a single pass over the data
-        return patched, {}
-    # ONE action for both counters (map-side partial agg, no shuffle of
-    # note); separate count()+count() would execute the upstream plan —
-    # possibly a whole pandas-UDF pipeline — twice.
-    row = out.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum((~F.col(col).eqNullSafe(F.col("__new"))).cast("long")).alias("changed"),
-    ).collect()[0]
+        # callers that only consume the patched rows get them lazily, so
+        # the whole fixup stays a single pass inside their own action
+        return out.withColumn(col, F.col("__new")).drop("__new", *drop), {}
+    # both counters ride on the stage write that lands the patched rows
+    # (the K7 counters the reference increments while it writes); a
+    # separate aggregate would execute the upstream plan — possibly a
+    # join or a whole pandas-UDF pipeline — a second time
+    observed, obs = with_counters(
+        out,
+        f"fixup-{col}",
+        total=F.count(F.lit(1)),
+        changed=F.sum((~F.col(col).eqNullSafe(F.col("__new"))).cast("long")),
+    )
+    patched = stage_to_parquet(
+        observed.withColumn(col, F.col("__new")).drop("__new", *drop), f"fixup-{col}"
+    )
+    row = obs.get
     total, changed = int(row["total"]), int(row["changed"] or 0)
     return patched, {"rows_total": total, "rows_fixed": changed, "rows_up_to_date": total - changed}
 
@@ -85,8 +96,7 @@ def frameshift_fixup(
         F.col("ref_aa").isNotNull(),
         F.when((F.col("__ld") % 3) != 0, "T").otherwise("F"),
     ).otherwise(F.col("frameshift"))
-    out, counters = _apply(joined, "frameshift", recomputed, count_changes)
-    return out.drop("__ld"), counters
+    return _apply(joined, "frameshift", recomputed, count_changes, drop=("__ld",))
 
 
 def genic_status_fixup(
@@ -105,13 +115,13 @@ def genic_status_fixup(
         probe_keys=("chromosome", "start_pos", "end_pos"),
         interval_keys=("g_chr", "g_start", "g_stop"),
     )
-    out, counters = _apply(
+    return _apply(
         flagged,
         "genic_status",
         F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC"),
         count_changes,
+        drop=("__genic",),
     )
-    return out.drop("__genic"), counters
 
 
 def num_alleles_fixup(
@@ -131,8 +141,10 @@ def num_alleles_fixup(
         F.count(F.lit(1)).over(w)
         + F.max(F.when(F.col("zygosity_ref_allele") == "Y", 1).otherwise(0)).over(w)
     ).cast("int")
-    out, counters = _apply(keyed, "zygosity_num_allele", recomputed, count_changes)
-    return out.drop("chromosome", "start_pos"), counters
+    return _apply(
+        keyed, "zygosity_num_allele", recomputed, count_changes,
+        drop=("chromosome", "start_pos"),
+    )
 
 
 def zygosity_poss_error_fixup(

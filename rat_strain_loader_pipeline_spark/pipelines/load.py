@@ -303,15 +303,23 @@ def load_variants(
     the right setting when a load batch's new-key count outgrows a
     single task's sort (see upsert_variants).
 
-    The upsert output feeds four consumers (three store tables + the
-    counter aggregate), so it lands in a parquet stage barrier: measured
-    ~15x faster than a columnar ``.cache()`` at sf0.1 (staging.py) and
-    the honest cluster design — the reference lands every stage in
-    staging tables too.
+    The upsert output feeds three consumers (the three store tables), so
+    it lands in a parquet stage barrier: measured ~15x faster than a
+    columnar ``.cache()`` at sf0.1 (staging.py) and the honest cluster
+    design — the reference lands every stage in staging tables too. The
+    run-log counters are observed on that stage write, so they are
+    complete when this returns and cost no job of their own.
     """
+    from rat_strain_loader_pipeline_spark.observe import with_counters
     from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
 
-    with_ids = stage_to_parquet(
+    # counter reconciliation (VariantLoad3.java:154-168) on the stage
+    # write itself. Observed metrics cannot be distinct aggregates, so the
+    # new-variant count is the span of the new ids: upsert_variants
+    # allocates them as max(existing) + dense_rank on both ranking paths,
+    # so they are contiguous, one id per distinct new key.
+    new_id = F.when(F.col("is_new"), F.col("rgd_id"))
+    upserted, obs = with_counters(
         upsert_variants(
             derived,
             existing_variant,
@@ -319,8 +327,13 @@ def load_variants(
             distributed_ranking=distributed_ranking,
             stage_join=distributed_ranking,
         ),
-        "load-with-ids",
+        "load-counters",
+        rows_in=F.count(F.lit(1)),
+        matched=F.sum((~F.col("is_new")).cast("long")),
+        new_min=F.min(new_id),
+        new_max=F.max(new_id),
     )
+    with_ids = stage_to_parquet(upserted, "load-with-ids")
 
     new_variant = (
         with_ids.filter(F.col("is_new"))
@@ -355,16 +368,12 @@ def load_variants(
         ["rgd_id", "sample_id"],
     )
 
-    # counter reconciliation (VariantLoad3.java:154-168) in ONE action
-    # over the stage — not three separate counts
-    crow = with_ids.agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        F.count_distinct(F.when(F.col("is_new"), F.col("rgd_id"))).alias("new_ids"),
-        F.sum((~F.col("is_new")).cast("long")).alias("matched"),
-    ).collect()[0]
+    crow = obs.get
     counters = {
         "rows_in": int(crow["rows_in"]),
-        "rows_new_variants": int(crow["new_ids"] or 0),
+        "rows_new_variants": (
+            0 if crow["new_min"] is None else int(crow["new_max"] - crow["new_min"] + 1)
+        ),
         "rows_already_in_rgd": int(crow["matched"] or 0),
     }
     return LoadResult(new_variant, new_map_data, sample_detail, counters)

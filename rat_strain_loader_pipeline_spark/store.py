@@ -19,12 +19,28 @@ Writes append (the reference's INSERT batches); recompute-style fixups
 overwrite per-partition via ``overwrite_partitions`` with dynamic
 partition overwrite, the Spark image of the reference's batched
 UPDATE (K3) without rewriting untouched chromosomes.
+
+The four variant-cycle tables have their schema declared once, in
+``SCHEMAS`` (the ``schemas.py`` StructTypes). Reads pass it instead of
+inferring it: inference reads parquet footers back in a Spark job of its
+own, and types partition directories by their values (``chromosome=01``
+would come back as ``'1'``). Writes are checked against it, so a frame
+whose column is undeclared or differently typed fails at write time
+rather than being read back wrongly later.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from rat_strain_loader_pipeline_spark.schemas import (
+    VARIANT_MAP_DATA_SCHEMA,
+    VARIANT_SAMPLE_DETAIL_SCHEMA,
+    VARIANT_SCHEMA,
+    VARIANT_TRANSCRIPT_SCHEMA,
+)
 
 PARTITIONING: dict[str, tuple[str, ...]] = {
     "variant": (),
@@ -37,10 +53,19 @@ PARTITIONING: dict[str, tuple[str, ...]] = {
     "sequences": (),
 }
 
+# declared schemas: read without inference, writes checked against them
+SCHEMAS: dict[str, StructType] = {
+    "variant": VARIANT_SCHEMA,
+    "variant_map_data": VARIANT_MAP_DATA_SCHEMA,
+    "variant_sample_detail": VARIANT_SAMPLE_DETAIL_SCHEMA,
+    "variant_transcript": VARIANT_TRANSCRIPT_SCHEMA,
+}
 
-# canonical types for partition columns — parquet partition discovery
-# type-infers directory values (chromosome=2 would come back as int
-# while chromosome=X stays string); normalize on read
+
+# canonical types for partition columns of tables with no declared
+# schema — parquet partition discovery type-infers directory values
+# (chromosome=2 would come back as int while chromosome=X stays string);
+# normalize on read
 _PARTITION_TYPES = {
     "chromosome": "string",
     "chr": "string",
@@ -53,12 +78,31 @@ def _path(root: str, table: str) -> str:
     return f"{root.rstrip('/')}/{table}"
 
 
+def _check_declared(df: DataFrame, table: str) -> None:
+    """Raise ``ValueError`` when ``df`` has a column that ``table``'s
+    declared schema lacks or types differently (a subset of the declared
+    columns may land; the read fills the rest with nulls)."""
+    declared = SCHEMAS.get(table)
+    if declared is None:
+        return
+    types = {f.name: f.dataType for f in declared.fields}
+    bad = [
+        f"{f.name} {f.dataType.simpleString()}"
+        + (f" (declared {types[f.name].simpleString()})" if f.name in types else " (undeclared)")
+        for f in df.schema.fields
+        if types.get(f.name) != f.dataType
+    ]
+    if bad:
+        raise ValueError(f"{table}: columns do not match the declared schema: {', '.join(bad)}")
+
+
 def write_table(
     df: DataFrame, root: str, table: str, mode: str = "append"
 ) -> None:
     """Append ``df`` into the store with the table's canonical
     partitioning (columns not present are skipped, so projections of a
     table can still land)."""
+    _check_declared(df, table)
     cols = [c for c in PARTITIONING.get(table, ()) if c in df.columns]
     w = df.write.mode(mode)
     if cols:
@@ -71,6 +115,7 @@ def overwrite_partitions(df: DataFrame, root: str, table: str) -> None:
     overwrite) — the K3 recompute-and-overwrite sink for fixups: a
     chromosome's recomputed rows replace that chromosome's directory,
     every other partition's files are untouched."""
+    _check_declared(df, table)
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     cols = [c for c in PARTITIONING.get(table, ()) if c in df.columns]
@@ -93,11 +138,17 @@ def read_table(
 ) -> DataFrame:
     """Read a store table; the keyword filters land on partition columns
     where the table has them, so they prune directories instead of
-    scanning (F2 chromosome filter → partition pruning)."""
-    df = spark.read.parquet(_path(root, table))
+    scanning (F2 chromosome filter → partition pruning). A table in
+    ``SCHEMAS`` is read with its declared schema: no inference job, and
+    partition values keep the declared type."""
+    declared = SCHEMAS.get(table)
+    reader = spark.read if declared is None else spark.read.schema(declared)
+    df = reader.parquet(_path(root, table))
     for col, val in (("map_key", map_key), ("chromosome", chromosome), ("sample_id", sample_id)):
         if val is not None and col in df.columns:
             df = df.filter(F.col(col) == val)
+    if declared is not None:
+        return df
     casts = {
         c: F.col(c).cast(t)
         for c, t in _PARTITION_TYPES.items()

@@ -254,3 +254,132 @@ def test_derive_variants_multi_equals_per_sample(spark):
     st = {(r["sample_id"], r["start_pos"]): r["zygosity_status"] for r in got.collect()}
     assert st[(7, 1000)] == "probably hemizygous"
     assert st[(8, 1000)] == "possibly homozygous"
+
+
+# ------------------------------------------- counters observed on the writes
+
+def _fixup_cases(spark):
+    """(fixup, its inputs, the patched column, the row key) per fixup."""
+    variant = spark.createDataFrame(
+        [(1, "A", "snv", "T"), (2, None, "snv", "TT"), (3, "ACG", "del", None)],
+        "rgd_id long, ref_nuc string, variant_type string, var_nuc string",
+    )
+    vt = spark.createDataFrame(
+        [(1, 100, "Q", "R", "F"), (2, 100, None, None, None), (3, 101, "K", "N", "F")],
+        "variant_rgd_id long, transcript_rgd_id int, ref_aa string, var_aa string, "
+        "frameshift string",
+    )
+    vmd = spark.createDataFrame(
+        [(1, "1", 1000, 1001, None, "INTERGENIC", 360), (2, "1", 1000, 1001, None, "GENIC", 360),
+         (3, "2", 7000, 7000, None, "INTERGENIC", 360)],
+        "rgd_id long, chromosome string, start_pos long, end_pos long, padding_base string, "
+        "genic_status string, map_key int",
+    )
+    vsd = spark.createDataFrame(
+        [(1, 7, "Y", 1, 15, "N"), (2, 7, "N", 3, 16, "N"), (3, 7, "N", 1, None, "Y")],
+        "rgd_id long, sample_id int, zygosity_ref_allele string, zygosity_num_allele int, "
+        "zygosity_percent_read int, zygosity_poss_error string",
+    )
+    return [
+        (variant_type_fixup, (variant,), "variant_type", ["rgd_id"]),
+        (frameshift_fixup, (vt, variant), "frameshift", ["variant_rgd_id", "transcript_rgd_id"]),
+        (genic_status_fixup, (vmd, _genes(spark)), "genic_status", ["rgd_id"]),
+        (num_alleles_fixup, (vsd, vmd), "zygosity_num_allele", ["rgd_id", "sample_id"]),
+        (zygosity_poss_error_fixup, (vsd,), "zygosity_poss_error", ["rgd_id", "sample_id"]),
+    ]
+
+
+def _separate_aggregate(before, patched, col, key):
+    """The counters as a separate aggregate over the lazily patched rows,
+    each compared with its row before the fixup."""
+    row = patched.join(before.select(*key, F.col(col).alias("__old")), key).agg(
+        F.count(F.lit(1)).alias("total"),
+        F.sum((~F.col(col).eqNullSafe(F.col("__old"))).cast("long")).alias("changed"),
+    ).first()
+    total, changed = row["total"], row["changed"] or 0
+    return {"rows_total": total, "rows_fixed": changed, "rows_up_to_date": total - changed}
+
+
+def test_fixup_counters_observed_on_the_stage_write(spark, count_jobs):
+    """With count_changes=True each fixup returns its rows staged and its
+    counters complete, equal to a separate aggregate, in no more Spark
+    jobs than staging the lazily patched rows takes; on an empty table
+    every counter is 0."""
+    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
+
+    for fixup, inputs, col, key in _fixup_cases(spark):
+        lazy, none = fixup(*inputs, count_changes=False)
+        assert none == {}
+        (staged, counters), jobs = count_jobs(fixup, *inputs)
+        _, stage_jobs = count_jobs(stage_to_parquet, lazy)
+        assert jobs == stage_jobs, fixup.__name__
+        assert counters == _separate_aggregate(inputs[0], lazy, col, key), fixup.__name__
+        assert counters["rows_total"] == 3
+        assert staged.inputFiles()  # a parquet stage, not the lazy plan
+        assert sorted(map(repr, staged.collect())) == sorted(map(repr, lazy.collect()))
+        assert staged.columns == lazy.columns
+
+        empty = (inputs[0].filter(F.lit(False)),) + inputs[1:]
+        staged, counters = fixup(*empty)
+        assert counters == {"rows_total": 0, "rows_fixed": 0, "rows_up_to_date": 0}
+        assert staged.count() == 0
+
+
+def _cf2_two_samples(spark):
+    """Calls on two chromosomes; sample 8 repeats keys of sample 7 (and one
+    key twice, case-flipped), so duplicate keys span samples."""
+    def snv(chrom, pos, ref, var):
+        counts = [40 if n == var.upper() else 0 for n in "ACGT"]
+        return (chrom, pos, ref, var, None, *counts, 40, None, 0, 40, 1, 40, None)
+
+    s7 = [snv("1", 100, "A", "C"), snv("1", 200, "G", "T"), snv("2", 100, "A", "G"),
+          snv("2", 300, "C", "A")]
+    s8 = [snv("1", 100, "A", "C"), snv("1", 100, "a", "c"), snv("2", 300, "C", "A"),
+          snv("2", 400, "T", "G"), snv("10", 5, "G", "C")]
+    return (spark.createDataFrame(s7, schema=CF2_SCHEMA),
+            spark.createDataFrame(s8, schema=CF2_SCHEMA))
+
+
+def _old_load_counters(derived, existing, distributed):
+    """The load counters as the separate aggregate over the upsert output:
+    count_distinct of the new ids."""
+    from rat_strain_loader_pipeline_spark.operators.upsert import upsert_variants
+    from rat_strain_loader_pipeline_spark.pipelines.load import NATURAL_KEY
+
+    row = upsert_variants(derived, existing, key=NATURAL_KEY,
+                          distributed_ranking=distributed).agg(
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_distinct(F.when(F.col("is_new"), F.col("rgd_id"))).alias("new"),
+        F.sum((~F.col("is_new")).cast("long")).alias("matched"),
+    ).first()
+    return {"rows_in": row["rows_in"], "rows_new_variants": row["new"],
+            "rows_already_in_rgd": row["matched"] or 0}
+
+
+def test_load_counters_observed_on_the_stage_write(spark):
+    """load_variants' observed counters equal the separate aggregate on
+    both ranking paths: a partly matched batch whose duplicate keys span
+    samples, then an all-matched reload of the same batch."""
+    s7, s8 = _cf2_two_samples(spark)
+    derived = derive_variants(s7, 7, "F", 360).unionByName(derive_variants(s8, 8, "F", 360))
+    key_cols = "rgd_id long, chromosome string, start_pos long, end_pos long, " \
+               "ref_nuc string, var_nuc string, variant_type string"
+    existing = spark.createDataFrame([(555, "2", 300, 301, "C", "A", "snv")], key_cols)
+    no_detail = spark.createDataFrame([], "rgd_id long, sample_id int")
+    for distributed in (False, True):
+        res = load_variants(derived, existing, existing, no_detail,
+                            distributed_ranking=distributed)
+        assert res.counters == _old_load_counters(derived, existing, distributed)
+        assert res.counters == {"rows_in": 9, "rows_new_variants": 5,
+                                "rows_already_in_rgd": 2}
+        assert res.variant.count() == 5
+
+        # everything now stored: the reload matches every row
+        stored = existing.unionByName(
+            res.variant.join(res.variant_map_data, "rgd_id").select(*existing.columns)
+        )
+        again = load_variants(derived, stored, stored, no_detail,
+                              distributed_ranking=distributed)
+        assert again.counters == _old_load_counters(derived, stored, distributed)
+        assert again.counters == {"rows_in": 9, "rows_new_variants": 0,
+                                  "rows_already_in_rgd": 9}

@@ -196,3 +196,66 @@ def test_stage_read_back_runs_no_job_and_keeps_schema(spark, tmp_path, count_job
     inferred = spark.read.parquet(path)
     assert staged.schema.json() == inferred.schema.json()
     assert sorted(map(repr, staged.collect())) == sorted(map(repr, inferred.collect()))
+
+
+def test_partition_values_round_trip(spark, tmp_path):
+    """Partition directory values read back exactly as written: an
+    inferring read would type ``chromosome=01`` as int and return '1'."""
+    root = str(tmp_path / "store")
+    write_table(_vmd(spark, "01", "GENIC"), root, "variant_map_data")
+    write_table(_vmd(spark, "2", "GENIC"), root, "variant_map_data")
+
+    df = read_table(spark, root, "variant_map_data")
+    assert sorted({r["chromosome"] for r in df.collect()}) == ["01", "2"]
+    assert read_table(spark, root, "variant_map_data", chromosome="01").count() == 5
+    assert read_table(spark, root, "variant_map_data", chromosome="1").count() == 0
+
+
+# one row per declared table; the partition columns carry values
+_DECLARED_ROWS = {
+    "variant": {"rgd_id": 1, "ref_nuc": "A", "variant_type": "snv"},
+    "variant_map_data": {"rgd_id": 1, "chromosome": "X", "map_key": 360},
+    "variant_sample_detail": {"rgd_id": 1, "sample_id": 7, "total_depth": 40},
+    "variant_transcript": {"variant_rgd_id": 1, "transcript_rgd_id": 2, "map_key": 360},
+}
+
+
+@pytest.mark.parametrize("table", sorted(_DECLARED_ROWS))
+def test_declared_read_runs_no_job_and_keeps_declared_types(spark, tmp_path, count_jobs,
+                                                             table):
+    from rat_strain_loader_pipeline_spark.store import SCHEMAS
+
+    declared = SCHEMAS[table]
+    row = _DECLARED_ROWS[table]
+    root = str(tmp_path / "store")
+    write_table(
+        spark.createDataFrame([tuple(row.get(f.name) for f in declared.fields)], declared),
+        root, table,
+    )
+    df, jobs = count_jobs(read_table, spark, root, table)
+    assert jobs == 0
+    assert {f.name: f.dataType for f in df.schema.fields} == {
+        f.name: f.dataType for f in declared.fields
+    }
+    [got] = df.collect()
+    assert {k: got[k] for k in row} == row
+
+
+def test_write_guard_rejects_undeclared_columns_and_types(spark, tmp_path):
+    root = str(tmp_path / "store")
+    wrong_type = _vmd(spark, "1", "GENIC").withColumn("start_pos", F.col("start_pos").cast("int"))
+    with pytest.raises(ValueError, match="start_pos int"):
+        write_table(wrong_type, root, "variant_map_data")
+    with pytest.raises(ValueError, match="start_pos int"):
+        overwrite_partitions(wrong_type, root, "variant_map_data")
+    extra = _vmd(spark, "1", "GENIC").withColumn("note", F.lit("x"))
+    with pytest.raises(ValueError, match="note string"):
+        write_table(extra, root, "variant_map_data")
+    assert not os.path.exists(root)
+
+    # a projection of a declared table lands; undeclared tables are unchecked
+    write_table(_vmd(spark, "1", "GENIC").select("rgd_id", "chromosome", "map_key"),
+                root, "variant_map_data")
+    write_table(spark.createDataFrame([(1, "1", 0.5)], "position int, chr string, s float"),
+                root, "conservation")
+    assert read_table(spark, root, "conservation").count() == 1
