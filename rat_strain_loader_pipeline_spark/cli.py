@@ -37,10 +37,16 @@ def _spark(app: str):
 
 
 def _dims(spark, root: str, table: str):
-    return spark.read.parquet(f"{root.rstrip('/')}/{table}.parquet")
+    from rat_strain_loader_pipeline_spark.sources.tables import read_parquet_footer
+
+    return read_parquet_footer(spark, f"{root.rstrip('/')}/{table}.parquet")
 
 
 def _store_or_empty(spark, root: str, table: str, schema, **filters):
+    """The store table, or an empty relation when it is absent. The
+    ``limit(0)`` makes the empty frame a ``LocalRelation`` Catalyst can
+    see, so joins against it fold away instead of planning shuffles over
+    empty partitions."""
     from pyspark.sql.utils import AnalysisException
 
     from rat_strain_loader_pipeline_spark.store import read_table
@@ -48,7 +54,7 @@ def _store_or_empty(spark, root: str, table: str, schema, **filters):
     try:
         return read_table(spark, root, table, **filters)
     except AnalysisException:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema).limit(0)
 
 
 def _write_lines(df, path: str) -> None:
@@ -172,7 +178,10 @@ def variant_load3(argv):
         "rgd_id", "chromosome", "start_pos", "end_pos",
         "ref_nuc", "var_nuc", "variant_type",
     )
-    res = load_variants(derived, existing_v, existing_md, existing_sd)
+    # new ids come from one sequence over every assembly: floor them at
+    # the whole variant table's max, not at this map_key's slice
+    res = load_variants(derived, existing_v, existing_md, existing_sd,
+                        id_space=v.select("rgd_id"))
     write_load_result(res, a.store, a.mapKey)
     print(" ".join(f"{k}={v}" for k, v in res.counters.items()))
 

@@ -25,10 +25,18 @@ Semantics notes (all deliberate, matching the Java):
 
 Scale: the gene/transcript/feature dimension tables broadcast (1e4-1e5
 rows/assembly); the FASTA dict broadcasts once (rat genome ~2.8 GB —
-executor-memory sized; for 100 TB corpora swap in the block-table range
-join, sources/fasta.py). The variant side streams through mapInPandas
-with no shuffle at all — output partitioning == input partitioning
-(partition by (map_key, chromosome) upstream).
+executor-memory sized; for 100 TB corpora swap in the block-table
+equi-join, ``variant_transcript_consequences_blocks``). The variant side
+streams through mapInPandas with no shuffle at all — output
+partitioning == input partitioning (partition by (map_key, chromosome)
+upstream).
+
+The blocks path aggregates the features table by transcript ONCE: the
+same groupBy yields each transcript's sequence span and its sorted
+feature array, and the array rides through the span extraction to the
+pair join. Its ``_SpanSeq`` view reports ``len()`` as the span's last
+genome position (``off + len(seq)``), which clamps every in-span read
+exactly as the chromosome length does on the broadcast path.
 """
 
 from __future__ import annotations
@@ -238,9 +246,11 @@ def _candidate_spine(
 ) -> DataFrame:
     """Shared join spine, NARROW rows only: F4 filter, J1 gene interval
     probe (broadcast), J2 transcripts. The per-transcript feature arrays
-    join later (``_features_sorted``), after the pair-level dedup and
-    store anti-join have settled which pairs actually compute — so no
-    exchange ever carries the collected arrays."""
+    join later (``_sorted_feats``), after the pair-level dedup and
+    store anti-join have settled which pairs actually compute — so
+    neither of those exchanges carries the collected arrays. (The blocks
+    path's optional ``repartition_to`` exchange comes after that join and
+    does carry them, with the span text.)"""
     # F4: multi-allelic skip (VariantPostProcessing.java:202-203)
     v = variants.filter(
         F.col("var_nuc").isNull() | ~F.col("var_nuc").contains(",")
@@ -272,24 +282,27 @@ def _candidate_spine(
     return vg.join(broadcast(t), "gene_rgd_id")
 
 
+def _sorted_feats():
+    """J3 + W1 aggregate: a transcript's features collected and sorted by
+    (object_name, start_pos, stop_pos), as column ``feats``."""
+    return F.sort_array(
+        F.collect_list(
+            F.struct(
+                F.col("object_name"),
+                F.col("start_pos"),
+                F.col("stop_pos"),
+                F.col("strand"),
+            )
+        )
+    ).alias("feats")
+
+
 def _features_sorted(features: DataFrame) -> DataFrame:
-    """J3 + W1: features collected per transcript, sorted by
-    (object_name, start_pos, stop_pos)."""
+    """Features collected per transcript (``_sorted_feats``)."""
     return (
         features.filter(F.col("chromosome").isNotNull())
         .groupBy("transcript_rgd_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("object_name"),
-                        F.col("start_pos"),
-                        F.col("stop_pos"),
-                        F.col("strand"),
-                    )
-                )
-            ).alias("feats")
-        )
+        .agg(_sorted_feats())
     )
 
 
@@ -427,21 +440,25 @@ def variant_transcript_consequences(
 
 class _SpanSeq:
     """String-like view of one chromosome restricted to a span
-    [span_start, ...] (1-based): ``len()`` reports the FULL chromosome
-    length so ``get_dna_chunk`` clamps identically to the broadcast-dict
-    path; slicing maps absolute coordinates into the span. The only
-    consumer reads UTR-clipped exon ranges, which lie inside the
-    transcript's feature span by construction."""
+    [span_start, ...] (1-based) whose text ``seq`` is the genome's
+    [span_start, min(span stop, chromosome end)]: slicing maps absolute
+    coordinates into the span, and ``len()`` is the span's last genome
+    position, ``off + len(seq)``. The only consumer (``get_dna_chunk``)
+    reads UTR-clipped exon ranges, which lie inside the transcript's
+    feature span by construction; for any read [a, b] inside the span,
+    min(b, len) equals min(b, chromosome length), so reads clamp exactly
+    as on the broadcast-dict path. An empty span (unknown chromosome,
+    span past its end) is falsy and reads ``""`` before ``len`` is
+    consulted, as an absent chromosome does there."""
 
-    __slots__ = ("off", "seq", "chr_len")
+    __slots__ = ("off", "seq")
 
-    def __init__(self, span_start: int, seq: str, chr_len: int):
+    def __init__(self, span_start: int, seq: str):
         self.off = span_start - 1
         self.seq = seq
-        self.chr_len = chr_len
 
     def __len__(self) -> int:
-        return self.chr_len
+        return self.off + len(self.seq)
 
     def __bool__(self) -> bool:
         return bool(self.seq)
@@ -468,10 +485,21 @@ def variant_transcript_consequences_blocks(
     ([min feature start − flank, max feature stop + flank]) is extracted
     from the ``fasta_blocks`` table via the distributed equi-join
     (sources/fasta.dna_chunks) and joined onto the candidate pairs; the
-    UDF reads exon chunks through a span view with chromosome-length
-    clamping, so output is IDENTICAL to the broadcast path
-    (equivalence-tested). Span bytes shipped = Σ transcript spans, not
-    genome × executors.
+    UDF reads exon chunks through a ``_SpanSeq`` view, so output is
+    IDENTICAL to the broadcast path (equivalence-tested). Span bytes
+    shipped = Σ transcript spans, not genome × executors.
+
+    The features table is aggregated by transcript ONCE: one groupBy
+    yields the span's chromosome, start and stop together with the
+    sorted feature array (W1), and ``dna_chunks`` carries that array
+    through to the spine join, so the ``repartition_to`` exchange, when
+    asked for, carries each pair's feature array along with its span
+    text. ``dna_chunks`` plans its blocks join by size: the
+    transcript-sized probe is broadcast and the genome blocks stream,
+    and a genome over the broadcast threshold is never the broadcast
+    side. The inner spine join keeps exactly the pairs whose transcript
+    has a feature on a chromosome, as the broadcast path's feature join
+    does.
     """
     from rat_strain_loader_pipeline_spark.ship import ensure_shipped
     from rat_strain_loader_pipeline_spark.sources.fasta import dna_chunks
@@ -482,45 +510,28 @@ def variant_transcript_consequences_blocks(
         _candidate_spine(variants, genes, transcripts), verify_against
     )
 
-    spans = (
+    transcript_feats = (
         features.filter(F.col("chromosome").isNotNull())
-        .groupBy("transcript_rgd_id")
+        .groupBy(F.col("transcript_rgd_id").alias("chunk_id"))
         .agg(
             F.first("chromosome").alias("chr"),
             (F.min("start_pos") - span_flank).cast("long").alias("start"),
             (F.max("stop_pos") + span_flank).cast("long").alias("stop"),
+            _sorted_feats(),
         )
     )
-    chr_lens = blocks.groupBy("chr").agg(
-        F.max(F.col("block_start") + F.length("seq_block") - 1).alias("__chr_len")
+    tseq = dna_chunks(transcript_feats, blocks, block_size=block_size).select(
+        F.col("chunk_id").alias("transcript_rgd_id"),
+        F.greatest(F.col("start"), F.lit(1)).alias("span_start_"),
+        F.col("chunk").alias("span_seq_"),
+        "feats",
     )
-    tseq = (
-        dna_chunks(
-            spans.select(
-                F.col("transcript_rgd_id").alias("chunk_id"), "chr", "start", "stop"
-            ),
-            blocks,
-            block_size=block_size,
-        )
-        .join(broadcast(chr_lens), "chr", "left")
-        .select(
-            F.col("chunk_id").alias("transcript_rgd_id"),
-            F.greatest(F.col("start"), F.lit(1)).alias("span_start_"),
-            F.col("chunk").alias("span_seq_"),
-            F.coalesce(F.col("__chr_len"), F.lit(0)).alias("chr_len_"),
-        )
-    )
-    joined = spine.join(tseq, "transcript_rgd_id", "left")
+    joined = spine.join(tseq, "transcript_rgd_id")
     if repartition_to:
         joined = joined.repartition(repartition_to)
-    joined = joined.join(broadcast(_features_sorted(features)), "transcript_rgd_id")
 
     def seqs_for_row(row):
-        return {
-            row.chromosome: _SpanSeq(
-                int(row.span_start_), row.span_seq_ or "", int(row.chr_len_)
-            )
-        }
+        return {row.chromosome: _SpanSeq(int(row.span_start_), row.span_seq_)}
 
     run = _consequence_runner(seqs_for_row, map_key)
     return joined.mapInPandas(run, schema=VT_OUTPUT_SCHEMA)

@@ -120,18 +120,21 @@ def point_in_interval_flag(
     Used for X6 genic status (VariantLoad3.java:682-692) and PAR
     membership. Plan shape: intervals are exploded to genomic bins
     (padded one bin left, so a probe whose span is smaller than
-    ``bin_size`` meets every overlapping interval in its own START bin —
-    exactly once, no dedup needed), broadcast, and the probe runs ONE
-    left-semi plus ONE left-anti hash join on (chr, bin[, key]) with the
-    residual overlap predicate. Everything stays whole-stage-codegen
-    (an earlier array+``exists`` formulation was interpreted per row:
-    ~47M lambda evals, 25 s at sf0.1 — this shape is <1 s).
+    ``bin_size`` meets every overlapping interval in its own START bin),
+    then grouped to ONE build row per (chr, bin[, key]) holding the set
+    of that bin's intervals — one shuffle; ``collect_set`` drops
+    duplicate intervals, and ``exists`` depends on neither order nor
+    multiplicity. The build side is broadcast and the probe runs ONE
+    left hash join on (chr, bin[, key]); the flag is ``exists`` over the
+    matched bin's intervals with the overlap predicate (false when no
+    bin matched). Intervals with a null bound explode to no bin and
+    never flag.
 
     Requires probe spans < bin_size (true for variants vs the 1 Mb
     default by 4 orders of magnitude).
 
     Returns probe with an added boolean column ``flag_name``; row
-    multiplicity preserved exactly (semi/anti never duplicate).
+    multiplicity preserved exactly (one build row per join key).
     """
     p_chr, p_start, p_end = probe_keys
     i_chr, i_start, i_stop = interval_keys
@@ -146,7 +149,6 @@ def point_in_interval_flag(
     group_cols = ["__i_chr", "__bin"] + (["__i_key"] if extra_key else [])
     binned = (
         intervals.select(*sel)
-        .dropDuplicates()
         .withColumn(
             "__bin",
             F.explode(
@@ -157,10 +159,10 @@ def point_in_interval_flag(
             ),
         )
         # one build row per (chr, bin[, key]) → a plain LEFT join cannot
-        # duplicate probe rows; the per-bin interval arrays stay tiny
+        # duplicate probe rows; the per-bin interval sets stay tiny
         .groupBy(*group_cols)
         .agg(
-            F.collect_list(
+            F.collect_set(
                 F.struct(F.col("__i_start").alias("s"), F.col("__i_stop").alias("e"))
             ).alias("__ivs")
         )

@@ -11,7 +11,7 @@ Reference flow (VariantLoad3.java:479-589):
 
 Spark-first replacements:
 - the per-row cache probe becomes one left join on normalized keys;
-- the Oracle sequence becomes ``max(existing_id) + dense_rank`` over the
+- the Oracle sequence becomes ``max(id in use) + dense_rank`` over the
   new keys — deterministic and retry-safe (SURVEY.md §4.3), unlike
   ``monotonically_increasing_id`` which shifts with partitioning.
 """
@@ -47,13 +47,18 @@ def upsert_variants(
     id_col: str = "rgd_id",
     distributed_ranking: bool = False,
     stage_join: bool = False,
+    id_space: DataFrame | None = None,
 ) -> DataFrame:
     """Assign ids to incoming rows: reuse on key match, allocate otherwise.
 
     Returns ``incoming`` + ``rgd_id`` + boolean ``is_new``. Id allocation
     is deterministic: new distinct keys are ranked (dense_rank over the
-    normalized key) and offset by max(existing id). Existing side only
-    needs (key, id) — project before calling for a lean broadcast/shuffle.
+    normalized key) and offset by max(id) of ``id_space`` — every id in
+    use, the reference's one global sequence (VariantLoad3.java:550).
+    It defaults to ``existing``; pass the whole id table when
+    ``existing`` is a slice of it (one assembly's variants), or new ids
+    restart inside ids the other slices hold. Existing side only needs
+    (key, id) — project before calling for a lean broadcast/shuffle.
 
     ``distributed_ranking=False`` (default, right at batch scale): ONE
     window pass; all new keys rank in a single window partition — one
@@ -82,7 +87,8 @@ def upsert_variants(
 
     joined = inc.join(ex, on=nk, how="left")
 
-    max_id = existing.select(F.coalesce(F.max(id_col), F.lit(0)).alias("m"))
+    ids = existing if id_space is None else id_space
+    max_id = ids.select(F.coalesce(F.max(id_col), F.lit(0)).alias("m"))
     is_new = F.col("__existing_id").isNull()
 
     if distributed_ranking and len(nk) > 1:
@@ -153,5 +159,7 @@ def anti_insert(
 
     Replaces the reference's ``INSERT ... WHERE NOT EXISTS`` and the
     per-chromosome preload of VariantTranscriptBatch.java:69-97.
+    Duplicate keys in ``existing`` do not change an anti join's result,
+    so the right side is not deduplicated (that would be a shuffle).
     """
-    return new_rows.join(existing.select(*key).dropDuplicates(), on=key, how="left_anti")
+    return new_rows.join(existing.select(*key), on=key, how="left_anti")

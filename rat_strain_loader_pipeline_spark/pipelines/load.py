@@ -291,12 +291,16 @@ def load_variants(
     existing_map_data: DataFrame,
     existing_sample_detail: DataFrame,
     distributed_ranking: bool = False,
+    id_space: DataFrame | None = None,
 ) -> LoadResult:
     """The saveVariants upsert (VariantLoad3.java:479-589) as joins.
 
     ``existing_variant`` needs (rgd_id + natural key via map join) — pass
     the store's variant⋈variant_map_data projection; empty DataFrames with
-    the right schema are fine for a fresh store.
+    the right schema are fine for a fresh store. ``id_space`` (rgd_id) is
+    every id in use — the whole ``variant`` table when
+    ``existing_variant`` holds one assembly only; new ids start above its
+    maximum (default: ``existing_variant``'s).
 
     ``distributed_ranking=True`` switches id allocation to the
     per-chromosome two-level ranking (identical ids, parallel sort) —
@@ -316,7 +320,7 @@ def load_variants(
     # counter reconciliation (VariantLoad3.java:154-168) on the stage
     # write itself. Observed metrics cannot be distinct aggregates, so the
     # new-variant count is the span of the new ids: upsert_variants
-    # allocates them as max(existing) + dense_rank on both ranking paths,
+    # allocates them as max(id_space) + dense_rank on both ranking paths,
     # so they are contiguous, one id per distinct new key.
     new_id = F.when(F.col("is_new"), F.col("rgd_id"))
     upserted, obs = with_counters(
@@ -326,6 +330,7 @@ def load_variants(
             key=NATURAL_KEY,
             distributed_ranking=distributed_ranking,
             stage_join=distributed_ranking,
+            id_space=id_space,
         ),
         "load-counters",
         rows_in=F.count(F.lit(1)),

@@ -93,16 +93,23 @@ def dna_chunks(intervals: DataFrame, blocks: DataFrame, block_size: int = 100_00
     substring [start, stop] per interval row from a ``fasta_blocks``
     table, without broadcasting whole chromosomes.
 
-    ``intervals``: (chunk_id long, chr string, start long, stop long).
-    Returns (chunk_id, chr, start, stop, chunk string) with the same
-    clamping semantics as ``get_dna_chunk`` (unknown chr / empty overlap
-    → '' — rows are preserved, not dropped).
+    ``intervals``: (chunk_id long, chr string, start long, stop long),
+    plus any further columns, which ride through unchanged; ``chunk_id``
+    must be unique (the pieces reassemble per id).
+    Returns every column of ``intervals`` (``chunk_id`` first) plus
+    ``chunk string``, with the same clamping semantics as
+    ``get_dna_chunk`` (unknown chr / empty overlap / stop < start → '' —
+    rows are preserved, not dropped).
 
     Scale shape: the interval side explodes to one row per OVERLAPPED
     block (variant windows ≪ block_size ⇒ explode factor ~1), then an
     **equi-join** on (chr, block_id) — shuffle-partitionable on both
-    sides, no range predicate, no broadcast of the genome — followed by
-    a groupBy(chunk_id) reassembly ordered by block_start.
+    sides, no range predicate — planned by size: a probe under the
+    broadcast threshold (transcript spans, a few narrow columns a row)
+    is broadcast and the genome blocks stream through the join; a
+    genome over the threshold is never the broadcast side. Then a
+    groupBy(chunk_id) reassembles the pieces ordered by block_start,
+    and ``intervals LEFT JOIN pieces`` keeps empty spans.
     """
     iv = intervals.select(
         "chunk_id",
@@ -136,8 +143,6 @@ def dna_chunks(intervals: DataFrame, blocks: DataFrame, block_size: int = 100_00
             "",
         ).alias("chunk")
     )
-    return (
-        intervals.select("chunk_id", "chr", "start", "stop")
-        .join(pieces, "chunk_id", "left")
-        .withColumn("chunk", F.coalesce(F.col("chunk"), F.lit("")))
+    return intervals.join(pieces, "chunk_id", "left").withColumn(
+        "chunk", F.coalesce(F.col("chunk"), F.lit(""))
     )

@@ -5,15 +5,20 @@ driver testdata: ``events.ts`` is TIMESTAMP(NANOS), which Spark's
 vectorized parquet reader rejects by default. We flip the session conf
 ``spark.sql.legacy.parquet.nanosAsLong`` and convert nanos → micros
 timestamp ourselves, so callers always see a proper TimestampType.
+
+``read_parquet_footer`` reads an outside parquet table (the CLI's
+``--dims`` root) with the schema of its own footer, read on the driver,
+instead of the inference job ``spark.read.parquet`` runs.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 # Tables whose single-file scan is worth spreading (see read_table).
 _SPREAD_MIN_BYTES = 512 * 1024
@@ -72,3 +77,52 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # (off-by-one µs vs DuckDB's exact truncation).
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+def read_parquet_footer(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Non-merging inference lists the table's leaf files (skipping every
+    file or directory name ``HadoopFSUtils.shouldFilterOutPathName``
+    hides, which keeps summary files), sorts them by path, and converts
+    one footer with ``ParquetFileFormat.readSchemaFromFooter`` inside a
+    Spark job: the ``_common_metadata`` summary if there is one, else
+    ``_metadata``, else the first data file. This picks the same file from the same
+    listing and runs the same conversion on the driver, then reads with
+    the result: a missing or retyped column surfaces exactly as it does
+    under inference, and partition columns are still discovered from
+    the directory names. A path with no file falls back to the
+    inferring read, which raises its own error."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    hidden = jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
+    fs = jpath.getFileSystem(conf)
+    leaves = []
+    if fs.exists(jpath):
+        root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
+        listed = fs.listFiles(jpath, True)
+        while listed.hasNext():
+            leaf = listed.next().getPath()
+            name = leaf.toString()
+            if not any(hidden(part) for part in name[len(root):].split("/") if part):
+                leaves.append((name, leaf.getName(), leaf))
+    if not leaves:
+        return spark.read.parquet(path)
+    leaves.sort(key=lambda leaf: leaf[0])
+    summaries = ("_common_metadata", "_metadata")
+    chosen = next(
+        (leaf for name in summaries for leaf in leaves if leaf[1] == name),
+        next(leaf for leaf in leaves if leaf[1] not in summaries),
+    )
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        chosen[2],
+        jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            conf, chosen[2],
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        ),
+    )
+    converter = parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))).parquet(path)

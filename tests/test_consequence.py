@@ -293,3 +293,215 @@ def test_blocks_path_equals_broadcast_path(spark):
         ).collect()
     )
     assert via_blocks == via_broadcast
+
+
+def _gene_model(spark, features_rows):
+    genes = spark.createDataFrame(
+        [(100, "1", 4, 24, "+", "ACTIVE", 360), (101, "1", 4, 24, "-", "ACTIVE", 360),
+         (102, "9", 1, 50, "+", "ACTIVE", 360), (103, "1", 16, 60, "+", "ACTIVE", 360)],
+        "gene_rgd_id int, chromosome string, start_pos long, stop_pos long, "
+        "strand string, object_status string, map_key int",
+    )
+    transcripts = spark.createDataFrame(
+        [(200, 100, "N"), (201, 101, "N"), (202, 102, "N"), (203, 103, "N")],
+        "transcript_rgd_id int, gene_rgd_id int, is_non_coding_ind string",
+    )
+    features = spark.createDataFrame(
+        features_rows,
+        "transcript_rgd_id int, object_name string, strand string, "
+        "chromosome string, start_pos long, stop_pos long, map_key int",
+    )
+    return genes, transcripts, features
+
+
+# 200/201: the fixture transcript on both strands; 202: on a chromosome
+# the FASTA lacks; 203: exons running past the chromosome end (33 bp)
+_EDGE_FEATURES = [
+    row
+    for tid, strand in ((200, "+"), (201, "-"))
+    for row in (
+        (tid, "EXONS", strand, "1", 4, 12, 360),
+        (tid, "EXONS", strand, "1", 16, 24, 360),
+        (tid, "5UTRS", strand, "1", 4, 6, 360),
+        (tid, "3UTRS", strand, "1", 22, 24, 360),
+    )
+] + [
+    (202, "EXONS", "+", "9", 1, 30, 360),
+    (203, "EXONS", "+", "1", 16, 27, 360),
+    (203, "EXONS", "+", "1", 28, 60, 360),
+]
+
+
+def test_span_view_and_dna_chunks_edges_match_broadcast_path(spark):
+    """``dna_chunks`` + ``_SpanSeq`` read exactly what the broadcast dict
+    reads: spans past the chromosome end, a chromosome missing from the
+    FASTA, stop < start and start < 1; extra interval columns ride
+    through unchanged. End to end, the blocks path equals the broadcast
+    path on the same edges, with and without a span flank."""
+    from rat_strain_loader_pipeline_spark.operators.consequence import (
+        _SpanSeq,
+        variant_transcript_consequences,
+        variant_transcript_consequences_blocks,
+    )
+    from rat_strain_loader_pipeline_spark.sources.fasta import (
+        dna_chunks,
+        fasta_blocks,
+        fasta_from_dict,
+        get_dna_chunk,
+    )
+
+    blocks = fasta_blocks(fasta_from_dict(spark, SEQS), block_size=8)
+    cases = [
+        (1, "1", 4, 24),      # inside
+        (2, "1", 20, 60),     # runs past the end (33)
+        (3, "1", 40, 60),     # wholly past the end
+        (4, "9", 1, 10),      # chromosome missing from the FASTA
+        (5, "1", 20, 10),     # stop < start
+        (6, "1", -5, 10),     # start < 1
+    ]
+    iv = spark.createDataFrame(
+        [(cid, c, s, e, f"t{cid}", [cid, -cid]) for cid, c, s, e in cases],
+        "chunk_id long, chr string, start long, stop long, tag string, xs array<int>",
+    )
+    out = dna_chunks(iv, blocks, block_size=8)
+    assert out.columns == iv.columns + ["chunk"]
+    got = {r["chunk_id"]: r for r in out.collect()}
+    assert len(got) == len(cases)
+    for cid, chrom, start, stop in cases:
+        r = got[cid]
+        assert (r["tag"], r["xs"]) == (f"t{cid}", [cid, -cid])
+        assert r["chunk"] == get_dna_chunk(SEQS, chrom, start, stop), cid
+        span = {chrom: _SpanSeq(max(start, 1), r["chunk"])}
+        for a in range(start, stop + 1):
+            for b in range(a - 1, stop + 1):
+                assert get_dna_chunk(span, chrom, a, b) == get_dna_chunk(
+                    SEQS, chrom, a, b
+                ), (cid, a, b)
+
+    variants = spark.createDataFrame(
+        [
+            (1, "1", 8, 9, "A", "G"),
+            (2, "1", 17, 18, "T", "A"),
+            (3, "1", 30, 31, "G", "C"),    # transcript 203, near the end
+            (4, "9", 5, 6, "A", "G"),      # chromosome the FASTA lacks
+            (5, "1", 8, 9, None, "GG"),
+        ],
+        "rgd_id long, chromosome string, start_pos long, end_pos long, "
+        "ref_nuc string, var_nuc string",
+    )
+    genes, transcripts, features = _gene_model(spark, _EDGE_FEATURES)
+    fb = spark.sparkContext.broadcast(SEQS)
+    via_broadcast = sorted(
+        map(tuple, variant_transcript_consequences(
+            variants, genes, transcripts, features, fb, 360
+        ).collect()),
+        key=repr,
+    )
+    assert {r[1] for r in via_broadcast} == {200, 201, 202, 203}
+    for flank in (0, 50):
+        via_blocks = sorted(
+            map(tuple, variant_transcript_consequences_blocks(
+                variants, genes, transcripts, features, blocks, 360,
+                block_size=8, span_flank=flank,
+            ).collect()),
+            key=repr,
+        )
+        assert via_blocks == via_broadcast, flank
+
+
+def _scan_paths(plan, path=()):
+    """Yield (leaf node name, path) for every leaf of an executed plan,
+    descending through AQE wrappers and query stages. ``path`` starts
+    with the nearest join above the leaf as (join node, build side, the
+    join child the leaf sits in), followed by one entry per exchange
+    between that join and the leaf."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _scan_paths(plan.executedPlan(), path)
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _scan_paths(plan.plan(), path)
+        return
+    children = plan.children()
+    n = children.size()
+    if n == 0:
+        yield plan.nodeName(), path
+        return
+    for i in range(n):
+        if "Join" in name:
+            step = ((name, str(plan.buildSide()) if name.startswith("Broadcast") else None, i),)
+            child_path = step
+        elif name in ("BroadcastExchangeExec", "ShuffleExchangeExec"):
+            child_path = path + ((name, None, None),)
+        else:
+            child_path = path
+        yield from _scan_paths(children.apply(i), child_path)
+
+
+@pytest.mark.parametrize("probe_under_threshold", [True, False])
+def test_blocks_path_never_broadcasts_a_genome_over_the_threshold(
+    spark, tmp_path, monkeypatch, probe_under_threshold
+):
+    """In the executed plan of post-processing's ``postprocess-vt`` stage,
+    a genome over the broadcast threshold is never the broadcast side of
+    the blocks-probe join. With the features read from parquet, as the
+    CLI's ``--dims`` reads them, and the transcript-sized probe under the
+    threshold, the probe is broadcast and the FASTA scan feeds the join
+    directly, with no exchange of either kind between them."""
+    from rat_strain_loader_pipeline_spark import staging
+    from rat_strain_loader_pipeline_spark.pipelines.postprocess import (
+        postprocess_variants,
+    )
+    from rat_strain_loader_pipeline_spark.sources.fasta import (
+        fasta_blocks,
+        read_fasta,
+    )
+
+    staged = {}
+    stage = staging.stage_to_parquet
+
+    def capture(df, name, *args, **kwargs):
+        staged[name] = df
+        return stage(df, name, *args, **kwargs)
+
+    monkeypatch.setattr(staging, "stage_to_parquet", capture)
+    # a filler chromosome makes the genome ~20 KB, several times the
+    # probe's size estimate
+    fasta = tmp_path / "g.fa"
+    fasta.write_text(
+        "".join(f">{c}\n{s}\n" for c, s in {**SEQS, "pad": "ACGT" * 5_000}.items())
+    )
+    variants = spark.createDataFrame(
+        [(1, "1", 8, 9, "A", "G"), (2, "1", 30, 31, "G", "C")],
+        "rgd_id long, chromosome string, start_pos long, end_pos long, "
+        "ref_nuc string, var_nuc string",
+    )
+    genes, transcripts, features = _gene_model(spark, _EDGE_FEATURES)
+    features.write.parquet(str(tmp_path / "features.parquet"))
+    features = spark.read.parquet(str(tmp_path / "features.parquet"))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    previous = spark.conf.get(key)
+    genome_bytes = fasta.stat().st_size
+    spark.conf.set(key, str(genome_bytes - 1 if probe_under_threshold else 64))
+    try:
+        postprocess_variants(
+            variants, genes, transcripts, features, map_key=360,
+            fasta_blocks=fasta_blocks(read_fasta(spark, str(fasta)), block_size=8),
+            block_size=8,
+        ).variant_transcript.collect()
+        vt = staged["postprocess-vt"]
+        vt.collect()
+        plan = vt._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, previous)
+
+    scans = [path for node, path in _scan_paths(plan) if node.startswith("Scan text")]
+    assert scans
+    for path in scans:
+        (join, build, side), *exchanges = path
+        assert ("BroadcastExchangeExec", None, None) not in exchanges, path
+        if probe_under_threshold:
+            assert not exchanges, path
+            assert join == "BroadcastHashJoinExec", path
+            assert build == ("BuildLeft" if side == 1 else "BuildRight"), path

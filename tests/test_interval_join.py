@@ -77,3 +77,53 @@ def test_point_in_interval_flag_genic_status(spark):
     assert got[("1", 5000)] is False
     assert got[("2", 100)] is True
     assert len(got) == 5  # probe multiplicity preserved
+
+
+def test_point_in_interval_flag_matches_brute_force_with_one_shuffle(spark):
+    """The flag equals a brute-force overlap check on duplicate
+    intervals, intervals spanning several bins, an ``extra_key`` and null
+    bounds on either side; the interval side is shuffled once (explode,
+    then one grouping with ``collect_set``)."""
+    from tests.test_plans import _plan
+
+    bin_size = 100
+    intervals = [
+        # (chr, start, stop, key)
+        ("1", 150, 180, 7),
+        ("1", 150, 180, 7),      # exact duplicate
+        ("1", 150, 180, 8),      # same span, other key
+        ("1", 90, 420, 7),       # spans five bins
+        ("2", 10, 20, 7),
+        ("2", None, 50, 7),      # null bound never flags
+        ("2", 60, None, 8),
+        (None, 1, 1000, 7),      # null chromosome never flags
+    ]
+    probes = [
+        ("1", 155, 156, 7), ("1", 155, 156, 8), ("1", 155, 156, 9),
+        ("1", 181, 182, 8), ("1", 399, 401, 7), ("1", 421, 425, 7),
+        ("1", 85, 90, 7), ("1", 99, 101, 8), ("2", 15, 15, 7), ("2", 30, 40, 7),
+        ("2", 70, 80, 8), ("3", 10, 20, 7), ("1", None, 160, 7), (None, 155, 156, 7),
+    ]
+    iv = spark.createDataFrame(
+        intervals, "chromosome string, start_pos long, stop_pos long, k int"
+    )
+    probe = spark.createDataFrame(
+        probes, "chromosome string, start_pos long, end_pos long, k int"
+    )
+
+    def brute(p, use_key):
+        pc, ps, pe, pk = p
+        return any(
+            pc is not None and pc == c and ps is not None and s is not None
+            and e is not None and ps <= e and pe >= s and (not use_key or pk == k)
+            for c, s, e, k in intervals
+        )
+
+    for use_key in (False, True):
+        out = point_in_interval_flag(
+            probe, iv, "hit", extra_key="k" if use_key else None, bin_size=bin_size
+        )
+        assert _plan(out, "simple").count("Exchange hashpartitioning") == 1
+        got = sorted(((tuple(r[:4]), r["hit"]) for r in out.collect()), key=repr)
+        want = sorted(((p, brute(p, use_key)) for p in probes), key=repr)
+        assert got == want, use_key

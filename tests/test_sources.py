@@ -314,3 +314,73 @@ def test_schema_evolution_merge_read_backfills_nulls(spark, tmp_path):
     merged = spark.read.option("mergeSchema", "true").parquet(p1, p2)
     rows = {r["id"]: (r["x"], r["extra"]) for r in merged.collect()}
     assert rows == {1: ("a", None), 2: ("b", 9)}
+
+
+def test_parquet_footer_read_equals_inference_and_runs_no_job(spark, tmp_path, count_jobs):
+    """``read_parquet_footer`` (the CLI's ``--dims`` read) gives the schema
+    and rows of the inferring ``spark.read.parquet`` without its job: for a
+    pyarrow-written single file, a Spark-written partitioned directory
+    with decimal, timestamp, array and field-metadata columns, a
+    directory whose part files differ in schema (inference takes the
+    first by path), and one with a ``_common_metadata`` summary whose
+    schema the part file lacks a column of (inference takes the summary)."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rat_strain_loader_pipeline_spark.sources.tables import read_parquet_footer
+
+    single = str(tmp_path / "genes.parquet")
+    pq.write_table(pa.table({
+        "gene_rgd_id": pa.array([1, 2], pa.int32()),
+        "chromosome": ["1", "X"],
+        "start_pos": pa.array([10, 20], pa.int64()),
+        "strand": ["+", None],
+    }), single)
+
+    parted = str(tmp_path / "features.parquet")
+    spark.createDataFrame(
+        [
+            (1, decimal.Decimal("1.25"), datetime.datetime(2024, 1, 2, 3, 4, 5), [1, 2], "01"),
+            (2, None, None, None, "X"),
+            (3, decimal.Decimal("-7.50"), datetime.datetime(2023, 5, 6), [], "01"),
+        ],
+        "id int, score decimal(9,2), ts timestamp, ids array<int>, chromosome string",
+    ).withColumn(
+        "id", F.col("id").alias("id", metadata={"comment": "feature id"})
+    ).repartition(2).write.partitionBy("chromosome").parquet(parted)
+
+    differing = tmp_path / "transcripts.parquet"
+    differing.mkdir()
+    pq.write_table(pa.table({"id": [3], "name": ["c"], "score": [1.5]}),
+                   str(differing / "part-1.parquet"))
+    pq.write_table(pa.table({"id": [1, 2], "name": ["a", "b"]}),
+                   str(differing / "part-0.parquet"))
+
+    summarized = tmp_path / "strains.parquet"
+    summarized.mkdir()
+    # the data file sorts before the summary, so only the summary
+    # preference picks the summary
+    pq.write_table(pa.table({"id": [1, 2], "name": ["a", None]}),
+                   str(summarized / "00000.parquet"))
+    pq.write_metadata(pa.schema([("id", pa.int64()), ("name", pa.string()),
+                                 ("origin", pa.string())]),
+                      str(summarized / "_common_metadata"))
+
+    paths = (single, parted, str(differing), str(summarized))
+    widths = []
+    for path in paths:
+        inferred = spark.read.parquet(path)
+        widths.append(len(inferred.columns))
+        read, jobs = count_jobs(read_parquet_footer, spark, path)
+        assert jobs == 0
+        assert read.schema.json() == inferred.schema.json()
+        cols = inferred.columns
+        assert sorted(map(tuple, read.select(*cols).collect()), key=repr) == sorted(
+            map(tuple, inferred.collect()), key=repr
+        )
+    # the two file choices the cases above pin: the first part file by
+    # path, and the summary over the data file
+    assert widths[2:] == [2, 3]
