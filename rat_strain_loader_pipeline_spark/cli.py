@@ -105,16 +105,16 @@ def vcf8_converter2(argv):
     p.add_argument("--processVariantsSameAsRef", action="store_true")
     a = p.parse_args(argv)
     from rat_strain_loader_pipeline_spark.pipelines.sideloaders import vcf8_to_cf2
-    from rat_strain_loader_pipeline_spark.sources.cf2 import read_cf2, write_cf2
+    from rat_strain_loader_pipeline_spark.sources.cf2 import write_cf2
 
     spark = _spark("vcf8-convert")
     out = None
     for f in a.vcfFile:
         df = vcf8_to_cf2(spark, f, process_variants_same_as_ref=a.processVariantsSameAsRef)
         out = df if out is None else out.unionByName(df)
+    out, rows = _counted(out, "cf2-rows")
     write_cf2(out, a.outFile, compression="none")
-    n = read_cf2(spark, a.outFile).count()
-    print(f"rows={n} outFile={a.outFile}")
+    print(f"rows={rows.get['n']} outFile={a.outFile}")
 
 
 # ---------------------------------------------------------------- load cycle
@@ -135,10 +135,9 @@ def variant_load3(argv):
     from functools import reduce
 
     from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
 
     from rat_strain_loader_pipeline_spark.pipelines.load import (
-        derive_variants_multi, load_variants,
+        derive_variants_multi, load_variants, tag_sample,
     )
     from rat_strain_loader_pipeline_spark.schemas import (
         VARIANT_MAP_DATA_SCHEMA, VARIANT_SAMPLE_DETAIL_SCHEMA, VARIANT_SCHEMA,
@@ -148,19 +147,14 @@ def variant_load3(argv):
 
     spark = _spark("variant-load3")
     genes = _dims(spark, a.dims, "genes") if a.dims else None
-    # every -s/-i pair derives in ONE staged pass: the lazy CSV reads are
-    # tagged with their sample id and unioned, and gender/map_key come
-    # from a samples dimension (one row per id, or a repeated -s id would
-    # duplicate its rows in the broadcast join)
+    # every -s/-i pair derives in ONE staged pass: each lazy CSV read is
+    # tagged with its sample id, gender and map key as literals, and the
+    # tagged reads are unioned
     cf2 = reduce(DataFrame.unionByName, (
-        read_cf2(spark, path).select("*", F.lit(sid).alias("sample_id"))
+        tag_sample(read_cf2(spark, path), sid, a.gender, a.mapKey)
         for sid, path in zip(a.sampleId, a.inputFile)
     ))
-    samples = spark.createDataFrame(
-        [(sid, a.gender, a.mapKey) for sid in dict.fromkeys(a.sampleId)],
-        "sample_id int, gender string, map_key int",
-    )
-    derived = derive_variants_multi(cf2, samples, genes=genes)
+    derived = derive_variants_multi(cf2, genes=genes)
     v = _store_or_empty(spark, a.store, "variant", VARIANT_SCHEMA)
     # positions only collide within ONE assembly: probe THIS map_key's
     # map data, or a same-key row from another assembly suppresses the
@@ -329,9 +323,9 @@ def polyphen_loader(argv):
     raw = spark.read.text(a.resultsDir).withColumnRenamed("value", "line")
     results = parse_polyphen_results(raw)
     info = read_table(spark, a.store, "polyphen_info")
-    out = load_polyphen_results(results, info)
+    out, rows = _counted(load_polyphen_results(results, info), "polyphen-rows")
     write_table(out, a.store, "polyphen")
-    print(f"polyphen_rows={read_table(spark, a.store, 'polyphen').count()}")
+    print(f"polyphen_rows={rows.get['n']}")
 
 
 # -------------------------------------------------------------------- fixups
@@ -419,9 +413,11 @@ def _vcf_export(argv, prog, table):
     src = read_table(spark, a.store, table, map_key=a.mapKey)
     if a.source is not None and "source" in src.columns:
         src = src.filter(F.col("source") == a.source)
-    lines = vcf_output_lines(src)
-    _write_lines(lines.withColumnRenamed("line", "value"), a.outputFile)
-    print(f"lines={spark.read.text(a.outputFile).count()} outputFile={a.outputFile}")
+    lines, rows = _counted(
+        vcf_output_lines(src).withColumnRenamed("line", "value"), "vcf-lines"
+    )
+    _write_lines(lines, a.outputFile)
+    print(f"lines={rows.get['n']} outputFile={a.outputFile}")
 
 
 @tool("ClinVar2Vcf")
@@ -452,10 +448,9 @@ def conservation_score(argv):
     from rat_strain_loader_pipeline_spark.store import write_table
 
     spark = _spark("conservation")
-    df = load_conservation(spark, a.fileName)
+    df, rows = _counted(load_conservation(spark, a.fileName), "conservation-rows")
     write_table(df, a.store, a.tableName)
-    n = spark.read.parquet(f"{a.store.rstrip('/')}/{a.tableName}").count()
-    print(f"rows={n} table={a.tableName}")
+    print(f"rows={rows.get['n']} table={a.tableName}")
 
 
 @tool("VariantRatLoaderFromDb")
@@ -481,9 +476,9 @@ def variant_rat_loader_from_db(argv):
         upper_bound=a.upperBound,
         num_partitions=a.numPartitions,
     )
-    df = spark.read.format("jdbc").options(**opts).load()
+    df, rows = _counted(spark.read.format("jdbc").options(**opts).load(), "db-rows")
     df.write.mode("overwrite").parquet(a.outDir)
-    print(f"rows={spark.read.parquet(a.outDir).count()} outDir={a.outDir}")
+    print(f"rows={rows.get['n']} outDir={a.outDir}")
 
 
 def usage() -> None:

@@ -47,11 +47,6 @@ IUPAC_EXPANSION: dict[str, str] = {
 }
 
 
-def translate_codon_str(codon: str) -> str:
-    """Python-side single-codon translation (consequence engine hot path)."""
-    return CODON_TABLE.get(codon.upper(), "X")
-
-
 def translate_dna_str(dna: str) -> str:
     """Translate a DNA string to AA string (truncating trailing partial codon)."""
     n = len(dna) - len(dna) % 3

@@ -307,17 +307,6 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(normalized)
 
 
-def ngrams(text: Column, n: int = 3) -> Column:
-    """Word n-gram array ('_'-joined shingles) for Jaccard/minhash."""
-    toks = tokens(F.lower(text))
-    count = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(count - n, F.lit(0)))
-    return F.when(
-        count >= n,
-        F.transform(idx, lambda i: F.concat_ws("_", F.slice(toks, i + 1, n))),
-    ).otherwise(F.array(F.concat_ws("_", toks)))
-
-
 def char_entropy(docs, text_col: str = "text", id_col: str = "doc_id"):
     """Per-document Shannon character entropy — the perplexity-proxy
     quality signal (gibberish and key-mash text scores far from natural

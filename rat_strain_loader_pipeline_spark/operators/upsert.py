@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 NATURAL_KEY = ["chromosome", "start_pos", "end_pos", "ref_nuc", "var_nuc", "variant_type"]
 # String members of the key that compare case-insensitively (J4).
@@ -48,6 +47,7 @@ def upsert_variants(
     distributed_ranking: bool = False,
     stage_join: bool = False,
     id_space: DataFrame | None = None,
+    mark_first: str | None = None,
 ) -> DataFrame:
     """Assign ids to incoming rows: reuse on key match, allocate otherwise.
 
@@ -59,6 +59,23 @@ def upsert_variants(
     ``existing`` is a slice of it (one assembly's variants), or new ids
     restart inside ids the other slices hold. Existing side only needs
     (key, id) — project before calling for a lean broadcast/shuffle.
+
+    The floor max(id) is a broadcast top-1 (non-null ids, descending,
+    ``limit(1)``), left-joined and coalesced to 0. An aggregate would
+    plan an ``Exchange`` that AQE runs as a job of its own before the
+    broadcast job; the top-1 keeps a local top row per partition and
+    merges them inside the one broadcast job, and on an empty
+    ``id_space`` Catalyst folds it away with no job at all.
+
+    ``mark_first`` (the load passes ``"sample_id"``) adds two booleans:
+    ``first_of_id``, true on exactly one row of each id, and
+    ``first_of_pair``, true on exactly one row of each (id,
+    ``mark_first``). They come out of the ranking's own window pass —
+    every window shares its partitioning and one sort, so the markers
+    cost no extra exchange or sort — and let one staged upsert feed the
+    per-id and per-pair inserts as plain filters (no ``dropDuplicates``
+    shuffle per insert). The marked row is the one with the smallest
+    ``mark_first`` (ties within a pair: any one of them).
 
     ``distributed_ranking=False`` (default, right at batch scale): ONE
     window pass; all new keys rank in a single window partition — one
@@ -88,7 +105,13 @@ def upsert_variants(
     joined = inc.join(ex, on=nk, how="left")
 
     ids = existing if id_space is None else id_space
-    max_id = ids.select(F.coalesce(F.max(id_col), F.lit(0)).alias("m"))
+    top_id = (
+        ids.select(F.col(id_col).alias("__m"))
+        .filter(F.col("__m").isNotNull())
+        .orderBy(F.col("__m").desc())
+        .limit(1)
+    )
+    floor = F.coalesce(F.col("__m"), F.lit(0))
     is_new = F.col("__existing_id").isNull()
 
     if distributed_ranking and len(nk) > 1:
@@ -112,43 +135,51 @@ def upsert_variants(
         )
         # per-group dense rank: new rows of each chromosome sort in their
         # own window partition — parallel across groups
-        w = Window.partitionBy(is_new, F.col("__existing_id"), F.col(head)).orderBy(*rest)
-        return (
-            joined.join(F.broadcast(offsets), on=head, how="left")
-            .crossJoin(F.broadcast(max_id))
-            .withColumn(
-                id_col,
-                F.when(~is_new, F.col("__existing_id"))
-                .otherwise(
-                    F.col("m") + F.coalesce(F.col("__off"), F.lit(0)) + F.dense_rank().over(w)
-                )
-                .cast("long"),
-            )
-            .withColumn("is_new", is_new)
-            .drop("m", "__off", "__existing_id", *nk)
-        )
+        partition, order = ["__new", "__existing_id", head], rest
+        joined = joined.join(F.broadcast(offsets), on=head, how="left")
+        floor = floor + F.coalesce(F.col("__off"), F.lit(0))
+    else:
+        # dense_rank over the normalized key of unmatched rows — ties (same
+        # key in the same batch) share a rank, so duplicates get the same
+        # new id without a distinct+join-back round trip (the reference
+        # dedups within a batch the same way, VariantLoad3.java:517-575).
+        # ONE pass: partitioning the window on (match flag, existing id)
+        # ranks the new keys without splitting the plan into two branches
+        # (a split means either recomputing the upstream join twice or a
+        # stage barrier). All NEW rows land in the single (true, null)
+        # window partition and get the global dense rank; matched rows
+        # scatter across tiny per-existing-id partitions, so only the new
+        # keys pay a real sort.
+        partition, order = ["__new", "__existing_id"], nk
 
-    # dense_rank over the normalized key of unmatched rows — ties (same
-    # key in the same batch) share a rank, so duplicates get the same new
-    # id without a distinct+join-back round trip (the reference dedups
-    # within a batch the same way, VariantLoad3.java:517-575). ONE pass:
-    # partitioning the window on (match flag, existing id) ranks the new
-    # keys without splitting the plan into two branches (a split means
-    # either recomputing the upstream join twice or a stage barrier).
-    # All NEW rows land in the single (true, null) window partition and
-    # get the global dense rank; matched rows scatter across tiny
-    # per-existing-id partitions, so only the new keys pay a real sort.
-    w = Window.partitionBy(is_new, F.col("__existing_id")).orderBy(*nk)
+    # matched rows take the id they matched: blanking their key makes each
+    # existing id one window partition whose rows are all peers. Every
+    # window partitions on the same columns (the match flag is one too: an
+    # expression would be aliased anew under each window, each alias
+    # needing an exchange of its own), so the windows share one exchange.
+    joined = joined.withColumns({"__new": is_new, **{c: F.when(is_new, F.col(c)) for c in nk}})
+    w_key = Window.partitionBy(*partition).orderBy(*order)
+    cols = {
+        id_col: F.when(~is_new, F.col("__existing_id"))
+        .otherwise(floor + F.dense_rank().over(w_key))
+        .cast("long"),
+        "is_new": F.col("__new"),
+    }
+    if mark_first is not None:
+        # rank() is the row_number of a peer group's first row, so a row
+        # is its group's first exactly where the two agree; ordering the
+        # row numbers by (key, mark_first) makes that first row the
+        # smallest mark_first of its id, and of its pair. This window is
+        # added first so that its sort also serves w_key: one sort in all.
+        w_row = Window.partitionBy(*partition).orderBy(*order, mark_first)
+        row = F.row_number().over(w_row)
+        joined = joined.withColumns({"__row": row, "__first_pair": row == F.rank().over(w_row)})
+        cols["first_of_id"] = F.col("__row") == F.rank().over(w_key)
+        cols["first_of_pair"] = F.col("__first_pair")
     return (
-        joined.crossJoin(F.broadcast(max_id))
-        .withColumn(
-            id_col,
-            F.when(~is_new, F.col("__existing_id"))
-            .otherwise(F.col("m") + F.dense_rank().over(w))
-            .cast("long"),
-        )
-        .withColumn("is_new", is_new)
-        .drop("m", "__existing_id", *nk)
+        joined.join(F.broadcast(top_id), how="left")
+        .withColumns(cols)
+        .drop("__m", "__off", "__existing_id", "__new", "__row", "__first_pair", *nk)
     )
 
 

@@ -12,10 +12,14 @@ Dataflow (VariantLoad3.java:178-365, saveVariants:479-589):
   → anti-join sample details (J5)
   → three store tables: variant / variant_map_data / variant_sample_detail
 
-One shuffle for the upsert join, one for the new-id ranking; everything
-else is map-side (dimension joins broadcast). Partition-by
-(map_key, chromosome) on write matches the reference's process-per-
-(sample, chr) parallelism unit.
+Two shuffles: the upsert join (folded away on an empty store) and the
+new-id ranking window. That window's one pass also marks the rows each
+of the three inserts keeps, so the inserts are filter+project scans of
+the staged upsert with no dedup shuffle of their own. Everything else is
+map-side: the id floor, the dimension tables and the stored sample
+details broadcast, and each sample's gender and map_key are literals of
+its read. Partition-by (map_key, chromosome) on write matches the
+reference's process-per-(sample, chr) parallelism unit.
 """
 
 from __future__ import annotations
@@ -50,6 +54,18 @@ class LoadResult:
     counters: dict[str, int]
 
 
+def tag_sample(cf2: DataFrame, sample_id: int, gender: str, map_key: int) -> DataFrame:
+    """``cf2`` with its sample's ``sample_id``, ``gender`` and ``map_key``
+    as literal columns: the tagged frame :func:`derive_variants_multi`
+    derives (the reference's per-process scalars, as columns)."""
+    return cf2.select(
+        "*",
+        F.lit(sample_id).cast("int").alias("sample_id"),
+        F.lit(gender).cast("string").alias("gender"),
+        F.lit(map_key).cast("int").alias("map_key"),
+    )
+
+
 def derive_variants(
     cf2: DataFrame,
     sample_id: int,
@@ -64,28 +80,16 @@ def derive_variants(
     genic_bin_size: int = 1_000_000,
 ) -> DataFrame:
     """All row-level derivations of processLine (VariantLoad3.java:222-365)
-    for ONE sample (scalar gender/map_key — the reference's per-process
-    configuration). The ``VariantLoad3`` tool derives all of its samples
-    at once through :func:`derive_variants_multi`.
-
-    Input: CF2_SCHEMA columns. Output adds: chromosome (renamed), start_pos,
-    end_pos, variant_type, total_depth (derived), quality_score, zygosity_*,
-    genic_status, sample_id, map_key, source, species_type_key.
-    """
-    pre = (
-        cf2.withColumn("sample_id", F.lit(sample_id))
-        .withColumn("__gender", F.lit(gender).cast("string"))
-        .withColumn("map_key", F.lit(map_key).cast("int"))
-    )
-    return _derive_common(
-        pre, genes, par_regions, chromosome, species_type_key, source,
-        stage_cache, genic_bin_size,
+    for ONE sample: :func:`derive_variants_multi` over ``cf2`` tagged
+    with the sample's scalars (:func:`tag_sample`)."""
+    return derive_variants_multi(
+        tag_sample(cf2, sample_id, gender, map_key), genes, par_regions,
+        chromosome, species_type_key, source, stage_cache, genic_bin_size,
     )
 
 
 def derive_variants_multi(
-    cf2_with_sample: DataFrame,
-    samples: DataFrame,
+    tagged: DataFrame,
     genes: DataFrame | None = None,
     par_regions: DataFrame | None = None,
     chromosome: str | None = None,
@@ -94,44 +98,24 @@ def derive_variants_multi(
     stage_cache: bool = True,
     genic_bin_size: int = 1_000_000,
 ) -> DataFrame:
-    """ALL samples in one job — the Spark-first replacement for the
-    reference's one-OS-process-per-(sample, chr) shell loop
-    (convert/LoadRn6Rn7Samples.java:88-105): gender and map_key come
-    from a broadcast ``samples`` dimension (sample_id, gender, map_key)
-    instead of per-process scalars, so a thousand samples derive in one
-    partitioned pass. Identical per-row semantics to
-    :func:`derive_variants` (property-tested).
+    """All row-level derivations of processLine (VariantLoad3.java:222-365)
+    for ANY number of samples in one pass — the Spark-first replacement
+    for the reference's one-OS-process-per-(sample, chr) shell loop
+    (convert/LoadRn6Rn7Samples.java:88-105). Every row carries its own
+    sample's ``gender`` and ``map_key``, so a thousand samples derive in
+    one partitioned pass with no per-sample plan and no dimension join.
 
     This is the ``VariantLoad3`` path (``cli.variant_load3``): every
-    ``-s/-i`` pair of a call derives here together, behind ONE stage
-    barrier whatever the strain count. ``samples`` must hold one row per
-    ``sample_id``; a repeated id duplicates that sample's rows.
+    ``-s/-i`` read is tagged (:func:`tag_sample`) and unioned, and the
+    union derives here behind ONE stage barrier whatever the strain
+    count. A repeated ``-s`` id is just more rows of that sample.
 
-    ``cf2_with_sample``: CF2_SCHEMA columns + ``sample_id``.
+    Input: CF2_SCHEMA columns + ``sample_id``, ``gender``, ``map_key``.
+    Output drops ``gender`` and adds: chromosome (renamed), start_pos,
+    end_pos, variant_type, total_depth (derived), quality_score,
+    zygosity_*, genic_status, source, species_type_key, var_freq.
     """
-    s = samples.select(
-        "sample_id",
-        F.col("gender").cast("string").alias("__gender"),
-        F.col("map_key").cast("int").alias("map_key"),
-    )
-    pre = cf2_with_sample.join(F.broadcast(s), "sample_id")
-    return _derive_common(
-        pre, genes, par_regions, chromosome, species_type_key, source,
-        stage_cache, genic_bin_size,
-    )
-
-
-def _derive_common(
-    df: DataFrame,
-    genes: DataFrame | None,
-    par_regions: DataFrame | None,
-    chromosome: str | None,
-    species_type_key: int,
-    source: str,
-    stage_cache: bool,
-    genic_bin_size: int,
-) -> DataFrame:
-    # df: CF2 columns + sample_id, __gender, map_key
+    df = tagged
     if chromosome is not None:  # F2 chromosome filter → partition pruning
         df = df.filter(F.col("chr") == chromosome)
 
@@ -229,7 +213,7 @@ def _derive_common(
     )
     pct = F.col("zygosity_percent_read")
     is_sex = F.upper(F.col("chromosome")).isin("X", "Y")
-    is_male = F.upper(F.coalesce(F.col("__gender"), F.lit(""))).isin("M", "P")
+    is_male = F.upper(F.coalesce(F.col("gender"), F.lit(""))).isin("M", "P")
     hemi = is_sex & is_male & ~F.col("in_par")
     df = df.withColumns(
         {
@@ -278,7 +262,7 @@ def _derive_common(
     ).drop("is_genic")
 
     return (
-        df.drop("__gender")
+        df.drop("gender")
         .withColumn("source", F.lit(source))
         .withColumn("species_type_key", F.lit(species_type_key))
         .withColumn("var_freq", F.col("allele_depth"))
@@ -311,18 +295,17 @@ def load_variants(
     it lands in a parquet stage barrier: measured ~15x faster than a
     columnar ``.cache()`` at sf0.1 (staging.py) and the honest cluster
     design — the reference lands every stage in staging tables too. The
-    run-log counters are observed on that stage write, so they are
+    upsert marks, in its ranking window pass, the first row of each id
+    and of each (id, sample_id); the staged marks make each insert a
+    filter+project scan of the stage, with no dedup shuffle of its own.
+    The run-log counters are observed on that stage write, so they are
     complete when this returns and cost no job of their own.
     """
     from rat_strain_loader_pipeline_spark.observe import with_counters
     from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
 
     # counter reconciliation (VariantLoad3.java:154-168) on the stage
-    # write itself. Observed metrics cannot be distinct aggregates, so the
-    # new-variant count is the span of the new ids: upsert_variants
-    # allocates them as max(id_space) + dense_rank on both ranking paths,
-    # so they are contiguous, one id per distinct new key.
-    new_id = F.when(F.col("is_new"), F.col("rgd_id"))
+    # write itself: one first_of_id row per distinct new key
     upserted, obs = with_counters(
         upsert_variants(
             derived,
@@ -331,44 +314,40 @@ def load_variants(
             distributed_ranking=distributed_ranking,
             stage_join=distributed_ranking,
             id_space=id_space,
+            mark_first="sample_id",
         ),
         "load-counters",
         rows_in=F.count(F.lit(1)),
         matched=F.sum((~F.col("is_new")).cast("long")),
-        new_min=F.min(new_id),
-        new_max=F.max(new_id),
+        new=F.sum((F.col("is_new") & F.col("first_of_id")).cast("long")),
     )
     with_ids = stage_to_parquet(upserted, "load-with-ids")
 
-    new_variant = (
-        with_ids.filter(F.col("is_new"))
-        .select(
-            "rgd_id",
-            F.upper("ref_nuc").alias("ref_nuc"),
-            "variant_type",
-            F.upper("var_nuc").alias("var_nuc"),
-            "rs_id",
-            F.lit(None).cast("string").alias("clinvar_id"),
-            "species_type_key",
-        )
-        .dropDuplicates(["rgd_id"])
+    # the three inserts are filter+project scans of the one stage: the
+    # upsert's window pass marked one row per new id and one per (id,
+    # sample), so no insert dedups again
+    new_rows = with_ids.filter(F.col("is_new") & F.col("first_of_id"))
+    new_variant = new_rows.select(
+        "rgd_id",
+        F.upper("ref_nuc").alias("ref_nuc"),
+        "variant_type",
+        F.upper("var_nuc").alias("var_nuc"),
+        "rs_id",
+        F.lit(None).cast("string").alias("clinvar_id"),
+        "species_type_key",
     )
-    new_map_data = (
-        with_ids.filter(F.col("is_new"))
-        .select(
-            "rgd_id", "chromosome", "start_pos", "end_pos",
-            "padding_base", "genic_status", "map_key",
-        )
-        .dropDuplicates(["rgd_id"])
+    new_map_data = new_rows.select(
+        "rgd_id", "chromosome", "start_pos", "end_pos",
+        "padding_base", "genic_status", "map_key",
     )
     # J5: only for (rgd_id, sample_id) pairs not already detailed
     sample_detail = anti_insert(
-        with_ids.select(
+        with_ids.filter(F.col("first_of_pair")).select(
             "rgd_id", "source", "sample_id", "total_depth", "var_freq",
             "zygosity_status", "zygosity_percent_read", "zygosity_poss_error",
             "zygosity_ref_allele", "zygosity_num_allele", "zygosity_in_pseudo",
             "quality_score",
-        ).dropDuplicates(["rgd_id", "sample_id"]),
+        ),
         existing_sample_detail,
         ["rgd_id", "sample_id"],
     )
@@ -376,9 +355,7 @@ def load_variants(
     crow = obs.get
     counters = {
         "rows_in": int(crow["rows_in"]),
-        "rows_new_variants": (
-            0 if crow["new_min"] is None else int(crow["new_max"] - crow["new_min"] + 1)
-        ),
+        "rows_new_variants": int(crow["new"] or 0),
         "rows_already_in_rgd": int(crow["matched"] or 0),
     }
     return LoadResult(new_variant, new_map_data, sample_detail, counters)

@@ -43,11 +43,6 @@ def fasta_dict(df: DataFrame) -> dict[str, str]:
     return {r["chr"]: r["seq"] for r in df.collect()}
 
 
-def broadcast_fasta(spark: SparkSession, df: DataFrame):
-    """Broadcast the chromosome→sequence dict to executors."""
-    return spark.sparkContext.broadcast(fasta_dict(df))
-
-
 def fasta_from_dict(spark: SparkSession, seqs: dict[str, str]) -> DataFrame:
     return spark.createDataFrame(list(seqs.items()), schema=FASTA_SEQ_SCHEMA)
 

@@ -248,7 +248,3 @@ def _normalize_wig_chrom(chrom):
     c = F.regexp_replace(chrom, "^chr", "")
     c = F.when(c == "M", F.lit("MT")).otherwise(c)
     return F.when((F.length(c) > 2) | (c == ""), F.lit(None).cast("string")).otherwise(c)
-
-
-def conservation_from_rows(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, schema=CONSERVATION_SCHEMA)

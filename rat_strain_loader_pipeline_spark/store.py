@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from rat_strain_loader_pipeline_spark.schemas import (
     VARIANT_MAP_DATA_SCHEMA,
@@ -67,10 +67,10 @@ SCHEMAS: dict[str, StructType] = {
 # (chromosome=2 would come back as int while chromosome=X stays string);
 # normalize on read
 _PARTITION_TYPES = {
-    "chromosome": "string",
-    "chr": "string",
-    "map_key": "int",
-    "sample_id": "int",
+    "chromosome": StringType(),
+    "chr": StringType(),
+    "map_key": IntegerType(),
+    "sample_id": IntegerType(),
 }
 
 
@@ -157,6 +157,24 @@ def read_table(
     return df.withColumns(casts) if casts else df
 
 
+def _read_as_stored(spark: SparkSession, root: str, table: str) -> DataFrame:
+    """Every column the table's files hold, as their footer types them,
+    with the partition columns typed as declared (``SCHEMAS``, else
+    ``_PARTITION_TYPES``) instead of inferred from directory names — so
+    ``chromosome=01`` stays ``'01'``. The footer is read on the driver
+    (``read_parquet_footer``), so no inference job runs."""
+    from rat_strain_loader_pipeline_spark.sources.tables import read_parquet_footer
+
+    types = {**_PARTITION_TYPES, **{f.name: f.dataType for f in SCHEMAS.get(table, [])}}
+    parts = PARTITIONING.get(table, ())
+    stored = read_parquet_footer(spark, _path(root, table)).schema
+    schema = StructType([
+        StructField(f.name, types[f.name], f.nullable) if f.name in parts and f.name in types else f
+        for f in stored.fields
+    ])
+    return spark.read.schema(schema).parquet(_path(root, table))
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -233,7 +251,7 @@ def compact_table(
         return out
 
     before = len(_data_files(path))
-    df = spark.read.parquet(path)
+    df = _read_as_stored(spark, root, table)
     rows = df.count()
     parts = PARTITIONING.get(table, ())
     staged = path + f".compact-{uuid.uuid4().hex[:8]}"

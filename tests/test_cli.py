@@ -128,9 +128,9 @@ def test_cli_full_chain(spark, tmp_path, dims_root, capsys, count_jobs):
     ]
     assert line == "NP_001 2 Q R"
 
-    # job-count pin for the tool path (58 measured at 2, 4 and 8 cores):
-    # a change that adds Spark jobs to a tool call fails here
-    assert sum(jobs.values()) <= 58, jobs
+    # job-count pin for the tool path (48 measured with SPARK_GRAFT_CPUS
+    # 2, 4 and 8): a change that adds Spark jobs to a tool call fails here
+    assert sum(jobs.values()) <= 48, jobs
 
 
 def _store_rows(spark, store):
@@ -147,9 +147,9 @@ def _store_rows(spark, store):
 def test_variant_load3_pairs_derive_in_one_pass(spark, tmp_path, dims_root, capsys,
                                                count_jobs):
     """Several -s/-i pairs load the same store as a per-pair derive loop
-    + union, and the call runs as many Spark jobs as a one-pair call. The
-    repeated -s id pins the one-row-per-id samples dimension: a duplicate
-    row would double that id's rows in the derive join (rows_in)."""
+    + union, and the call runs as many Spark jobs as a one-pair call. A
+    repeated -s id is just more rows of that sample: its reads are tagged
+    with the same literals and counted once each (rows_in)."""
     from rat_strain_loader_pipeline_spark.pipelines.load import (
         derive_variants, load_variants,
     )
@@ -269,3 +269,80 @@ def test_variant_load3_new_ids_unique_across_assemblies(spark, tmp_path, capsys)
         .groupBy("map_key").agg(F.collect_list("rgd_id").alias("ids")).collect()
     }
     assert ids == {360: [1, 2, 3, 4], 70: [5, 6, 7, 8]}
+
+
+def test_appending_tools_print_only_the_rows_they_land(spark, tmp_path, capsys):
+    """ConservationScore and PolyphenLoader append to a store table; a
+    second call into the same store prints the rows that call landed,
+    not the table's total."""
+    from tests.test_polyphen import _result_line
+
+    store = str(tmp_path / "store")
+    wigs = [WIG, "fixedStep chrom=chr2 start=1 step=1\n0.1\n0.2\n0.3\n"]
+    for i, (wig, n) in enumerate(zip(wigs, (2, 3))):
+        path = tmp_path / f"c{i}.wig"
+        path.write_text(wig)
+        assert cli.main(["--tool", "ConservationScore", "--fileName", str(path),
+                         "--store", store]) == 0
+        assert capsys.readouterr().out.strip() == f"rows={n} table=conservation_score"
+    assert spark.read.parquet(f"{store}/conservation_score").count() == 5
+
+    spark.createDataFrame(
+        [(1, "L1", "NP_1", 5, "Q", "R", "+", 10), (2, "L2", "NP_2", 9, "K", "E", "+", 11),
+         (3, "L3", "NP_3", 12, "A", "V", "+", 12)],
+        "variant_rgd_id long, locus_name string, protein_acc_id string, pos int, "
+        "ref_aa string, var_aa string, strand string, transcript_rgd_id int",
+    ).write.parquet(f"{store}/polyphen_info")
+    batches = [[("NP_1", 5, "Q", "R")], [("NP_2", 9, "K", "E"), ("NP_3", 12, "A", "V")]]
+    for i, batch in enumerate(batches):
+        results = tmp_path / f"results{i}"
+        results.mkdir()
+        (results / "out.txt").write_text(
+            "".join(_result_line(*k, k[2], k[3], 0.9) + "\n" for k in batch)
+        )
+        assert cli.main(["--tool", "PolyphenLoader", "--resultsDir", str(results),
+                         "--store", store]) == 0
+        assert capsys.readouterr().out.strip() == f"polyphen_rows={len(batch)}"
+    assert spark.read.parquet(f"{store}/polyphen").count() == 3
+
+
+def test_writing_tools_count_the_rows_of_their_write(spark, tmp_path, capsys):
+    """Vcf8ColConverter2, the *2Vcf exporters and VariantRatLoaderFromDb
+    print the rows their write landed, observed on that write rather than
+    read back from the output."""
+    from tests.test_sideloaders_multimodal import VCF8
+
+    vcf = tmp_path / "v8.vcf"
+    vcf.write_text(VCF8)
+    cf2 = tmp_path / "cf2"
+    store = str(tmp_path / "store")
+    spark.createDataFrame(
+        [("1", 30, "rs3", "G", "A", None, None, None, 360),
+         ("1", 10, "rs1", "C", "T", "50", "PASS", ".", 360),
+         ("2", 5, None, "A", "G", None, None, None, 70)],
+        "chrom string, pos int, id string, ref string, alt string, qual string, "
+        "filter string, info string, map_key int",
+    ).write.parquet(f"{store}/clinvar_vcf")
+    url = f"jdbc:derby:memory:rat{tmp_path.name};create=true"
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "rgd_id int, name string") \
+        .write.jdbc(url, "variant", properties={"driver": driver})
+
+    calls = [
+        (["--tool", "Vcf8ColConverter2", "--vcfFile", str(vcf), "--outFile", str(cf2)],
+         lambda: spark.read.text(str(cf2)).count(), "rows={n} outFile=" + str(cf2)),
+        (["--tool", "ClinVar2Vcf", "--mapKey", "360", "--store", store,
+          "--outputFile", str(tmp_path / "cv")],
+         lambda: spark.read.text(str(tmp_path / "cv")).count(),
+         "lines={n} outputFile=" + str(tmp_path / "cv")),
+        (["--tool", "VariantRatLoaderFromDb", "--url", url, "--driver", driver,
+          "--outDir", str(tmp_path / "db")],
+         lambda: spark.read.parquet(str(tmp_path / "db")).count(),
+         "rows={n} outDir=" + str(tmp_path / "db")),
+    ]
+    for argv, written, expected in calls:
+        assert cli.main(argv) == 0
+        printed = capsys.readouterr().out.strip()
+        n = written()
+        assert n > 0 and printed == expected.format(n=n), argv[1]
+    assert n == 3

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rat_strain_loader_pipeline_spark.pipelines.convert import vcf_to_cf2
@@ -209,11 +210,13 @@ def test_num_alleles_fixup(spark):
 
 
 def test_derive_variants_multi_equals_per_sample(spark):
-    """The one-job multi-sample path must produce exactly the union of
-    per-sample runs — including gender-divergent hemizygous calls on X
-    and PAR handling from the per-sample map_key."""
+    """One pass over a union of tagged reads must produce exactly the
+    union of per-sample runs — including gender-divergent hemizygous
+    calls on X and PAR handling from each row's own map_key."""
     from rat_strain_loader_pipeline_spark.functions.zygosity import par_regions_df
-    from rat_strain_loader_pipeline_spark.pipelines.load import derive_variants_multi
+    from rat_strain_loader_pipeline_spark.pipelines.load import (
+        derive_variants_multi, tag_sample,
+    )
 
     rows = [
         # X-chromosome snv, 90%: M → probably hemizygous, F → possibly homozygous
@@ -237,13 +240,8 @@ def test_derive_variants_multi_equals_per_sample(spark):
         )
     expected = singles[0].unionByName(singles[1])
 
-    multi_cf2 = cf2.withColumn("sample_id", F.lit(7)).unionByName(
-        cf2.withColumn("sample_id", F.lit(8))
-    )
-    samples = spark.createDataFrame(
-        [(7, "M", 38), (8, "F", 360)], "sample_id int, gender string, map_key int"
-    )
-    got = derive_variants_multi(multi_cf2, samples, genes=genes, par_regions=par)
+    tagged = tag_sample(cf2, 7, "M", 38).unionByName(tag_sample(cf2, 8, "F", 360))
+    got = derive_variants_multi(tagged, genes=genes, par_regions=par)
 
     cols = sorted(expected.columns)
     assert sorted(got.columns) == cols
@@ -383,3 +381,154 @@ def test_load_counters_observed_on_the_stage_write(spark):
         assert again.counters == _old_load_counters(derived, stored, distributed)
         assert again.counters == {"rows_in": 9, "rows_new_variants": 0,
                                   "rows_already_in_rgd": 9}
+
+
+# ------------------------------- insert markers vs the old dropDuplicates
+
+_KEY_COLS = ("rgd_id long, chromosome string, start_pos long, end_pos long, "
+             "ref_nuc string, var_nuc string, variant_type string")
+
+
+def _call(chrom, pos, ref, var, depth=40, padding=None):
+    """One CF2 call whose allele depth makes it a 100% call (kept by F9)."""
+    counts = [depth if var is not None and n == var.upper() else 0 for n in "ACGT"]
+    return (chrom, pos, ref, var, None, *counts, depth, None, 0, depth, 1, depth, padding)
+
+
+def _marker_batch(spark):
+    """Three tagged reads, as ``VariantLoad3 -s 7 -i f1 -s 7 -i f2 -s 8
+    -i f3`` derives them: the same key twice within one sample (once
+    case-flipped, once with other depths), a repeated -s id across two
+    files, alleles that differ only in case, NULL ref and NULL var
+    indels, and keys the populated store below holds."""
+    from rat_strain_loader_pipeline_spark.pipelines.load import (
+        derive_variants_multi, tag_sample,
+    )
+
+    f1 = [_call("1", 100, "A", "C"), _call("1", 100, "a", "c"),
+          _call("1", 150, None, "TT", padding="G"), _call("1", 180, "A", None, padding="C"),
+          _call("2", 300, "C", "A"), _call("2", 400, "G", "T"),
+          _call("2", 400, "G", "T", depth=30)]
+    f2 = [_call("1", 100, "A", "C", depth=20), _call("2", 300, "C", "A")]
+    f3 = [_call("1", 100, "A", "C"), _call("1", 150, None, "tt", padding="G"),
+          _call("X", 10, "G", "A")]
+    tagged = [tag_sample(spark.createDataFrame(rows, schema=CF2_SCHEMA), sid, "F", 360)
+              for sid, rows in ((7, f1), (7, f2), (8, f3))]
+    return derive_variants_multi(tagged[0].unionByName(tagged[1]).unionByName(tagged[2]))
+
+
+def _marker_stores(spark):
+    """An empty store, and one that holds two ids for one key of the
+    batch (the smaller is reused), a NULL-var key, an unrelated higher
+    id (the floor) and a detail row the anti join must drop."""
+    empty = (spark.createDataFrame([], _KEY_COLS),
+             spark.createDataFrame([], "rgd_id long, sample_id int"))
+    held = (spark.createDataFrame(
+        [(555, "2", 300, 301, "C", "A", "snv"), (554, "2", 300, 301, "c", "a", "snv"),
+         (600, "1", 180, 181, "A", None, "del"), (700, "3", 5, 6, "G", "C", "snv")],
+        _KEY_COLS,
+    ), spark.createDataFrame([(554, 7), (600, 8)], "rgd_id long, sample_id int"))
+    return {"empty": empty, "held": held}
+
+
+def _old_inserts(derived, existing, existing_detail, distributed):
+    """The three insert frames as they were built before the markers: the
+    unmarked upsert, then one dropDuplicates per insert."""
+    from rat_strain_loader_pipeline_spark.operators.upsert import (
+        anti_insert, upsert_variants,
+    )
+    from rat_strain_loader_pipeline_spark.pipelines.load import NATURAL_KEY
+
+    with_ids = upsert_variants(derived, existing, key=NATURAL_KEY,
+                               distributed_ranking=distributed)
+    new = with_ids.filter(F.col("is_new"))
+    variant = new.select(
+        "rgd_id", F.upper("ref_nuc").alias("ref_nuc"), "variant_type",
+        F.upper("var_nuc").alias("var_nuc"), "rs_id",
+        F.lit(None).cast("string").alias("clinvar_id"), "species_type_key",
+    )
+    map_data = new.select("rgd_id", "chromosome", "start_pos", "end_pos",
+                          "padding_base", "genic_status", "map_key")
+    detail = with_ids.select(
+        "rgd_id", "source", "sample_id", "total_depth", "var_freq",
+        "zygosity_status", "zygosity_percent_read", "zygosity_poss_error",
+        "zygosity_ref_allele", "zygosity_num_allele", "zygosity_in_pseudo",
+        "quality_score",
+    )
+    detail = anti_insert(detail, existing_detail, ["rgd_id", "sample_id"])
+    return {
+        "variant": (variant.dropDuplicates(["rgd_id"]), variant, ["rgd_id"]),
+        "variant_map_data": (map_data.dropDuplicates(["rgd_id"]), map_data, ["rgd_id"]),
+        "variant_sample_detail": (detail.dropDuplicates(["rgd_id", "sample_id"]), detail,
+                                  ["rgd_id", "sample_id"]),
+    }
+
+
+
+@pytest.mark.parametrize("store", ["empty", "held"])
+@pytest.mark.parametrize("distributed", [False, True])
+def test_insert_markers_match_the_old_dedup(spark, store, distributed):
+    """Each insert built from the upsert's markers holds the rows the old
+    per-insert dropDuplicates kept: the same keys, one row per key, and
+    every row one of the rows dropDuplicates could have kept (it keeps an
+    arbitrary one where rows of a key differ, as the two depths of
+    (2, 400) in sample 7 do)."""
+    derived = _marker_batch(spark)
+    existing, existing_detail = _marker_stores(spark)[store]
+    res = load_variants(derived, existing, existing, existing_detail,
+                        distributed_ranking=distributed)
+    got = {"variant": res.variant, "variant_map_data": res.variant_map_data,
+           "variant_sample_detail": res.variant_sample_detail}
+    old = _old_inserts(derived, existing, existing_detail, distributed)
+    for table, (deduped, candidates, key) in old.items():
+        cols = deduped.columns
+        assert got[table].columns == cols, table
+        rows = [tuple(r) for r in got[table].select(*cols).collect()]
+        keys = [r[:len(key)] for r in got[table].select(*key).collect()]
+        assert len(keys) == len(set(keys)), table
+        assert sorted(keys) == sorted(tuple(r) for r in deduped.select(*key).collect()), table
+        assert set(rows) <= {tuple(r) for r in candidates.collect()}, table
+
+    # the batch's 6 distinct keys: case-only and repeated rows share one id
+    n_new = {"empty": 6, "held": 4}[store]
+    assert res.variant.count() == n_new == res.counters["rows_new_variants"]
+    detail = {(r["rgd_id"], r["sample_id"]) for r in res.variant_sample_detail.collect()}
+    if store == "held":
+        ids = {r["rgd_id"] for r in res.variant.collect()}
+        assert ids == {701, 702, 703, 704}  # above the store's top id
+        # (2, 300) reuses the smaller of its two ids, already detailed for 7
+        assert not {r for r in detail if r[0] in (554, 555)}
+        assert (600, 7) in detail and (600, 8) not in detail
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_upsert_without_markers_keeps_its_columns(spark, distributed):
+    """Callers that do not ask for the markers (the engine queries, the
+    streaming ingest) get incoming + rgd_id + is_new, as before; with
+    them, the two marker columns follow."""
+    from rat_strain_loader_pipeline_spark.operators.upsert import upsert_variants
+    from rat_strain_loader_pipeline_spark.pipelines.load import NATURAL_KEY
+
+    derived = _marker_batch(spark)
+    existing, _ = _marker_stores(spark)["held"]
+    plain = upsert_variants(derived, existing, key=NATURAL_KEY,
+                            distributed_ranking=distributed)
+    assert "rgd_id" in derived.columns  # a CF2 column: replaced in place
+    assert plain.columns == derived.columns + ["is_new"]
+    marked = upsert_variants(derived, existing, key=NATURAL_KEY,
+                             distributed_ranking=distributed, mark_first="sample_id")
+    assert marked.columns == plain.columns + ["first_of_id", "first_of_pair"]
+
+
+def test_id_floor_folds_away_on_an_empty_store(spark):
+    """The top-1 id floor plans nothing over an empty id table (Catalyst
+    folds the broadcast join away) and one broadcast over a held one."""
+    from rat_strain_loader_pipeline_spark.operators.upsert import upsert_variants
+
+    derived = _marker_batch(spark)
+    for store, broadcasts in (("empty", 0), ("held", 1)):
+        existing, _ = _marker_stores(spark)[store]
+        plan = upsert_variants(derived, existing.limit(0) if store == "empty" else existing
+                               )._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("TakeOrderedAndProject") == broadcasts, store
+        assert "HashAggregate(keys=[], functions=[max" not in plan

@@ -1458,3 +1458,29 @@ def test_bpe_queries_serve_model_store_and_match_hermetic(
         tuple(r) for r in bpe_apply(docs, rounds=em.BPE_ROUNDS).collect()
     }
     assert served_apply == hermetic_apply
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_upsert_markers_add_no_exchange_or_sort(spark, distributed):
+    """Marking the inserts' rows (``mark_first``) rides the ranking's
+    window pass: every window partitions on the same columns, and the
+    (key, sample) window's sort also serves the key window, so the marked
+    plan has exactly the unmarked plan's exchanges and sorts."""
+    from rat_strain_loader_pipeline_spark.operators.upsert import upsert_variants
+
+    cols = ("chromosome string, start_pos long, end_pos long, ref_nuc string, "
+            "var_nuc string, variant_type string")
+    incoming = spark.createDataFrame(
+        [("1", 10, 11, "A", "C", "snv", 7), ("2", 20, 21, "G", "T", "snv", 8)],
+        cols + ", sample_id int",
+    )
+    existing = spark.createDataFrame([(5, "1", 10, 11, "A", "C", "snv")], "rgd_id long, " + cols)
+
+    def shape(**kw):
+        plan = _plan(upsert_variants(incoming, existing, distributed_ranking=distributed, **kw),
+                     "simple")
+        return plan.count("Exchange"), plan.count("Sort ["), plan.count("Window [")
+
+    plain, marked = shape(), shape(mark_first="sample_id")
+    assert marked[:2] == plain[:2], (plain, marked)
+    assert marked[2] == plain[2] + 1

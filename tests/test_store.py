@@ -122,6 +122,34 @@ def test_compact_table_content_invariant(spark, tmp_path):
     assert stats["files_after"] < stats["files_before"]
 
 
+def test_compact_table_keeps_partition_values(spark, tmp_path, count_jobs):
+    """Compaction rewrites partition directories under the values they
+    had: ``chromosome=01`` stays ``01`` beside ``chromosome=2`` (an
+    inferring read types both as int and rewrites them as ``1`` and
+    ``2``), and the read that feeds it runs no inference job."""
+    from rat_strain_loader_pipeline_spark.store import compact_table
+
+    root = str(tmp_path / "store")
+    for _ in range(3):
+        write_table(_vmd(spark, "01", "GENIC"), root, "variant_map_data")
+        write_table(_vmd(spark, "2", "INTERGENIC"), root, "variant_map_data")
+    before = sorted(map(tuple, read_table(spark, root, "variant_map_data").collect()))
+
+    stats, jobs = count_jobs(compact_table, spark, root, "variant_map_data",
+                             target_rows_per_file=1000)
+    assert sorted(os.listdir(f"{root}/variant_map_data/map_key=360")) == [
+        "chromosome=01", "chromosome=2"
+    ]
+    after = sorted(map(tuple, read_table(spark, root, "variant_map_data").collect()))
+    assert after == before and stats["rows"] == 30
+    assert stats["files_after"] < stats["files_before"]
+    # the row count and the repartitioned write; no footer-inference job
+    _, plain = count_jobs(
+        lambda: read_table(spark, root, "variant_map_data").count()
+    )
+    assert jobs <= plain + 2, jobs
+
+
 def _nested(spark):
     return spark.createDataFrame(
         [
