@@ -1333,9 +1333,6 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_STREAM_STORE_PATHS: dict[str, tuple[str, object]] = {}
-
-
 def q_embedding_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index under the correctness gate: embeddings
     stream in as a REAL 2-micro-batch AvailableNow run, each batch
@@ -1357,21 +1354,13 @@ def q_embedding_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk,
         ivf_train_centroids,
     )
-    from rat_strain_loader_pipeline_spark.staging import (
-        _stage_root,
-        stage_to_parquet_path,
-    )
+    from rat_strain_loader_pipeline_spark.staging import _stage_root, build_once
     from rat_strain_loader_pipeline_spark.streaming.ann import ivf_ingest_available_now
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
 
-    cached = _IVF_STREAM_STORE_PATHS.get(sf_dir)
-    if cached is not None and _os.path.exists(
-        _os.path.join(cached[0], "_SUCCESS")
-    ):
-        postings, cent = spark.read.parquet(cached[0]), cached[1]
-    else:
+    def build():
         cent = ivf_train_centroids(emb, n_lists=8, sample_size=512, iters=5)
         work = _os.path.join(_stage_root(), f"ivf-stream-{_uuid.uuid4().hex[:8]}")
         src_dir = _os.path.join(work, "src")
@@ -1386,10 +1375,11 @@ def q_embedding_stream_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             postings = ivf_ingest_available_now(
                 spark, src_dir + "/p*", cent, work, max_files_per_trigger=1
             )
-        postings, p_path = stage_to_parquet_path(postings, "ivfstream-postings")
-        # centroids are a deterministic driver-side numpy model — cache
-        # the array itself beside the staged posting store
-        _IVF_STREAM_STORE_PATHS[sf_dir] = (p_path, cent)
+        # centroids are a deterministic driver-side numpy model, kept
+        # beside the staged posting store
+        return postings, cent
+
+    postings, cent = build_once(spark, "ivf_stream", sf_dir, build)
     return ivf_topk(postings, cent, qvec, k=10, nprobe=8)
 
 
@@ -1522,9 +1512,6 @@ def q_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CF2_STREAM_PATHS: dict[str, str] = {}
-
-
 def q_cf2_stream_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP load as Structured-Streaming ingest (SURVEY §2.8):
     the synthetic CF2 lands as TSV files, a Trigger.AvailableNow file
@@ -1544,49 +1531,39 @@ def q_cf2_stream_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     The loaded variant store is stored pipeline state (the
     cc_stream_ingest lifecycle): the TSV landing + replay build it once
     per process per sf_dir and later calls read the stored table."""
-    import os as _os
     import tempfile
 
     from rat_strain_loader_pipeline_spark.sources.cf2 import write_cf2
-    from rat_strain_loader_pipeline_spark.staging import (
-        _stage_root,
-        stage_to_parquet_path,
-    )
+    from rat_strain_loader_pipeline_spark.staging import _stage_root, build_once
     from rat_strain_loader_pipeline_spark.streaming.ingest import (
         ingest_cf2_available_now,
     )
 
-    cached = _CF2_STREAM_PATHS.get(sf_dir)
-    if cached is not None and _os.path.exists(
-        _os.path.join(cached, "_SUCCESS")
-    ):
-        return spark.read.parquet(cached)
-
-    # deterministic 1/8 subset — the batch flagship covers full volume
-    li = _t(spark, sf_dir, "lineitem").filter((F.col("l_orderkey") % 8) == 3)
-    cf2 = _synth_cf2_full(li)
-    genes = _genes_analog(_t(spark, sf_dir, "supplier")).select(
-        F.col("g_chr").alias("chromosome"),
-        F.col("g_start").alias("start_pos"),
-        F.col("g_stop").alias("stop_pos"),
-        F.lit("ACTIVE").alias("object_status"),
-    )
-    # under the staging root so the per-process cleanup owns it (a bare
-    # mkdtemp would leak a full CF2 copy + store per invocation)
-    work = tempfile.mkdtemp(prefix="cf2-stream-", dir=_stage_root())
-    cf2_dir = f"{work}/cf2"
-    write_cf2(cf2.repartition(2), cf2_dir, compression="none")
-    from rat_strain_loader_pipeline_spark.streaming import (
-        stream_partition_scope,
-    )
-
-    with stream_partition_scope(spark):
-        out = ingest_cf2_available_now(
-            spark, cf2_dir, work, sample_id=7, gender="M", map_key=360,
-            genes=genes, genic_bin_size=256, max_files_per_trigger=2,
+    def build():
+        # deterministic 1/8 subset — the batch flagship covers full volume
+        li = _t(spark, sf_dir, "lineitem").filter((F.col("l_orderkey") % 8) == 3)
+        cf2 = _synth_cf2_full(li)
+        genes = _genes_analog(_t(spark, sf_dir, "supplier")).select(
+            F.col("g_chr").alias("chromosome"),
+            F.col("g_start").alias("start_pos"),
+            F.col("g_stop").alias("stop_pos"),
+            F.lit("ACTIVE").alias("object_status"),
         )
-    result, path = stage_to_parquet_path(
-        out.select(
+        # under the staging root, with the store it feeds (a bare mkdtemp
+        # would leave a full CF2 copy + store outside it per build)
+        work = tempfile.mkdtemp(prefix="cf2-stream-", dir=_stage_root())
+        cf2_dir = f"{work}/cf2"
+        write_cf2(cf2.repartition(2), cf2_dir, compression="none")
+        from rat_strain_loader_pipeline_spark.streaming import (
+            stream_partition_scope,
+        )
+
+        with stream_partition_scope(spark):
+            out = ingest_cf2_available_now(
+                spark, cf2_dir, work, sample_id=7, gender="M", map_key=360,
+                genes=genes, genic_bin_size=256, max_files_per_trigger=2,
+            )
+        return out.select(
             "chromosome",
             F.col("start_pos").alias("position"),
             "end_pos",
@@ -1599,11 +1576,9 @@ def q_cf2_stream_load(spark: SparkSession, sf_dir: str) -> DataFrame:
             "zygosity_ref_allele",
             "zygosity_poss_error",
             "quality_score",
-        ),
-        "cf2stream-store",
-    )
-    _CF2_STREAM_PATHS[sf_dir] = path
-    return result
+        )
+
+    return build_once(spark, "cf2_stream", sf_dir, build)
 
 
 def q_dedup_stream_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2793,35 +2768,25 @@ def q_vt_preload_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vt.select(*_VT_OUT_COLS)
 
 
-_FASTA_BLOCKS_PATHS: dict[tuple[int, int], str] = {}
-
-
 def _fasta_blocks_staged(spark: SparkSession, n_genes: int, block_size: int):
     """Build-once per-process staged fasta block table (the genome is a
     static asset — a real deployment lands it in parquet exactly once,
     not per query): removes the per-call genome→DataFrame shipping and
     gives downstream joins a plain parquet scan."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.sources.fasta import (
         fasta_blocks,
         fasta_from_dict,
     )
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    key = (n_genes, block_size)
-    path = _FASTA_BLOCKS_PATHS.get(key)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    blocks, path = stage_to_parquet_path(
-        fasta_blocks(
-            fasta_from_dict(spark, _synth_genome(n_genes)),
-            block_size=block_size,
+    return build_once(
+        spark,
+        "fasta_blocks",
+        (n_genes, block_size),
+        lambda: fasta_blocks(
+            fasta_from_dict(spark, _synth_genome(n_genes)), block_size=block_size
         ),
-        "fasta-blocks",
     )
-    _FASTA_BLOCKS_PATHS[key] = path
-    return blocks
 
 
 def q_consequence_snv_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5708,33 +5673,25 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_ASSIGN_PATHS: dict[str, str] = {}
-
-
 def _kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once per-process staged kmeans assignment at the shared
     KMEANS_K/KMEANS_ITERS constants — consumed by kmeans_clusters,
     semdedup, and cluster_quota_sample instead of each refitting the
     identical clustering (the _nd_pairs lifecycle for the embedding
     space). Deterministic, so serving changes no value."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.clustering import (
         kmeans_micros,
     )
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    path = _KMEANS_ASSIGN_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    assign, path = stage_to_parquet_path(
-        kmeans_micros(
+    return build_once(
+        spark,
+        "kmeans_assign",
+        sf_dir,
+        lambda: kmeans_micros(
             _t(spark, sf_dir, "embeddings"), k=KMEANS_K, iters=KMEANS_ITERS
         ),
-        "kmeans-assign-store",
     )
-    _KMEANS_ASSIGN_PATHS[sf_dir] = path
-    return assign
 
 
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5930,10 +5887,6 @@ def q_window_skew_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _skewed_transitions(spark, sf_dir, zipf=False)
 
 
-_PHASH_MEDIA_PATHS: dict[str, str] = {}
-_AUDIO_MEDIA_PATHS: dict[str, str] = {}
-
-
 def _phash_media_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once per-process staged BMP fixture (_synth_phash_media
     materialized): the media BYTES are the queries' input corpus, not
@@ -5941,18 +5894,11 @@ def _phash_media_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute per call. Generation is a pure function of doc_id, so the
     staged copy is bit-identical to a fresh synth (and a filtered
     slice of it equals synthesizing the filtered docs)."""
-    import os as _os
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
-
-    path = _PHASH_MEDIA_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    media, path = stage_to_parquet_path(
-        _synth_phash_media(spark, sf_dir), "phash-media-store"
+    return build_once(
+        spark, "phash_media", sf_dir, lambda: _synth_phash_media(spark, sf_dir)
     )
-    _PHASH_MEDIA_PATHS[sf_dir] = path
-    return media
 
 
 def _synth_phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6095,26 +6041,18 @@ def q_media_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.append((d, synth_wav_samples(base)))
             yield pd.DataFrame(out, columns=["media_id", "content"])
 
-    import os as _os
-
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
     # build-once staged WAV fixture (the _phash_media_store twin): the
     # bytes are the input corpus, generation is a pure function of
     # doc_id; decode + hashing + banding still compute per call
-    path = _AUDIO_MEDIA_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        media = spark.read.parquet(path)
-    else:
-        media, path = stage_to_parquet_path(
-            docs.mapInPandas(synth, schema="media_id long, content binary"),
-            "audio-media-store",
-        )
-        _AUDIO_MEDIA_PATHS[sf_dir] = path
+    media = build_once(
+        spark,
+        "audio_media",
+        sf_dir,
+        lambda: docs.mapInPandas(synth, schema="media_id long, content binary"),
+    )
     return media_audio_pairs(media, max_hamming=4)
-
-
-_UNIGRAM_MODEL_PATHS: dict[str, str] = {}
 
 
 def _unigram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6124,24 +6062,21 @@ def _unigram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     output and the apply query's serving vocabulary both read the
     staged model parquet. Training is deterministic, so serving
     changes no value."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.text import unigram_train
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    path = _UNIGRAM_MODEL_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    model = unigram_train(
-        _t(spark, sf_dir, "documents"),
-        vocab_multi=UNI_VOCAB_MULTI,
-        rounds=UNI_ROUNDS,
-        max_len=UNI_MAXLEN,
-        return_model=True,
+    return build_once(
+        spark,
+        "unigram_model",
+        sf_dir,
+        lambda: unigram_train(
+            _t(spark, sf_dir, "documents"),
+            vocab_multi=UNI_VOCAB_MULTI,
+            rounds=UNI_ROUNDS,
+            max_len=UNI_MAXLEN,
+            return_model=True,
+        ),
     )
-    staged, path = stage_to_parquet_path(model, "uni-model-store")
-    _UNIGRAM_MODEL_PATHS[sf_dir] = path
-    return staged
 
 
 def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6211,9 +6146,6 @@ def q_unigram_train_floored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_STORE_PATHS: dict[str, tuple[str, str]] = {}
-
-
 def _bpe_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Build-once per-process BPE model store: ONE training run
     (bpe_train at BPE_ROUNDS) stages BOTH trainer outputs — the merge
@@ -6224,23 +6156,17 @@ def _bpe_store(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     _unigram_model/_ivf_index_path lifecycle for the BPE family:
     training is deterministic (count desc + lexicographic tie-break),
     so serving changes no value."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.text import bpe_train
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    paths = _BPE_STORE_PATHS.get(sf_dir)
-    if paths is not None and all(
-        _os.path.exists(_os.path.join(p, "_SUCCESS")) for p in paths
-    ):
-        return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
-    merges, syms = bpe_train(
-        _t(spark, sf_dir, "documents"), rounds=BPE_ROUNDS, return_vocab=True
+    return build_once(
+        spark,
+        "bpe_store",
+        sf_dir,
+        lambda: bpe_train(
+            _t(spark, sf_dir, "documents"), rounds=BPE_ROUNDS, return_vocab=True
+        ),
     )
-    merges_staged, merges_path = stage_to_parquet_path(merges, "bpe-merges-store")
-    syms_staged, syms_path = stage_to_parquet_path(syms, "bpe-syms-store")
-    _BPE_STORE_PATHS[sf_dir] = (merges_path, syms_path)
-    return merges_staged, syms_staged
 
 
 def _bpe_syms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6559,8 +6485,6 @@ def q_media_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rat_strain_loader_pipeline_spark.streaming.media_gate import (
         phash_gate_available_now,
     )
-
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
 
     # deterministic 1/2 subset (text-gate precedent): gate semantics are
     # volume-independent; the batch phash queries cover full volume.
@@ -9077,9 +9001,6 @@ def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_INDEX_PATHS: dict[str, str] = {}
-
-
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once per-process cache of the persisted IVF-PQ index for a
     corpus: the artifact (centroids + codes parquet under a
@@ -9091,31 +9012,26 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     never does."""
     import os as _os
 
-    path = _IVF_INDEX_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_index_build,
     )
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    path = ivf_pq_index_build(
-        _t(spark, sf_dir, "embeddings"),
-        dims=EMB_DIMS,
-        coarse_k=KMEANS_K,
-        coarse_iters=IVFPQ_COARSE_ITERS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        tag=tag,
+    return build_once(
+        spark,
+        "ivf_index",
+        sf_dir,
+        lambda: ivf_pq_index_build(
+            _t(spark, sf_dir, "embeddings"),
+            dims=EMB_DIMS,
+            coarse_k=KMEANS_K,
+            coarse_iters=IVFPQ_COARSE_ITERS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            tag=_os.path.basename(sf_dir.rstrip("/")) or "corpus",
+        ),
     )
-    _IVF_INDEX_PATHS[sf_dir] = path
-    return path
-
-
-_IVF_OPQ_INDEX_PATHS: dict[str, str] = {}
 
 
 def _ivf_opq_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -9126,36 +9042,28 @@ def _ivf_opq_index_path(spark: SparkSession, sf_dir: str) -> str:
     OPQ variant."""
     import os as _os
 
-    path = _IVF_OPQ_INDEX_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_index_build,
         opq_dim_assign,
     )
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
+    from rat_strain_loader_pipeline_spark.staging import build_once, stage_to_parquet
 
-    emb = _t(spark, sf_dir, "embeddings")
-    dim_map = stage_to_parquet(opq_dim_assign(emb, m=PQ_M), "opq-ivf-dimmap")
-    tag = (_os.path.basename(sf_dir.rstrip("/")) or "corpus") + "-opq"
-    path = ivf_pq_index_build(
-        emb,
-        dims=EMB_DIMS,
-        coarse_k=KMEANS_K,
-        coarse_iters=IVFPQ_COARSE_ITERS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        tag=tag,
-        dim_map=dim_map,
-    )
-    _IVF_OPQ_INDEX_PATHS[sf_dir] = path
-    return path
+    def build():
+        emb = _t(spark, sf_dir, "embeddings")
+        dim_map = stage_to_parquet(opq_dim_assign(emb, m=PQ_M), "opq-ivf-dimmap")
+        return ivf_pq_index_build(
+            emb,
+            dims=EMB_DIMS,
+            coarse_k=KMEANS_K,
+            coarse_iters=IVFPQ_COARSE_ITERS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            tag=(_os.path.basename(sf_dir.rstrip("/")) or "corpus") + "-opq",
+            dim_map=dim_map,
+        )
 
-
-_IVF_RESIDUAL_INDEX_PATHS: dict[str, str] = {}
+    return build_once(spark, "ivf_opq_index", sf_dir, build)
 
 
 def _ivf_residual_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -9168,31 +9076,26 @@ def _ivf_residual_index_path(spark: SparkSession, sf_dir: str) -> str:
     retraining that breached the driver's 10 s budget in round 9."""
     import os as _os
 
-    path = _IVF_RESIDUAL_INDEX_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_residual_index_build,
     )
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    path = ivf_pq_residual_index_build(
-        _t(spark, sf_dir, "embeddings"),
-        dims=EMB_DIMS,
-        coarse_k=KMEANS_K,
-        coarse_iters=IVFPQ_COARSE_ITERS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        tag=tag,
+    return build_once(
+        spark,
+        "ivf_residual_index",
+        sf_dir,
+        lambda: ivf_pq_residual_index_build(
+            _t(spark, sf_dir, "embeddings"),
+            dims=EMB_DIMS,
+            coarse_k=KMEANS_K,
+            coarse_iters=IVFPQ_COARSE_ITERS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            tag=_os.path.basename(sf_dir.rstrip("/")) or "corpus",
+        ),
     )
-    _IVF_RESIDUAL_INDEX_PATHS[sf_dir] = path
-    return path
-
-
-_PQ_EXH_INDEX_PATHS: dict[tuple[str, bool], str] = {}
 
 
 def _pq_exh_index_path(spark: SparkSession, sf_dir: str, opq: bool) -> str:
@@ -9207,13 +9110,11 @@ def _pq_exh_index_path(spark: SparkSession, sf_dir: str, opq: bool) -> str:
     removing the 4-5 repeated identical codebook trainings per bench
     run (the lifecycle-waste shape that breached the 10 s budget in
     round 9)."""
-    path = (
+    return (
         _ivf_opq_index_path(spark, sf_dir)
         if opq
         else _ivf_index_path(spark, sf_dir)
     )
-    _PQ_EXH_INDEX_PATHS[(sf_dir, opq)] = path
-    return path
 
 
 def q_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9265,9 +9166,6 @@ def q_ivf_pq_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_RESIDUAL_OPQ_INDEX_PATHS: dict[str, str] = {}
-
-
 def _ivf_residual_opq_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once per-process cache of the persisted OPQ×RESIDUAL
     IVF-PQ index — the zeroth-order form of FAISS's production
@@ -9279,29 +9177,27 @@ def _ivf_residual_opq_index_path(spark: SparkSession, sf_dir: str) -> str:
     constants instead of assuming the published default."""
     import os as _os
 
-    path = _IVF_RESIDUAL_OPQ_INDEX_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_residual_index_build,
     )
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    tag = _os.path.basename(sf_dir.rstrip("/")) or "corpus"
-    path = ivf_pq_residual_index_build(
-        _t(spark, sf_dir, "embeddings"),
-        dims=EMB_DIMS,
-        coarse_k=KMEANS_K,
-        coarse_iters=IVFPQ_COARSE_ITERS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        tag=tag,
-        opq=True,
+    return build_once(
+        spark,
+        "ivf_residual_opq_index",
+        sf_dir,
+        lambda: ivf_pq_residual_index_build(
+            _t(spark, sf_dir, "embeddings"),
+            dims=EMB_DIMS,
+            coarse_k=KMEANS_K,
+            coarse_iters=IVFPQ_COARSE_ITERS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            tag=_os.path.basename(sf_dir.rstrip("/")) or "corpus",
+            opq=True,
+        ),
     )
-    _IVF_RESIDUAL_OPQ_INDEX_PATHS[sf_dir] = path
-    return path
 
 
 def q_ivf_pq_residual_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9379,37 +9275,32 @@ def q_ann_recall_residual_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_RESIDUAL_EVEN_INDEX_PATHS: dict[str, str] = {}
-
-
 def _ivf_residual_even_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once per-process residual index over the EVEN-id half of
     the corpus — the 'already indexed' store the drift-gated reindex
     query maintains (the cc_incremental even/odd batch convention)."""
     import os as _os
 
-    path = _IVF_RESIDUAL_EVEN_INDEX_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_residual_index_build,
     )
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    tag = (_os.path.basename(sf_dir.rstrip("/")) or "corpus") + "-even"
-    path = ivf_pq_residual_index_build(
-        _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0),
-        dims=EMB_DIMS,
-        coarse_k=KMEANS_K,
-        coarse_iters=IVFPQ_COARSE_ITERS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        tag=tag,
+    return build_once(
+        spark,
+        "ivf_residual_even_index",
+        sf_dir,
+        lambda: ivf_pq_residual_index_build(
+            _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 2 == 0),
+            dims=EMB_DIMS,
+            coarse_k=KMEANS_K,
+            coarse_iters=IVFPQ_COARSE_ITERS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            tag=(_os.path.basename(sf_dir.rstrip("/")) or "corpus") + "-even",
+        ),
     )
-    _IVF_RESIDUAL_EVEN_INDEX_PATHS[sf_dir] = path
-    return path
 
 
 def q_ivf_pq_reindex_drifted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9529,9 +9420,6 @@ def q_ivf_pq_maintenance_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_MAINTAINED_PATHS: dict[str, str] = {}
-
-
 def _ivf_maintained_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once per-process cache of the MAINTAINED index artifact:
     ivf_pq_maintained_commit over the even-id residual index and the
@@ -9543,36 +9431,33 @@ def _ivf_maintained_path(spark: SparkSession, sf_dir: str) -> str:
     from rat_strain_loader_pipeline_spark.operators.quantize import (
         ivf_pq_maintained_commit,
     )
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    path = _IVF_MAINTAINED_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(
-        _os.path.join(path, "codes", "_SUCCESS")
-    ):
-        return path
-    emb = _t(spark, sf_dir, "embeddings")
-    path = ivf_pq_maintained_commit(
-        spark,
-        _ivf_residual_even_index_path(spark, sf_dir),
-        emb.filter(F.col("vec_id") % 2 == 0),
-        emb.filter(F.col("vec_id") % 2 == 1).select(
-            "vec_id",
-            F.expr(
-                f"CASE WHEN vec_id % {MPLAN_SCALE_MOD} = 0"
-                " THEN transform(reverse(embedding), x -> x * 3.0D)"
-                " ELSE reverse(embedding) END"
-            ).alias("embedding"),
-        ),
-        dims=EMB_DIMS,
-        m=PQ_M,
-        k=PQ_K,
-        iters=PQ_ITERS,
-        drift_threshold_q=REINDEX_DRIFT_Q,
-        stale_ratio_q=MPLAN_STALE_RATIO_Q,
-        fp_mod=IVFPQ_FP_MOD,
-        tag=_os.path.basename(sf_dir.rstrip("/")) or "corpus",
-    )
-    _IVF_MAINTAINED_PATHS[sf_dir] = path
-    return path
+    def build():
+        emb = _t(spark, sf_dir, "embeddings")
+        return ivf_pq_maintained_commit(
+            spark,
+            _ivf_residual_even_index_path(spark, sf_dir),
+            emb.filter(F.col("vec_id") % 2 == 0),
+            emb.filter(F.col("vec_id") % 2 == 1).select(
+                "vec_id",
+                F.expr(
+                    f"CASE WHEN vec_id % {MPLAN_SCALE_MOD} = 0"
+                    " THEN transform(reverse(embedding), x -> x * 3.0D)"
+                    " ELSE reverse(embedding) END"
+                ).alias("embedding"),
+            ),
+            dims=EMB_DIMS,
+            m=PQ_M,
+            k=PQ_K,
+            iters=PQ_ITERS,
+            drift_threshold_q=REINDEX_DRIFT_Q,
+            stale_ratio_q=MPLAN_STALE_RATIO_Q,
+            fp_mod=IVFPQ_FP_MOD,
+            tag=_os.path.basename(sf_dir.rstrip("/")) or "corpus",
+        )
+
+    return build_once(spark, "ivf_maintained", sf_dir, build)
 
 
 def q_ivf_pq_maintained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9663,9 +9548,6 @@ def q_ann_recall_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_STREAM_PATHS: dict[str, str] = {}
-
-
 def q_ivf_pq_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PQ-coded ingest end to end (streaming/ann.py
     ivf_pq_encode_ingest_available_now): odd-id embeddings replay as
@@ -9681,36 +9563,23 @@ def q_ivf_pq_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import uuid as _uuid
 
-    from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.staging import _stage_root, build_once
     from rat_strain_loader_pipeline_spark.streaming.ann import (
         ivf_pq_encode_ingest_available_now,
     )
 
-    def _store_ok(p: str | None) -> bool:
-        if p is None or not _os.path.isdir(p):
-            return False
-        if _os.path.exists(_os.path.join(p, "_SUCCESS")):
-            return True  # flat (empty-store) layout
-        return any(
-            n.startswith("batch=")
-            and _os.path.exists(_os.path.join(p, n, "_SUCCESS"))
-            for n in _os.listdir(p)
-        )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    codes_path = _PQ_STREAM_PATHS.get(sf_dir)
-    if not _store_ok(codes_path):
+    def build():
         tag = _uuid.uuid4().hex[:8]
         src_dir = _os.path.join(_stage_root(), f"pqstream-src-{tag}")
-        emb.filter(F.col("vec_id") % 2 == 1).repartition(2).write.parquet(
-            src_dir
-        )
+        _t(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") % 2 == 1
+        ).repartition(2).write.parquet(src_dir)
         from rat_strain_loader_pipeline_spark.streaming import (
             stream_partition_scope,
         )
 
         with stream_partition_scope(spark):
-            merged = ivf_pq_encode_ingest_available_now(
+            return ivf_pq_encode_ingest_available_now(
                 spark,
                 src_dir,
                 _ivf_residual_even_index_path(spark, sf_dir),
@@ -9719,21 +9588,8 @@ def q_ivf_pq_stream_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m=PQ_M,
                 max_files_per_trigger=1,
             )
-        files = merged.inputFiles()
-        if files:
-            codes_path = files[0].rsplit("/", 1)[0]
-            if codes_path.startswith("file:"):
-                codes_path = codes_path[len("file:"):]
-            # point at the store root, not one batch partition
-            if "/batch=" in codes_path:
-                codes_path = codes_path.rsplit("/batch=", 1)[0]
-        else:
-            codes_path = _os.path.join(_stage_root(), f"pqstream-empty-{tag}")
-            merged.write.mode("overwrite").parquet(codes_path)
-        _PQ_STREAM_PATHS[sf_dir] = codes_path
-    merged = spark.read.parquet(codes_path)
-    if "batch" in merged.columns:
-        merged = merged.drop("batch")
+
+    merged = build_once(spark, "pq_stream", sf_dir, build)
     from rat_strain_loader_pipeline_spark.operators.sampling import md5_mod
 
     return (
@@ -9855,9 +9711,6 @@ def q_weighted_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-_CC_STORE_PATHS: dict[str, tuple[str, str]] = {}
-
-
 def _nd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production near-dup pair set — minhash_lsh_pairs at the
     shared 0.5 threshold and default coefficients — served from the
@@ -9869,11 +9722,6 @@ def _nd_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora) still compute their own."""
     return _nd_pairs_store(spark, sf_dir)
 
-
-
-_ND_PAIRS_PATHS: dict[str, str] = {}
-_FULL_CC_PATHS: dict[str, str] = {}
-_SHINGLE_STORE_PATHS: dict[str, str] = {}
 
 
 def _shingle_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9888,21 +9736,17 @@ def _shingle_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     all of them. Hash arrays are a pure per-doc function, so a
     filtered corpus slice's hashes are exactly the store's rows
     filtered by the same predicate — the sampled audit uses that."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.dedup import shingle_hashes
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    path = _SHINGLE_STORE_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    docs = _t(spark, sf_dir, "documents")
-    hashes, path = stage_to_parquet_path(
-        shingle_hashes(docs, "text", "doc_id", 3, stage=False),
-        "shingle-store",
+    return build_once(
+        spark,
+        "shingle_store",
+        sf_dir,
+        lambda: shingle_hashes(
+            _t(spark, sf_dir, "documents"), "text", "doc_id", 3, stage=False
+        ),
     )
-    _SHINGLE_STORE_PATHS[sf_dir] = path
-    return hashes
 
 
 def _full_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9919,21 +9763,17 @@ def _full_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint probe PER round) over the identical stored pair set.
     Labels are deterministic (component id = min member node id), so
     serving changes no value anywhere."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.dedup import (
         connected_components,
     )
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    path = _FULL_CC_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    cc, path = stage_to_parquet_path(
-        connected_components(_nd_pairs(spark, sf_dir)), "ccstore-fullcc"
+    return build_once(
+        spark,
+        "full_cc",
+        sf_dir,
+        lambda: connected_components(_nd_pairs(spark, sf_dir)),
     )
-    _FULL_CC_PATHS[sf_dir] = path
-    return cc
 
 
 def _nd_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9941,26 +9781,20 @@ def _nd_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding + verify pipeline, staged once): split from the old-corpus
     component table so the many pairs-only consumers never pay the
     component build on first touch."""
-    import os as _os
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
-
-    path = _ND_PAIRS_PATHS.get(sf_dir)
-    if path is not None and _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    docs = _t(spark, sf_dir, "documents")
-    # stage_to_parquet_path hands back the staged directory directly —
-    # inputFiles() is empty for a corpus with no near-dup pairs;
     # jaccard_micros rides along so verification consumers
     # (cross_corpus_dedup) never recompute signatures
-    pairs, path = stage_to_parquet_path(
-        minhash_lsh_pairs(
-            docs, jaccard_threshold=0.5, hashes=_shingle_store(spark, sf_dir)
+    return build_once(
+        spark,
+        "nd_pairs",
+        sf_dir,
+        lambda: minhash_lsh_pairs(
+            _t(spark, sf_dir, "documents"),
+            jaccard_threshold=0.5,
+            hashes=_shingle_store(spark, sf_dir),
         ).select("id_a", "id_b", "jaccard_micros"),
-        "ccstore-pairs",
     )
-    _ND_PAIRS_PATHS[sf_dir] = path
-    return pairs
 
 
 def _cc_store(spark: SparkSession, sf_dir: str):
@@ -9969,27 +9803,20 @@ def _cc_store(spark: SparkSession, sf_dir: str):
     component table, staged to parquet and reused by every consumer —
     the stored state a real ingest pipeline maintains across batches
     (the _ivf_index_path lifecycle). Returns (pairs_df, old_cc_df)."""
-    import os as _os
-
     from rat_strain_loader_pipeline_spark.operators.dedup import (
         connected_components,
     )
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
+    from rat_strain_loader_pipeline_spark.staging import build_once
 
     pairs = _nd_pairs_store(spark, sf_dir)
-    pairs_path = _ND_PAIRS_PATHS[sf_dir]
-    cached = _CC_STORE_PATHS.get(sf_dir)
-    if cached is not None and all(
-        _os.path.exists(_os.path.join(p, "_SUCCESS")) for p in cached
-    ):
-        return pairs, spark.read.parquet(cached[1])
-    old_cc, old_cc_path = stage_to_parquet_path(
-        connected_components(
+    old_cc = build_once(
+        spark,
+        "old_cc",
+        sf_dir,
+        lambda: connected_components(
             pairs.filter((F.col("id_a") % 2 == 0) & (F.col("id_b") % 2 == 0))
         ),
-        "ccstore-oldcc",
     )
-    _CC_STORE_PATHS[sf_dir] = (pairs_path, old_cc_path)
     return pairs, old_cc
 
 
@@ -10379,9 +10206,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_STREAM_PATHS: dict[str, str] = {}
-
-
 def q_cc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup-at-ingest end to end (streaming/dedup_gate.py
     cc_ingest_available_now): documents replay as micro-batches; each
@@ -10398,16 +10222,14 @@ def q_cc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import uuid as _uuid
 
-    from rat_strain_loader_pipeline_spark.staging import _stage_root
+    from rat_strain_loader_pipeline_spark.staging import _stage_root, build_once
     from rat_strain_loader_pipeline_spark.streaming.dedup_gate import (
         cc_ingest_available_now,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    comp_path = _CC_STREAM_PATHS.get(sf_dir)
-    if comp_path is None or not _os.path.exists(
-        _os.path.join(comp_path, "_SUCCESS")
-    ):
+
+    def build():
         tag = _uuid.uuid4().hex[:8]
         src_dir = _os.path.join(_stage_root(), f"ccstream-src-{tag}")
         docs.select("doc_id", "text").repartition(2).write.parquet(src_dir)
@@ -10416,25 +10238,15 @@ def q_cc_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         with stream_partition_scope(spark):
-            merged = cc_ingest_available_now(
+            return cc_ingest_available_now(
                 spark,
                 src_dir,
                 _os.path.join(_stage_root(), f"ccstream-work-{tag}"),
                 jaccard_threshold=0.5,
                 max_files_per_trigger=1,
             )
-        files = merged.inputFiles()
-        if files:
-            comp_path = files[0].rsplit("/", 1)[0]
-            if comp_path.startswith("file:"):
-                comp_path = comp_path[len("file:"):]
-        else:
-            # corpus with no processed batches: stage the empty table so
-            # the memoized path stays readable
-            comp_path = _os.path.join(_stage_root(), f"ccstream-empty-{tag}")
-            merged.write.mode("overwrite").parquet(comp_path)
-        _CC_STREAM_PATHS[sf_dir] = comp_path
-    merged = spark.read.parquet(comp_path)
+
+    merged = build_once(spark, "cc_stream", sf_dir, build)
     return (
         docs.select("doc_id")
         .join(merged.withColumnRenamed("node_id", "doc_id"), "doc_id", "left")

@@ -135,6 +135,7 @@ def variant_load3(argv):
     from functools import reduce
 
     from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
 
     from rat_strain_loader_pipeline_spark.pipelines.load import (
         derive_variants_multi, load_variants, tag_sample,
@@ -162,9 +163,11 @@ def variant_load3(argv):
     existing_md = _store_or_empty(
         spark, a.store, "variant_map_data", VARIANT_MAP_DATA_SCHEMA, map_key=a.mapKey
     )
+    # only this call's samples can match a new detail row; the table is
+    # partitioned by sample_id, so the filter prunes the scan to them
     existing_sd = _store_or_empty(
         spark, a.store, "variant_sample_detail", VARIANT_SAMPLE_DETAIL_SCHEMA
-    )
+    ).filter(F.col("sample_id").isin(a.sampleId))
     # the upsert probes the NATURAL key — pass the variant⋈map projection
     existing_v = v.join(
         existing_md.select("rgd_id", "chromosome", "start_pos", "end_pos"), "rgd_id"
@@ -290,19 +293,21 @@ def polyphen_fasta(argv):
     a = p.parse_args(argv)
     from pyspark.sql import functions as F
 
+    from rat_strain_loader_pipeline_spark.observe import with_counters
     from rat_strain_loader_pipeline_spark.pipelines.polyphen import (
         polyphen_fasta_for_missing,
     )
 
     spark = _spark("polyphen-fasta")
     logs = spark.read.text(a.resultsDir).withColumnRenamed("value", "line")
-    out = polyphen_fasta_for_missing(logs, _dims(spark, a.dims, "proteins"))
+    out, c = with_counters(
+        polyphen_fasta_for_missing(logs, _dims(spark, a.dims, "proteins")),
+        "polyphen-fasta",
+        w=F.sum(F.when(F.col("found"), 1).otherwise(0)),
+        m=F.sum(F.when(~F.col("found"), 1).otherwise(0)),
+    )
     _write_lines(out.filter("found").select(F.col("fasta").alias("value")), a.outputDir)
-    c = out.agg(
-        F.sum(F.when(F.col("found"), 1).otherwise(0)).alias("w"),
-        F.sum(F.when(~F.col("found"), 1).otherwise(0)).alias("m"),
-    ).first()
-    print(f"fasta_written={c['w'] or 0} no_sequence={c['m'] or 0}")
+    print(f"fasta_written={c.get['w'] or 0} no_sequence={c.get['m'] or 0}")
 
 
 @tool("PolyphenLoader")

@@ -30,6 +30,15 @@ from pyspark.sql import functions as F
 ERR_MICROS = 1_000_000
 
 
+def index_complete(path: str) -> bool:
+    """Whether the index artifact at ``path`` is complete. Every index
+    build writes ``codes`` last, so its ``_SUCCESS`` marker implies the
+    rest of the artifact."""
+    import os
+
+    return os.path.exists(os.path.join(path, "codes", "_SUCCESS"))
+
+
 def quantize_int8(
     embeddings: DataFrame,
     levels: int = 255,
@@ -566,7 +575,7 @@ def pq_index_build(
     layout = "-opq" if opq else ""
     slug = f"pqx-d{dims}-m{m}k{k}i{iters}{layout}-{tag}"
     path = os.path.join(root, slug)
-    if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
+    if index_complete(path):
         return path
     dim_map = None
     if opq:
@@ -1143,7 +1152,7 @@ def ivf_pq_residual_index_build(
         f"ivfpqr-d{dims}-c{coarse_k}x{coarse_iters}-m{m}k{k}i{iters}{layout}-{tag}"
     )
     path = os.path.join(root, slug)
-    if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
+    if index_complete(path):
         return path
     lists, coarse_cent, codes, codebook, dim_map = _residual_index_train(
         corpus, d, coarse_k, coarse_iters, k, iters, id_col, vec_col,
@@ -1336,7 +1345,7 @@ def ivf_pq_index_build(
     layout = "-dm" if dim_map is not None else ""
     slug = f"ivfpq-d{dims}-c{coarse_k}x{coarse_iters}-m{m}k{k}i{iters}{layout}-{tag}"
     path = os.path.join(root, slug)
-    if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
+    if index_complete(path):
         has_map = os.path.exists(os.path.join(path, "dim_map", "_SUCCESS"))
         if has_map != (dim_map is not None):
             raise ValueError(
@@ -2470,7 +2479,7 @@ def ivf_pq_maintained_commit(
         f"-dq{drift_threshold_q}sq{stale_ratio_q}fp{fp_mod}-{tag}"
     )
     path = os.path.join(root, slug)
-    if os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
+    if index_complete(path):
         return path
     st = _maintenance_apply_state(
         spark, index_path, old_corpus, new_batch, dims, m, k, iters,

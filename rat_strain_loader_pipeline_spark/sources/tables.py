@@ -20,42 +20,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
+from rat_strain_loader_pipeline_spark.staging import build_once
+
 # Tables whose single-file scan is worth spreading (see read_table).
 _SPREAD_MIN_BYTES = 512 * 1024
-# (applicationId, sf_dir, name) -> staged multi-file path
-_SPREAD_CACHE: dict[tuple[str, str, str], str] = {}
 
 
-def _spread(spark: SparkSession, path: str, name: str, df: DataFrame) -> DataFrame:
-    """Restage a dense single-split parquet file into a multi-file copy.
+def _spread(spark: SparkSession, path: str, name: str) -> DataFrame | None:
+    """A multi-file copy of a dense single-split parquet file, or None
+    when the file is small or already splits into enough tasks.
 
     A single parquet file under spark.sql.files.maxPartitionBytes scans
     as ONE task, so every narrow pipeline downstream (expressions,
     Python stages, stage writes) runs on one core. A per-query
     ``repartition()`` fixes parallelism but pays a sorted round-robin
     exchange on EVERY query; restaging pays one shuffle+write per
-    process and every later scan is natively parallel with no exchange.
-    Genuinely large multi-split datasets keep their native splits.
+    process (a ``build_once`` store) and every later scan is natively
+    parallel with no exchange. Genuinely large multi-split datasets
+    keep their native splits.
     """
     try:
         size = os.path.getsize(path)
     except OSError:
-        return df
+        return None
     max_split = int(
         str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")).rstrip("b")
     )
     target = spark.sparkContext.defaultParallelism
     if size < _SPREAD_MIN_BYTES or max(1, -(-size // max_split)) >= target:
-        return df
-    key = (spark.sparkContext.applicationId, os.path.dirname(path), name)
-    staged = _SPREAD_CACHE.get(key)
-    if staged is None:
-        from rat_strain_loader_pipeline_spark.staging import _stage_root
-
-        staged = os.path.join(_stage_root(), f"spread-{name}-{len(_SPREAD_CACHE)}")
-        df.repartition(target).write.mode("overwrite").parquet(staged)
-        _SPREAD_CACHE[key] = staged
-    return spark.read.parquet(staged)
+        return None
+    return build_once(
+        spark,
+        f"spread-{name}",
+        (spark.sparkContext.applicationId, os.path.dirname(path)),
+        lambda: spark.read.parquet(path).repartition(target),
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -65,8 +64,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # attempt doesn't fail a task (works on any session, incl. the
         # driver's default-configured one)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    df = _spread(spark, path, name, df)
+    df = _spread(spark, path, name)
+    if df is None:
+        df = spark.read.parquet(path)
 
     if name == "events":
         ts_field = df.schema["ts"] if "ts" in df.columns else None

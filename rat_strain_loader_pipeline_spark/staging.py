@@ -1,4 +1,4 @@
-"""Parquet staging barriers.
+"""Parquet staging barriers, and the one build-once store pattern.
 
 A pipeline stage barrier must (a) stop Catalyst alias-substitution and
 predicate pushdown from composing giant expressions across stages, and
@@ -22,15 +22,28 @@ would otherwise infer it by reading the parquet footers back, which
 costs one Spark job per barrier; the written schema is already known
 and the inferred one equals it (tests/test_store.py pins both the
 schema and the rows).
+
+``build_once`` is the one way the engine keeps an intermediate that
+later calls reuse (a trained model, an index artifact, a postings or
+component table, a restaged input table). It stages what a build
+returns once per process and serves every later call from the stage
+with its written schema, so a served call runs no Spark job. Its
+directories are long-lived by design: a stage cleanup must leave them
+(and the streaming work directories their builds own) in place.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+import time
 import uuid
+from collections.abc import Callable, Hashable
+from dataclasses import dataclass
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _STAGE_ROOT: str | None = None
 
@@ -54,10 +67,81 @@ def stage_to_parquet_path(
     df: DataFrame, label: str = "stage"
 ) -> tuple[DataFrame, str]:
     """``stage_to_parquet`` variant that also returns the staged
-    directory path — for build-once memo stores that re-open the
-    artifact later. Returning the path directly avoids deriving it
-    from ``inputFiles()``, which is empty for an empty result (no data
-    files written) and scheme-prefixed (``file:``) otherwise."""
+    directory path (``build_once`` memoizes it)."""
     path = os.path.join(_stage_root(), f"{label}-{uuid.uuid4().hex[:12]}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.schema(df.schema).parquet(path), path
+
+
+@dataclass(frozen=True)
+class _Staged:
+    path: str
+    schema: StructType
+
+
+@dataclass
+class _Store:
+    parts: tuple  # a _Staged per returned frame, else the value itself
+    many: bool  # the build returned a tuple
+    build_s: float
+    served: int = 0
+
+
+_STORES: dict[tuple[str, Hashable], _Store] = {}
+
+
+def _complete(part: Any) -> bool:
+    """A staged frame is complete once its ``_SUCCESS`` marker exists;
+    a ``str`` a build returns is an index artifact's directory, checked
+    by the artifact format's own rule; any other value lives in memory."""
+    if isinstance(part, _Staged):
+        return os.path.exists(os.path.join(part.path, "_SUCCESS"))
+    if isinstance(part, str):
+        from rat_strain_loader_pipeline_spark.operators.quantize import (
+            index_complete,
+        )
+
+        return index_complete(part)
+    return True
+
+
+def build_once(
+    spark: SparkSession, name: str, key: Hashable, build: Callable[[], Any]
+) -> Any:
+    """Run ``build()`` once per process per ``(name, key)`` and serve it.
+
+    ``build`` returns one value or a tuple of values. Each DataFrame is
+    staged to parquet; any other value (driver-side centroids, an index
+    artifact's directory) is kept as is. Every call, the first included,
+    returns the same shape with each frame read back from its stage
+    with the schema it was written with, so no inference job runs. A
+    call whose memo is incomplete on disk rebuilds. Builds that call
+    other stores count those stores' build time in their own."""
+    store = _STORES.get((name, key))
+    if store is not None and all(_complete(p) for p in store.parts):
+        store.served += 1
+    else:
+        t0 = time.perf_counter()
+        built = build()
+        many = isinstance(built, tuple)
+        parts = tuple(
+            _Staged(stage_to_parquet_path(v, name)[1], v.schema)
+            if isinstance(v, DataFrame)
+            else v
+            for v in (built if many else (built,))
+        )
+        store = _STORES[(name, key)] = _Store(parts, many, time.perf_counter() - t0)
+    out = tuple(
+        spark.read.schema(p.schema).parquet(p.path) if isinstance(p, _Staged) else p
+        for p in store.parts
+    )
+    return out if store.many else out[0]
+
+
+def store_builds() -> list[dict]:
+    """One record per build-once store: its name and key, the seconds
+    its last build took, and how many calls it has served since."""
+    return [
+        {"store": name, "key": str(key), "build_s": round(s.build_s, 3), "served": s.served}
+        for (name, key), s in _STORES.items()
+    ]

@@ -306,10 +306,12 @@ def test_appending_tools_print_only_the_rows_they_land(spark, tmp_path, capsys):
     assert spark.read.parquet(f"{store}/polyphen").count() == 3
 
 
-def test_writing_tools_count_the_rows_of_their_write(spark, tmp_path, capsys):
+def test_writing_tools_count_the_rows_of_their_write(spark, tmp_path, capsys, monkeypatch,
+                                                     count_jobs):
     """Vcf8ColConverter2, the *2Vcf exporters and VariantRatLoaderFromDb
     print the rows their write landed, observed on that write rather than
-    read back from the output."""
+    read back from the output. PolyphenFasta observes its written and
+    sequence-less counts on its one write and runs no job after it."""
     from tests.test_sideloaders_multimodal import VCF8
 
     vcf = tmp_path / "v8.vcf"
@@ -346,3 +348,63 @@ def test_writing_tools_count_the_rows_of_their_write(spark, tmp_path, capsys):
         n = written()
         assert n > 0 and printed == expected.format(n=n), argv[1]
     assert n == 3
+
+    results = tmp_path / "pp_results"
+    results.mkdir()
+    (results / "log.txt").write_text("".join(
+        f"ERROR: Unable to locate protein entry {acc} x\n" for acc in ("NP_1", "NP_2", "NP_9")
+    ))
+    dims = tmp_path / "pp_dims"
+    spark.createDataFrame(
+        [("NP_1", "M" * 75), ("NP_2", "KV"), ("NP_8", "AA")],
+        "protein_acc_id string, protein_seq string",
+    ).write.parquet(str(dims / "proteins.parquet"))
+    sc = spark.sparkContext
+    write_lines, at_write = cli._write_lines, []
+
+    def write_then_count(df, path):
+        write_lines(df, path)
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        at_write.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(cli, "_write_lines", write_then_count)
+    out = tmp_path / "fasta"
+    rc, jobs = count_jobs(cli.main, ["--tool", "PolyphenFasta", "--resultsDir", str(results),
+                                     "--outputDir", str(out), "--dims", str(dims)])
+    assert rc == 0 and at_write == [jobs]
+    assert capsys.readouterr().out.strip() == "fasta_written=2 no_sequence=1"
+    assert sorted(
+        r.value for r in spark.read.text(str(out)).collect() if r.value.startswith(">")
+    ) == [">NP_1", ">NP_2"]
+
+
+def test_variant_load3_probes_only_its_samples_details(spark, tmp_path, dims_root, capsys,
+                                                       monkeypatch):
+    """The sample-detail anti join reads only this call's -s ids' stored
+    details: its scan of the sample_id-partitioned table carries a
+    sample_id PartitionFilter."""
+    from rat_strain_loader_pipeline_spark.pipelines import load
+
+    vcf = tmp_path / "in.vcf"
+    vcf.write_text(VCF2)
+    cf2_dir = tmp_path / "cf2"
+    assert cli.main(["--tool", "VcfConverter2", "--vcfFile", str(vcf),
+                     "--outDir", str(cf2_dir), "--mapKey", "360"]) == 0
+    load_variants, probes = load.load_variants, []
+
+    def spy(derived, existing_v, existing_md, existing_sd, **kw):
+        probes.append(existing_sd)
+        return load_variants(derived, existing_v, existing_md, existing_sd, **kw)
+
+    monkeypatch.setattr(load, "load_variants", spy)
+    store = str(tmp_path / "store")
+    for sid, strain in ((7, "A"), (8, "B")):
+        assert cli.main(["--tool", "VariantLoad3", "--store", store, "--dims", dims_root,
+                         "--mapKey", "360", "-s", str(sid), "-i", str(cf2_dir / f"strain={strain}")]) == 0
+    capsys.readouterr()
+    jdf = probes[-1]._jdf
+    plan = jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    scan = [line for line in plan.splitlines() if line.startswith("PartitionFilters:")]
+    assert len(scan) == 1 and "sample_id" in scan[0], plan

@@ -83,3 +83,40 @@ def test_no_oracle_type_widening(duck):
             elif ts.startswith("DECIMAL") and col not in DECIMAL_ALLOWED.get(name, set()):
                 bad.append((name, col, ts))
     assert not bad, bad
+
+
+# The frozen driver contract: the sha256 of the sorted (name, oracle SQL)
+# pairs and of the sorted query names. A refactor of the entry module
+# must leave both byte-identical.
+CONTRACT_SHA256 = "53362420a021b6196b0a6b6267f2a6464efaebc49b86ed9a4c108274fb5d2266"
+NAMES_SHA256 = "8289ea1a600808709e6663a7b8c9e5913aa6147e42e797d0f07e7417af56e80a"
+
+
+def test_contract_pin():
+    import hashlib
+    import json
+
+    pairs = json.dumps(sorted(em.oracle_sql().items())).encode()
+    names = sorted(em.queries())
+    assert hashlib.sha256(pairs).hexdigest() == CONTRACT_SHA256
+    assert len(names) == 329
+    assert hashlib.sha256(json.dumps(names).encode()).hexdigest() == NAMES_SHA256
+
+
+def test_entry_module_keeps_one_store_pattern():
+    """Build-once stores go through ``staging.build_once`` only: the
+    entry module holds no module-level ``_*_PATHS`` memo and no
+    ``_SUCCESS`` probe of its own."""
+    import ast
+    import re
+
+    src = open(em.__file__).read()
+    memos = [
+        t.id
+        for node in ast.parse(src).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Name) and re.fullmatch(r"_\w*_PATHS", t.id)
+    ]
+    assert memos == []
+    assert '"_SUCCESS"' not in src and "'_SUCCESS'" not in src

@@ -21,6 +21,15 @@ def _plan(df, mode: str = "formatted") -> str:
     return je.explainString(jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode))
 
 
+def _store_dir(name: str, key, i: int = 0) -> str:
+    """Directory name of the ``i``-th staged frame of a build-once store."""
+    import os
+
+    from rat_strain_loader_pipeline_spark.staging import _STORES
+
+    return os.path.basename(_STORES[(name, key)].parts[i].path)
+
+
 @pytest.fixture(scope="module")
 def queries():
     import __spark_entry__ as em
@@ -852,7 +861,7 @@ def test_ivf_pq_serve_reads_only_index_artifact(spark, sf_dir, queries):
     assert "PushedFilters: [" in plan
     assert "CartesianProduct" not in plan
     # the index artifact is read from the persisted parquet path
-    path = em._IVF_INDEX_PATHS[sf_dir]
+    path = em._ivf_index_path(spark, sf_dir)
     assert path.split("/")[-1] in plan
 
 
@@ -1028,7 +1037,7 @@ def test_ivf_pq_residual_serve_reads_only_index_artifact(spark, sf_dir, queries)
     plan = _plan(df)
     assert plan.count("embeddings.parquet") == 0
     assert "CartesianProduct" not in plan
-    path = em._IVF_RESIDUAL_INDEX_PATHS[sf_dir]
+    path = em._ivf_residual_index_path(spark, sf_dir)
     assert path.split("/")[-1] in plan
 
 
@@ -1077,7 +1086,6 @@ def test_minhash_lsh_serves_store_and_matches_hermetic(spark, sf_dir, queries):
     minhash_lsh query's plan reads the staged store (zero
     documents.parquet scans) and its values are bit-identical to the
     hermetic inline minhash_lsh_pairs call."""
-    import __spark_entry__ as em
     from rat_strain_loader_pipeline_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
@@ -1086,7 +1094,7 @@ def test_minhash_lsh_serves_store_and_matches_hermetic(spark, sf_dir, queries):
     df = queries["minhash_lsh"](spark, sf_dir)
     plan = _plan(df)
     assert plan.count("documents.parquet") == 0
-    assert em._CC_STORE_PATHS[sf_dir][0].split("/")[-1] in plan
+    assert _store_dir("nd_pairs", sf_dir) in plan
     served = {
         (r["id_a"], r["id_b"]): r["jaccard_micros"] for r in df.collect()
     }
@@ -1107,7 +1115,6 @@ def test_cross_corpus_dedup_serves_store_and_matches_hermetic(
     reads the staged store (no per-call signature recomputation over
     either corpus half: zero documents.parquet scans), and the values
     are bit-identical to the hermetic minhash_lsh_cross_pairs run."""
-    import __spark_entry__ as em
     from rat_strain_loader_pipeline_spark.operators.dedup import (
         minhash_lsh_cross_pairs,
     )
@@ -1116,8 +1123,7 @@ def test_cross_corpus_dedup_serves_store_and_matches_hermetic(
     df = queries["cross_corpus_dedup"](spark, sf_dir)
     plan = _plan(df)
     assert plan.count("documents.parquet") == 0
-    pairs_path = em._CC_STORE_PATHS[sf_dir][0]
-    assert pairs_path.split("/")[-1] in plan
+    assert _store_dir("nd_pairs", sf_dir) in plan
     served = {
         (r["id_new"], r["id_old"]): r["jaccard_micros"] for r in df.collect()
     }
@@ -1150,7 +1156,7 @@ def test_ivf_pq_residual_opq_serve_matches_hermetic_and_reads_artifact(
     plan = _plan(df)
     assert plan.count("embeddings.parquet") == 0
     assert "CartesianProduct" not in plan
-    path = em._IVF_RESIDUAL_OPQ_INDEX_PATHS[sf_dir]
+    path = em._ivf_residual_opq_index_path(spark, sf_dir)
     assert path.split("/")[-1] in plan
     assert "-opq" in path.split("/")[-1]
     assert path != em._ivf_residual_index_path(spark, sf_dir)
@@ -1213,7 +1219,7 @@ def test_reindex_serves_from_stored_artifact(spark, sf_dir, queries):
     import __spark_entry__ as em
 
     plan = _plan(queries["ivf_pq_reindex_drifted"](spark, sf_dir))
-    path = em._IVF_RESIDUAL_EVEN_INDEX_PATHS[sf_dir]
+    path = em._ivf_residual_even_index_path(spark, sf_dir)
     assert path.split("/")[-1] in plan
 
 
@@ -1230,12 +1236,12 @@ def test_pq_exhaustive_serve_reads_only_index_artifact(spark, sf_dir, queries):
         plan = _plan(queries[name](spark, sf_dir))
         assert plan.count("embeddings.parquet") == 0, name
         assert "CartesianProduct" not in plan, name
-        path = em._PQ_EXH_INDEX_PATHS[(sf_dir, opq)]
+        path = em._pq_exh_index_path(spark, sf_dir, opq)
         assert path.split("/")[-1] in plan, name
     # raw and OPQ artifacts must never alias each other's path
     assert (
-        em._PQ_EXH_INDEX_PATHS[(sf_dir, False)]
-        != em._PQ_EXH_INDEX_PATHS[(sf_dir, True)]
+        em._pq_exh_index_path(spark, sf_dir, False)
+        != em._pq_exh_index_path(spark, sf_dir, True)
     )
 
 
@@ -1300,13 +1306,10 @@ def test_unigram_queries_serve_from_model_store(spark, sf_dir, queries):
     """The unigram train/apply pair reads the build-once model store
     (the staged parquet path appears in the plan) — the hard-EM fit
     runs at most once per process, not per call."""
-    import __spark_entry__ as em
-
     plan = _plan(queries["unigram_train"](spark, sf_dir))
-    path = em._UNIGRAM_MODEL_PATHS[sf_dir]
-    assert path.split("/")[-1] in plan
+    assert _store_dir("unigram_model", sf_dir) in plan
     plan = _plan(queries["unigram_apply"](spark, sf_dir))
-    assert path.split("/")[-1] in plan
+    assert _store_dir("unigram_model", sf_dir) in plan
 
 
 def test_ivf_pq_opq_no_cartesian_and_broadcast_map(spark, sf_dir, queries):
@@ -1397,7 +1400,6 @@ def test_dedup_components_serve_cc_store_and_match_hermetic(
     of the staged component parquet (no documents.parquet scan, no
     per-call label propagation), and the values are bit-identical to a
     hermetic connected_components(minhash_lsh_pairs(docs, 0.5)) run."""
-    import __spark_entry__ as em
     from rat_strain_loader_pipeline_spark.operators.dedup import (
         connected_components,
         minhash_lsh_pairs,
@@ -1407,7 +1409,7 @@ def test_dedup_components_serve_cc_store_and_match_hermetic(
     df = queries["dedup_components"](spark, sf_dir)
     plan = _plan(df)
     assert plan.count("documents.parquet") == 0
-    assert em._FULL_CC_PATHS[sf_dir].split("/")[-1] in plan
+    assert _store_dir("full_cc", sf_dir) in plan
     served = {(r["doc_id"], r["component_id"]) for r in df.collect()}
     docs = read_table(spark, sf_dir, "documents")
     hermetic = {
@@ -1438,7 +1440,7 @@ def test_bpe_queries_serve_model_store_and_match_hermetic(
     train_df = queries["bpe_train"](spark, sf_dir)
     train_plan = _plan(train_df)
     assert train_plan.count("documents.parquet") == 0
-    assert em._BPE_STORE_PATHS[sf_dir][0].split("/")[-1] in train_plan
+    assert _store_dir("bpe_store", sf_dir, 0) in train_plan
 
     docs = read_table(spark, sf_dir, "documents")
     served_merges = {tuple(r) for r in train_df.collect()}
@@ -1452,7 +1454,7 @@ def test_bpe_queries_serve_model_store_and_match_hermetic(
     # apply serves the vocab from the store: exactly ONE documents scan
     # (the token explode), none for training
     assert apply_plan.count("documents.parquet") == 1
-    assert em._BPE_STORE_PATHS[sf_dir][1].split("/")[-1] in apply_plan
+    assert _store_dir("bpe_store", sf_dir, 1) in apply_plan
     served_apply = {tuple(r) for r in apply_df.collect()}
     hermetic_apply = {
         tuple(r) for r in bpe_apply(docs, rounds=em.BPE_ROUNDS).collect()
@@ -1484,3 +1486,14 @@ def test_upsert_markers_add_no_exchange_or_sort(spark, distributed):
     plain, marked = shape(), shape(mark_first="sample_id")
     assert marked[:2] == plain[:2], (plain, marked)
     assert marked[2] == plain[2] + 1
+
+
+def test_served_store_calls_run_no_job(spark, sf_dir, count_jobs):
+    """A served build-once store call reads its stage with the schema it
+    was written with: no footer-inference job, no job at all."""
+    import __spark_entry__ as em
+
+    for store in (em._kmeans_assign, em._bpe_store, em._shingle_store):
+        store(spark, sf_dir)
+        _, jobs = count_jobs(store, spark, sf_dir)
+        assert jobs == 0, store.__name__

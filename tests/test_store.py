@@ -287,3 +287,61 @@ def test_write_guard_rejects_undeclared_columns_and_types(spark, tmp_path):
     write_table(spark.createDataFrame([(1, "1", 0.5)], "position int, chr string, s float"),
                 root, "conservation")
     assert read_table(spark, root, "conservation").count() == 1
+
+
+def test_build_once_serves_without_a_job_and_rebuilds_when_incomplete(
+    spark, tmp_path, count_jobs
+):
+    """``build_once`` builds once per (name, key), serves every later
+    call from its stage with the written schema (no job), keeps values
+    that are not frames, and rebuilds once a completion marker is gone:
+    a staged frame's ``_SUCCESS``, or an index artifact's
+    ``codes/_SUCCESS``."""
+    from rat_strain_loader_pipeline_spark.staging import _STORES, build_once, store_builds
+
+    index = tmp_path / "index"
+    calls = []
+
+    def build():
+        calls.append(1)
+        (index / "codes").mkdir(parents=True, exist_ok=True)
+        (index / "codes" / "_SUCCESS").touch()
+        return _non_nullable(spark), str(index), 42
+
+    key = str(tmp_path)
+    (built, path, value), _ = count_jobs(build_once, spark, "t", key, build)
+    (served, path2, value2), jobs = count_jobs(build_once, spark, "t", key, build)
+    assert (len(calls), jobs, path2, value2) == (1, 0, path, 42)
+    assert served.schema.json() == built.schema.json()
+    assert sorted(served.collect()) == sorted(_non_nullable(spark).collect())
+    record = next(r for r in store_builds() if (r["store"], r["key"]) == ("t", key))
+    assert record["served"] == 1
+
+    os.remove(os.path.join(_STORES[("t", key)].parts[0].path, "_SUCCESS"))
+    build_once(spark, "t", key, build)
+    assert len(calls) == 2
+    os.remove(index / "codes" / "_SUCCESS")
+    build_once(spark, "t", key, build)
+    assert len(calls) == 3
+    assert build_once(spark, "t", key, build)[2] == 42 and len(calls) == 3
+
+
+def test_spread_table_is_served_without_a_job(spark, tmp_path, count_jobs):
+    """A dense single-file table is restaged once per session; a repeat
+    ``read_table`` reads the staged copy with its written schema (no
+    inference job) and the same rows."""
+    from rat_strain_loader_pipeline_spark.sources.tables import read_table as read_source
+
+    spark.range(200_000).select("id", F.xxhash64("id").alias("h")).coalesce(1).write.parquet(
+        str(tmp_path / "w")
+    )
+    flat = tmp_path / "flat"
+    flat.mkdir()
+    os.rename(next((tmp_path / "w").glob("*.parquet")), flat / "t.parquet")
+    assert os.path.getsize(flat / "t.parquet") > 512 * 1024
+
+    first, _ = count_jobs(read_source, spark, str(flat), "t")
+    again, jobs = count_jobs(read_source, spark, str(flat), "t")
+    assert jobs == 0
+    assert again.rdd.getNumPartitions() > 1
+    assert sorted(again.collect()) == sorted(spark.read.parquet(str(flat / "t.parquet")).collect())

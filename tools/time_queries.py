@@ -1,5 +1,5 @@
 """Time a subset of declared queries with bench.py's exact methodology
-(same session, same warmup, fn + count, one run unless N given).
+(the same ``prepare_session`` preamble, then fn + count once per query).
 
 Usage: python tools/time_queries.py q1 q2 ...   [env: SPARK_GRAFT_SF_DIR]
 """
@@ -18,39 +18,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entry_mod
+    from bench import prepare_session
     from rat_strain_loader_pipeline_spark.session import get_spark
-    from rat_strain_loader_pipeline_spark.ship import ensure_shipped
-    from rat_strain_loader_pipeline_spark.sources.tables import read_table
 
     spark = get_spark("time-queries")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
-
-    spark.range(1).count()
-    for t in ("lineitem", "orders", "customer", "part", "supplier",
-              "events", "documents", "embeddings"):
-        read_table(spark, sf_dir, t).count()
-    ensure_shipped(spark)
-
-    def _ident(it):
-        import rat_strain_loader_pipeline_spark.operators.consequence  # noqa: F401
-        import rat_strain_loader_pipeline_spark.operators.dedup  # noqa: F401
-
-        yield from it
-
-    spark.range(100_000).repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_ident, "id long").count()
-
-    # one shared list with bench.py (advisor r12: hand-duplicated copies
-    # can silently diverge on what warmup covers)
-    for warm in entry_mod.WARMUP_STORES:
-        try:
-            getattr(entry_mod, warm)(spark, sf_dir)
-        except AttributeError:
-            pass
-        except Exception as e:
-            print(f"warmup {warm}: {e}", file=sys.stderr)
+    prepare_session(spark, sf_dir)
 
     for name in names:
         t0 = time.perf_counter()
