@@ -2886,7 +2886,7 @@ def q_consequence_indel_utr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "conseq-indel",
     )
-    patched, _counters = frameshift_fixup(vt, variants, count_changes=False)
+    patched, _counters = frameshift_fixup(vt, variants)
     return patched.select(*_VT_OUT_COLS)
 
 
@@ -3189,7 +3189,7 @@ def q_num_alleles_fixup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vmd = li.select(
         rgd, F.lit("1").alias("chromosome"), (k % 1000).cast("long").alias("start_pos")
     ).dropDuplicates(["rgd_id"])
-    out, _counters = num_alleles_fixup(vsd, vmd, count_changes=False)
+    out, _counters = num_alleles_fixup(vsd, vmd)
     return out.select("rgd_id", "sample_id", "zygosity_ref_allele", "zygosity_num_allele")
 
 
@@ -3662,7 +3662,7 @@ def q_variant_type_fixup(spark: SparkSession, sf_dir: str) -> DataFrame:
         var.alias("var_nuc"),
         F.lit("snv").alias("variant_type"),  # stale value to be recomputed
     ).dropDuplicates(["rgd_id"])
-    out, _counters = variant_type_fixup(variant, count_changes=False)
+    out, _counters = variant_type_fixup(variant)
     return out.select("rgd_id", "ref_nuc", "var_nuc", "variant_type")
 
 
@@ -3692,7 +3692,7 @@ def q_genic_status_fixup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (gstart + 150).cast("long").alias("stop_pos"),
         F.when(sk % 5 == 0, "RETIRED").otherwise("ACTIVE").alias("object_status"),
     )
-    out, _counters = genic_status_fixup(vmd, genes, count_changes=False)
+    out, _counters = genic_status_fixup(vmd, genes)
     return out.select("rgd_id", "chromosome", "start_pos", "end_pos", "genic_status")
 
 
@@ -3714,7 +3714,7 @@ def q_zygosity_poss_error_fixup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pct.alias("zygosity_percent_read"),
         F.lit("N").alias("zygosity_poss_error"),  # stale
     ).dropDuplicates(["rgd_id"])
-    out, _counters = zygosity_poss_error_fixup(vsd, count_changes=False)
+    out, _counters = zygosity_poss_error_fixup(vsd)
     return out.select("rgd_id", "zygosity_percent_read", "zygosity_poss_error")
 
 
@@ -3887,7 +3887,7 @@ def q_frameshift_fixup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(ln % 4 == 0, F.lit(None).cast("string")).otherwise(F.lit("M")).alias("ref_aa"),
         F.lit("F").alias("frameshift"),  # stale value to be recomputed
     ).dropDuplicates(["variant_rgd_id", "transcript_rgd_id"])
-    out, _counters = frameshift_fixup(vt, variant, count_changes=False)
+    out, _counters = frameshift_fixup(vt, variant)
     return out.select("variant_rgd_id", "transcript_rgd_id", "ref_aa", "frameshift")
 
 

@@ -335,67 +335,35 @@ def polyphen_loader(argv):
 
 # -------------------------------------------------------------------- fixups
 
-def _run_fixup(name, compute):
-    """Run a fixup and print its counters. The fixup returns its patched
-    rows already staged (the patched plan must not read the parquet path
-    it is about to truncate), so the caller overwrites the table with
-    them."""
-    patched, counters = compute()
-    print(f"{name}: " + " ".join(f"{k}={v}" for k, v in counters.items()))
-    return patched
+def _fixup_tool(name: str, fixup: str, *tables: str, dims: str | None = None) -> None:
+    """Register a fixup tool: it reads ``tables`` from ``--store`` (and
+    the ``dims`` table from ``--dims``), commits the patched table back
+    with one write (``store.commit_table``) and prints the counters the
+    fixup observed on that write."""
+
+    def run(argv):
+        p = argparse.ArgumentParser(prog=name)
+        p.add_argument("--store", required=True)
+        if dims:
+            p.add_argument("--dims", required=True)
+        a = p.parse_args(argv)
+        from rat_strain_loader_pipeline_spark.pipelines import fixups
+        from rat_strain_loader_pipeline_spark.store import read_table
+
+        spark = _spark(name.lower())
+        inputs = [read_table(spark, a.store, t) for t in tables]
+        if dims:
+            inputs.append(_dims(spark, a.dims, dims))
+        # looked up at call time, so a wrapper put on the module is called
+        _, counters = getattr(fixups, fixup)(*inputs, a.store)
+        print(f"{name}: " + " ".join(f"{k}={v}" for k, v in counters.items()))
+
+    TOOLS[name] = run
 
 
-@tool("VariantTypeFixUp")
-def variant_type_fixup_tool(argv):
-    p = argparse.ArgumentParser(prog="VariantTypeFixUp")
-    p.add_argument("--store", required=True)
-    a = p.parse_args(argv)
-    from rat_strain_loader_pipeline_spark.pipelines.fixups import variant_type_fixup
-    from rat_strain_loader_pipeline_spark.store import read_table, write_table
-
-    spark = _spark("variant-type-fixup")
-    patched = _run_fixup(
-        "VariantTypeFixUp", lambda: variant_type_fixup(read_table(spark, a.store, "variant"))
-    )
-    write_table(patched, a.store, "variant", mode="overwrite")
-
-
-@tool("FrameShiftFixUp")
-def frameshift_fixup_tool(argv):
-    p = argparse.ArgumentParser(prog="FrameShiftFixUp")
-    p.add_argument("--store", required=True)
-    a = p.parse_args(argv)
-    from rat_strain_loader_pipeline_spark.pipelines.fixups import frameshift_fixup
-    from rat_strain_loader_pipeline_spark.store import read_table, write_table
-
-    spark = _spark("frameshift-fixup")
-    patched = _run_fixup(
-        "FrameShiftFixUp",
-        lambda: frameshift_fixup(
-            read_table(spark, a.store, "variant_transcript"),
-            read_table(spark, a.store, "variant"),
-        ),
-    )
-    write_table(patched, a.store, "variant_transcript", mode="overwrite")
-
-
-@tool("GenicStatusFixUp")
-def genic_status_fixup_tool(argv):
-    p = argparse.ArgumentParser(prog="GenicStatusFixUp")
-    p.add_argument("--store", required=True)
-    p.add_argument("--dims", required=True)
-    a = p.parse_args(argv)
-    from rat_strain_loader_pipeline_spark.pipelines.fixups import genic_status_fixup
-    from rat_strain_loader_pipeline_spark.store import read_table, write_table
-
-    spark = _spark("genic-status-fixup")
-    patched = _run_fixup(
-        "GenicStatusFixUp",
-        lambda: genic_status_fixup(
-            read_table(spark, a.store, "variant_map_data"), _dims(spark, a.dims, "genes")
-        ),
-    )
-    write_table(patched, a.store, "variant_map_data", mode="overwrite")
+_fixup_tool("VariantTypeFixUp", "variant_type_fixup", "variant")
+_fixup_tool("FrameShiftFixUp", "frameshift_fixup", "variant_transcript", "variant")
+_fixup_tool("GenicStatusFixUp", "genic_status_fixup", "variant_map_data", dims="genes")
 
 
 # ----------------------------------------------------------------- exporters

@@ -13,8 +13,10 @@ metrics as a SYSTEM_LOG-shaped row.
 
 Callers, each observing on the write that lands the rows:
 
-- ``pipelines.fixups._apply``: rows total and fixed, on the stage write
-  of the patched rows;
+- ``pipelines.fixups._apply``: rows total and fixed, on the write that
+  commits the patched table;
+- ``store.compact_table``: the rows, on the write that commits the
+  compacted table;
 - ``pipelines.load.load_variants``: rows in, rows already in RGD and the
   new-id span, on the ``load-with-ids`` stage write;
 - ``cli._counted``: the ``rows=`` (VcfConverter2),

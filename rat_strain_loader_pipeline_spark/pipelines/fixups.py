@@ -6,18 +6,20 @@ patches rows that disagree, reporting up-to-date vs fixed counts
 GenicStatusFixUp.java:52-87, NumAllelesFixUp.java:46-109,
 ZygosityPercReadFixUp.java:60-117).
 
-Spark-first: recompute the column, compare, and overwrite — a fixup is
+Spark-first: recompute the column, compare, and replace — a fixup is
 ``recompute(derivation).withColumn(changed)``. Running any fixup twice
 changes nothing (idempotence — the engine's own consistency check).
-Each returns (patched_df, counters). With ``count_changes=True`` the
-patched rows are already staged to parquet and the counters are
-complete: they are observed on that stage write, so reporting them runs
-no Spark job of its own.
+Each returns (patched_df, counters). Given a ``store`` root, a fixup
+commits the patched rows as the next version of its table there
+(``store.commit_table``, one write) and returns that table with its
+counters complete: they are observed on the commit's write, so
+reporting them runs no Spark job of its own. Without one, the patched
+rows stay lazy and the counters are empty.
 
 The standalone UpdateVariantStatus tool (UpdateVariantStatus.java:15-66,
 batched ``UPDATE variant SET genic_status`` by id list, batch 1000) is
 subsumed by ``genic_status_fixup``: under Spark the id-list UPDATE is the
-same recompute-and-overwrite join, and JDBC batching is a sink option.
+same recompute-and-commit join, and JDBC batching is a sink option.
 """
 
 from __future__ import annotations
@@ -31,19 +33,21 @@ from rat_strain_loader_pipeline_spark.observe import with_counters
 from rat_strain_loader_pipeline_spark.operators.interval_join import (
     point_in_interval_flag,
 )
-from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
+from rat_strain_loader_pipeline_spark.store import commit_table, read_table
+
+Fixed = tuple[DataFrame, dict[str, int]]  # (patched rows, counters)
 
 
 def _apply(
-    df: DataFrame, col: str, recomputed, count_changes: bool = True,
+    df: DataFrame, col: str, recomputed, table: str, store: str | None,
     drop: tuple[str, ...] = (),
-) -> tuple[DataFrame, dict[str, int]]:
+) -> Fixed:
     out = df.withColumn("__new", recomputed)
-    if not count_changes:
+    if store is None:
         # callers that only consume the patched rows get them lazily, so
         # the whole fixup stays a single pass inside their own action
         return out.withColumn(col, F.col("__new")).drop("__new", *drop), {}
-    # both counters ride on the stage write that lands the patched rows
+    # both counters ride on the write that commits the patched table
     # (the K7 counters the reference increments while it writes); a
     # separate aggregate would execute the upstream plan — possibly a
     # join or a whole pandas-UDF pipeline — a second time
@@ -53,29 +57,23 @@ def _apply(
         total=F.count(F.lit(1)),
         changed=F.sum((~F.col(col).eqNullSafe(F.col("__new"))).cast("long")),
     )
-    patched = stage_to_parquet(
-        observed.withColumn(col, F.col("__new")).drop("__new", *drop), f"fixup-{col}"
-    )
+    commit_table(observed.withColumn(col, F.col("__new")).drop("__new", *drop), store, table)
     row = obs.get
     total, changed = int(row["total"]), int(row["changed"] or 0)
-    return patched, {"rows_total": total, "rows_fixed": changed, "rows_up_to_date": total - changed}
+    return read_table(df.sparkSession, store, table), {
+        "rows_total": total, "rows_fixed": changed, "rows_up_to_date": total - changed,
+    }
 
 
-def variant_type_fixup(
-    variant: DataFrame, count_changes: bool = True
-) -> tuple[DataFrame, dict[str, int]]:
+def variant_type_fixup(variant: DataFrame, store: str | None = None) -> Fixed:
     """X1 recompute from ref_nuc/var_nuc (VariantTypeFixUp.java:47-63)."""
-    return _apply(
-        variant,
-        "variant_type",
-        variant_type(F.col("ref_nuc"), F.col("var_nuc")),
-        count_changes,
-    )
+    recomputed = variant_type(F.col("ref_nuc"), F.col("var_nuc"))
+    return _apply(variant, "variant_type", recomputed, "variant", store)
 
 
 def frameshift_fixup(
-    variant_transcript: DataFrame, variant: DataFrame, count_changes: bool = True
-) -> tuple[DataFrame, dict[str, int]]:
+    variant_transcript: DataFrame, variant: DataFrame, store: str | None = None
+) -> Fixed:
     """X15 recompute from the RAW alleles (FrameShiftFixUp.java:55-69) —
     corrects the post-processing truncation quirk. Only rows that carry
     AA annotation (ref_aa set) get a frameshift value."""
@@ -96,12 +94,13 @@ def frameshift_fixup(
         F.col("ref_aa").isNotNull(),
         F.when((F.col("__ld") % 3) != 0, "T").otherwise("F"),
     ).otherwise(F.col("frameshift"))
-    return _apply(joined, "frameshift", recomputed, count_changes, drop=("__ld",))
+    return _apply(joined, "frameshift", recomputed, "variant_transcript", store,
+                  drop=("__ld",))
 
 
 def genic_status_fixup(
-    variant_map_data: DataFrame, genes: DataFrame, count_changes: bool = True
-) -> tuple[DataFrame, dict[str, int]]:
+    variant_map_data: DataFrame, genes: DataFrame, store: str | None = None
+) -> Fixed:
     """X6 recompute via gene interval overlap (GenicStatusFixUp.java:103-109)."""
     active = genes.filter(F.col("object_status") == "ACTIVE").select(
         F.col("chromosome").alias("g_chr"),
@@ -115,20 +114,14 @@ def genic_status_fixup(
         probe_keys=("chromosome", "start_pos", "end_pos"),
         interval_keys=("g_chr", "g_start", "g_stop"),
     )
-    return _apply(
-        flagged,
-        "genic_status",
-        F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC"),
-        count_changes,
-        drop=("__genic",),
-    )
+    recomputed = F.when(F.col("__genic"), "GENIC").otherwise("INTERGENIC")
+    return _apply(flagged, "genic_status", recomputed, "variant_map_data", store,
+                  drop=("__genic",))
 
 
 def num_alleles_fixup(
-    variant_sample_detail: DataFrame,
-    variant_map_data: DataFrame,
-    count_changes: bool = True,
-) -> tuple[DataFrame, dict[str, int]]:
+    variant_sample_detail: DataFrame, variant_map_data: DataFrame, store: str | None = None
+) -> Fixed:
     """A7 recompute: zygosity_num_allele = number of distinct variants
     observed at the same (sample, chr, position), +1 if the reference
     allele was seen (NumAllelesFixUp.java:52-99) — the position-group
@@ -142,14 +135,12 @@ def num_alleles_fixup(
         + F.max(F.when(F.col("zygosity_ref_allele") == "Y", 1).otherwise(0)).over(w)
     ).cast("int")
     return _apply(
-        keyed, "zygosity_num_allele", recomputed, count_changes,
+        keyed, "zygosity_num_allele", recomputed, "variant_sample_detail", store,
         drop=("chromosome", "start_pos"),
     )
 
 
-def zygosity_poss_error_fixup(
-    variant_sample_detail: DataFrame, count_changes: bool = True
-) -> tuple[DataFrame, dict[str, int]]:
+def zygosity_poss_error_fixup(variant_sample_detail: DataFrame, store: str | None = None) -> Fixed:
     """Possible-error recompute from percent-read (threshold 15,
     ZygosityPercReadFixUp.java:130-138)."""
     recomputed = F.when(
@@ -157,4 +148,6 @@ def zygosity_poss_error_fixup(
         & (F.col("zygosity_percent_read") <= 15),
         "Y",
     ).otherwise("N")
-    return _apply(variant_sample_detail, "zygosity_poss_error", recomputed, count_changes)
+    return _apply(
+        variant_sample_detail, "zygosity_poss_error", recomputed, "variant_sample_detail", store
+    )

@@ -15,7 +15,11 @@ tables, and a 100 TB Spark deployment would land them in parquet/Delta.
 
 Stages are written under a per-process temp dir (``_stage_root``).
 Nothing deletes them, neither while the process runs nor after it
-exits: a long-lived process accumulates every stage it wrote.
+exits: a long-lived process accumulates every stage it wrote. On the
+CLI path those are ``VariantLoad3``'s ``derive-stage-a`` and
+``load-with-ids`` stages and post-processing's ``postprocess-vt``; the
+fixups stage nothing (they commit straight into the store with
+``store.commit_table``).
 
 The read-back passes the schema the stage was written with. Spark
 would otherwise infer it by reading the parquet footers back, which
@@ -84,6 +88,7 @@ class _Store:
     parts: tuple  # a _Staged per returned frame, else the value itself
     many: bool  # the build returned a tuple
     build_s: float
+    builds: int  # how many times it was built, rebuilds included
     served: int = 0
 
 
@@ -130,7 +135,9 @@ def build_once(
             else v
             for v in (built if many else (built,))
         )
-        store = _STORES[(name, key)] = _Store(parts, many, time.perf_counter() - t0)
+        store = _STORES[(name, key)] = _Store(
+            parts, many, time.perf_counter() - t0, (store.builds if store else 0) + 1
+        )
     out = tuple(
         spark.read.schema(p.schema).parquet(p.path) if isinstance(p, _Staged) else p
         for p in store.parts
@@ -140,8 +147,10 @@ def build_once(
 
 def store_builds() -> list[dict]:
     """One record per build-once store: its name and key, the seconds
-    its last build took, and how many calls it has served since."""
+    its last build took, how many times it was built, and how many calls
+    it has served since its last build."""
     return [
-        {"store": name, "key": str(key), "build_s": round(s.build_s, 3), "served": s.served}
+        {"store": name, "key": str(key), "build_s": round(s.build_s, 3), "builds": s.builds,
+         "served": s.served}
         for (name, key), s in _STORES.items()
     ]

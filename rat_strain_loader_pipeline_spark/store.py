@@ -15,10 +15,11 @@ the reference encodes procedurally:
 - ``variant`` (identity) has no placement columns by design (placement
   lives in variant_map_data, same as the reference schema) — unpartitioned.
 
-Writes append (the reference's INSERT batches); recompute-style fixups
-overwrite per-partition via ``overwrite_partitions`` with dynamic
-partition overwrite, the Spark image of the reference's batched
-UPDATE (K3) without rewriting untouched chromosomes.
+Writes append (the reference's INSERT batches). ``commit_table``
+replaces a table by one new version, swapped in atomically under the
+same path (the reference's transactional fixup UPDATEs, K3);
+``overwrite_partitions`` replaces only the partitions a frame holds
+(dynamic partition overwrite).
 
 The four variant-cycle tables have their schema declared once, in
 ``SCHEMAS`` (the ``schemas.py`` StructTypes). Reads pass it instead of
@@ -30,6 +31,12 @@ rather than being read back wrongly later.
 """
 
 from __future__ import annotations
+
+import math
+import os
+import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,18 +103,63 @@ def _check_declared(df: DataFrame, table: str) -> None:
         raise ValueError(f"{table}: columns do not match the declared schema: {', '.join(bad)}")
 
 
-def write_table(
-    df: DataFrame, root: str, table: str, mode: str = "append"
-) -> None:
-    """Append ``df`` into the store with the table's canonical
-    partitioning (columns not present are skipped, so projections of a
-    table can still land)."""
-    _check_declared(df, table)
+def _writer(df: DataFrame, table: str, mode: str):
+    """``df``'s writer with the table's canonical partitioning (columns
+    not present are skipped, so projections of a table can still land)."""
     cols = [c for c in PARTITIONING.get(table, ()) if c in df.columns]
     w = df.write.mode(mode)
-    if cols:
-        w = w.partitionBy(*cols)
-    w.parquet(_path(root, table))
+    return w.partitionBy(*cols) if cols else w
+
+
+def write_table(df: DataFrame, root: str, table: str) -> None:
+    """Append ``df`` into the store table."""
+    _check_declared(df, table)
+    _writer(df, table, "append").parquet(_path(root, table))
+
+
+def commit_table(df: DataFrame, root: str, table: str) -> None:
+    """Replace ``table``'s rows with ``df``'s as a new version of it.
+
+    ``df`` (which may read the table) is written with the table's
+    partitioning into a fresh sibling ``<table>.v<id>``, outside the
+    table path (so partition discovery and ``<table>/*`` globs, which
+    follow the link, see one version). One ``os.replace`` of a new
+    symlink then points the table path at it, atomically on POSIX, and
+    the version it replaced is deleted (that one only). A failed write
+    leaves the table as it was and no version behind. A plain table
+    directory (``write_table`` makes one; ``shutil.copytree`` copies a
+    link as one) is first renamed to a version, and the path is missing
+    until the swap: a plain table's first commit is the one non-atomic
+    step."""
+    _check_declared(df, table)
+    _commit(df, root, table)
+
+
+def _commit(df: DataFrame, root: str, table: str, **options) -> None:
+    path = _path(root, table)
+    version = f"{table}.v{uuid.uuid4().hex[:12]}"
+    try:
+        _writer(df, table, "errorifexists").options(**options).parquet(_path(root, version))
+    except BaseException:
+        # the failed job's other tasks are killed asynchronously and can
+        # still recreate their attempt directories: let them end first
+        tracker = df.sparkSession.sparkContext._jsc.sc().statusTracker()
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline and any(
+            e.numRunningTasks() for e in tracker.getExecutorInfos()
+        ):
+            time.sleep(0.05)
+        shutil.rmtree(_path(root, version), ignore_errors=True)
+        raise
+    link = _path(root, f".{version}.link")
+    os.symlink(version, link)
+    old = os.path.join(root, os.readlink(path)) if os.path.islink(path) else None
+    if old is None and os.path.isdir(path):
+        old = _path(root, f"{table}.v{uuid.uuid4().hex[:12]}")
+        os.rename(path, old)
+    os.replace(link, path)
+    if old is not None:
+        shutil.rmtree(old)
 
 
 def overwrite_partitions(df: DataFrame, root: str, table: str) -> None:
@@ -222,55 +274,38 @@ def compact_table(
     locality long before data volume does).
 
     Rewrites each partition directory (or the whole table when
-    unpartitioned) to ``ceil(rows / target_rows_per_file)`` files via a
-    per-partition coalesce. The staged write means a failed compaction
-    never corrupts the table, but the swap is TWO renames, so this is a
-    maintenance job for a quiesced table (single-writer, no concurrent
-    readers) — posix has no atomic directory exchange, and concurrent
-    scans could see a missing path between the renames. Content-
-    invariant: row multiset is untouched (pinned by test), only layout
-    changes.
+    unpartitioned) to ``ceil(rows / target_rows_per_file)`` files, as
+    one commit (see ``commit_table``). Content-invariant: the row
+    multiset is untouched (pinned by test), only the layout changes.
 
-    Returns {"files_before", "files_after", "rows"}.
+    Returns {"files_before", "files_after", "rows"}, the rows counted on
+    the commit's write.
     """
-    import math
-    import os
-    import shutil
-    import uuid
+    import pyarrow.parquet as pq
+
+    from rat_strain_loader_pipeline_spark.observe import with_counters
 
     path = _path(root, table)
 
     def _data_files(p: str) -> list[str]:
-        out = []
-        for dirpath, _dirs, files in os.walk(p):
-            out += [
-                os.path.join(dirpath, f)
-                for f in files
-                if not f.startswith(("_", ".")) and not f.endswith(".crc")
-            ]
-        return out
+        return [os.path.join(d, f) for d, _dirs, files in os.walk(p) for f in files
+                if not f.startswith(("_", ".")) and not f.endswith(".crc")]
 
-    before = len(_data_files(path))
+    before = _data_files(path)
     df = _read_as_stored(spark, root, table)
-    rows = df.count()
     parts = PARTITIONING.get(table, ())
-    staged = path + f".compact-{uuid.uuid4().hex[:8]}"
     if parts:
         # per-partition file budget: repartition on the partition columns
         # so each directory is written by few tasks, then let the writer
         # split at maxRecordsPerFile — no global single-partition funnel
-        (
-            df.repartition(*[F.col(c) for c in parts])
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", target_rows_per_file)
-            .partitionBy(*parts)
-            .parquet(staged)
-        )
+        df = df.repartition(*[F.col(c) for c in parts])
     else:
-        n_files = max(1, math.ceil(rows / target_rows_per_file))
-        df.coalesce(n_files).write.mode("overwrite").parquet(staged)
-    old = path + f".old-{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old)
-    return {"files_before": before, "files_after": len(_data_files(path)), "rows": rows}
+        # the budget needs the row count before the write: the footers
+        # hold it, read here in this process instead of in a Spark job
+        rows = sum(pq.read_metadata(f).num_rows for f in before)
+        df = df.coalesce(max(1, math.ceil(rows / target_rows_per_file)))
+    out, written = with_counters(df, f"compact-{table}", rows=F.count(F.lit(1)))
+    # the rows go back as stored, so the declared-schema check is skipped
+    _commit(out, root, table, maxRecordsPerFile=target_rows_per_file)
+    return {"files_before": len(before), "files_after": len(_data_files(path)),
+            "rows": written.get["rows"]}

@@ -137,7 +137,7 @@ def test_load_upsert_against_existing(spark):
     assert detail_ids == {556}
 
 
-def test_fixups_idempotent(spark):
+def test_fixups_idempotent(spark, tmp_path):
     variant = spark.createDataFrame(
         [
             (1, "A", "snv", "T"),
@@ -146,16 +146,17 @@ def test_fixups_idempotent(spark):
         ],
         "rgd_id long, ref_nuc string, variant_type string, var_nuc string",
     )
-    fixed, counters = variant_type_fixup(variant)
+    store = str(tmp_path)
+    fixed, counters = variant_type_fixup(variant, store)
     assert counters["rows_fixed"] == 1
     types = {r["rgd_id"]: r["variant_type"] for r in fixed.collect()}
     assert types == {1: "snv", 2: "ins", 3: "del"}
-    # idempotence: second run fixes nothing
-    _, counters2 = variant_type_fixup(fixed)
+    # idempotence: a second run over the committed table fixes nothing
+    _, counters2 = variant_type_fixup(fixed, store)
     assert counters2["rows_fixed"] == 0
 
 
-def test_frameshift_fixup_corrects_truncation_quirk(spark):
+def test_frameshift_fixup_corrects_truncation_quirk(spark, tmp_path):
     vt = spark.createDataFrame(
         [(10, 100, "Q", "R", "F"), (11, 100, None, None, None)],
         "variant_rgd_id long, transcript_rgd_id int, ref_aa string, var_aa string, frameshift string",
@@ -164,21 +165,21 @@ def test_frameshift_fixup_corrects_truncation_quirk(spark):
         [(10, None, "GG"), (11, "A", "T")],
         "rgd_id long, ref_nuc string, var_nuc string",
     )
-    fixed, counters = frameshift_fixup(vt, variant)
+    fixed, counters = frameshift_fixup(vt, variant, str(tmp_path))
     out = {r["variant_rgd_id"]: r["frameshift"] for r in fixed.collect()}
     assert out[10] == "T"  # 2-bp insertion IS a frameshift
     assert out[11] is None  # location-only rows untouched
     assert counters["rows_fixed"] == 1
-    _, c2 = frameshift_fixup(fixed, variant)
+    _, c2 = frameshift_fixup(fixed, variant, str(tmp_path))
     assert c2["rows_fixed"] == 0
 
 
-def test_genic_status_and_poss_error_fixups(spark):
+def test_genic_status_and_poss_error_fixups(spark, tmp_path):
     vmd = spark.createDataFrame(
         [(1, "1", 1000, 1001, None, "INTERGENIC", 360), (2, "1", 7000, 7001, None, "GENIC", 360)],
         "rgd_id long, chromosome string, start_pos long, end_pos long, padding_base string, genic_status string, map_key int",
     )
-    fixed, counters = genic_status_fixup(vmd, _genes(spark))
+    fixed, counters = genic_status_fixup(vmd, _genes(spark), str(tmp_path))
     out = {r["rgd_id"]: r["genic_status"] for r in fixed.collect()}
     assert out == {1: "GENIC", 2: "INTERGENIC"}  # both were wrong
     assert counters["rows_fixed"] == 2
@@ -187,13 +188,13 @@ def test_genic_status_and_poss_error_fixups(spark):
         [(1, 7, 15, "N"), (2, 7, 16, "Y"), (3, 7, None, "N")],
         "rgd_id long, sample_id int, zygosity_percent_read int, zygosity_poss_error string",
     )
-    fixed2, c2 = zygosity_poss_error_fixup(vsd)
+    fixed2, c2 = zygosity_poss_error_fixup(vsd, str(tmp_path))
     out2 = {r["rgd_id"]: r["zygosity_poss_error"] for r in fixed2.collect()}
     assert out2 == {1: "Y", 2: "N", 3: "N"}
     assert c2["rows_fixed"] == 2
 
 
-def test_num_alleles_fixup(spark):
+def test_num_alleles_fixup(spark, tmp_path):
     vmd = spark.createDataFrame(
         [(1, "1", 1000, 1001, None, "GENIC", 360), (2, "1", 1000, 1001, None, "GENIC", 360)],
         "rgd_id long, chromosome string, start_pos long, end_pos long, padding_base string, genic_status string, map_key int",
@@ -202,7 +203,7 @@ def test_num_alleles_fixup(spark):
         [(1, 7, "Y", 1), (2, 7, "N", 1)],
         "rgd_id long, sample_id int, zygosity_ref_allele string, zygosity_num_allele int",
     )
-    fixed, counters = num_alleles_fixup(vsd, vmd)
+    fixed, counters = num_alleles_fixup(vsd, vmd, str(tmp_path))
     out = {r["rgd_id"]: r["zygosity_num_allele"] for r in fixed.collect()}
     # 2 variants at same position + ref seen → 3 alleles
     assert out == {1: 3, 2: 3}
@@ -257,7 +258,8 @@ def test_derive_variants_multi_equals_per_sample(spark):
 # ------------------------------------------- counters observed on the writes
 
 def _fixup_cases(spark):
-    """(fixup, its inputs, the patched column, the row key) per fixup."""
+    """(fixup, its inputs, the patched column, the row key, the table it
+    commits) per fixup."""
     variant = spark.createDataFrame(
         [(1, "A", "snv", "T"), (2, None, "snv", "TT"), (3, "ACG", "del", None)],
         "rgd_id long, ref_nuc string, variant_type string, var_nuc string",
@@ -279,11 +281,15 @@ def _fixup_cases(spark):
         "zygosity_percent_read int, zygosity_poss_error string",
     )
     return [
-        (variant_type_fixup, (variant,), "variant_type", ["rgd_id"]),
-        (frameshift_fixup, (vt, variant), "frameshift", ["variant_rgd_id", "transcript_rgd_id"]),
-        (genic_status_fixup, (vmd, _genes(spark)), "genic_status", ["rgd_id"]),
-        (num_alleles_fixup, (vsd, vmd), "zygosity_num_allele", ["rgd_id", "sample_id"]),
-        (zygosity_poss_error_fixup, (vsd,), "zygosity_poss_error", ["rgd_id", "sample_id"]),
+        (variant_type_fixup, (variant,), "variant_type", ["rgd_id"], "variant"),
+        (frameshift_fixup, (vt, variant), "frameshift", ["variant_rgd_id", "transcript_rgd_id"],
+         "variant_transcript"),
+        (genic_status_fixup, (vmd, _genes(spark)), "genic_status", ["rgd_id"],
+         "variant_map_data"),
+        (num_alleles_fixup, (vsd, vmd), "zygosity_num_allele", ["rgd_id", "sample_id"],
+         "variant_sample_detail"),
+        (zygosity_poss_error_fixup, (vsd,), "zygosity_poss_error", ["rgd_id", "sample_id"],
+         "variant_sample_detail"),
     ]
 
 
@@ -298,29 +304,31 @@ def _separate_aggregate(before, patched, col, key):
     return {"rows_total": total, "rows_fixed": changed, "rows_up_to_date": total - changed}
 
 
-def test_fixup_counters_observed_on_the_stage_write(spark, count_jobs):
-    """With count_changes=True each fixup returns its rows staged and its
-    counters complete, equal to a separate aggregate, in no more Spark
-    jobs than staging the lazily patched rows takes; on an empty table
-    every counter is 0."""
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
+def test_fixup_counters_observed_on_the_commit_write(spark, tmp_path, count_jobs):
+    """Given a store, each fixup commits its patched table in exactly the
+    Spark jobs that committing the lazily patched rows takes, so no job
+    runs after the write; it returns the table as stored, and its
+    counters equal a separate aggregate. On an empty table every counter
+    is 0."""
+    from rat_strain_loader_pipeline_spark.store import commit_table
 
-    for fixup, inputs, col, key in _fixup_cases(spark):
-        lazy, none = fixup(*inputs, count_changes=False)
+    for i, (fixup, inputs, col, key, table) in enumerate(_fixup_cases(spark)):
+        lazy, none = fixup(*inputs)
         assert none == {}
-        (staged, counters), jobs = count_jobs(fixup, *inputs)
-        _, stage_jobs = count_jobs(stage_to_parquet, lazy)
-        assert jobs == stage_jobs, fixup.__name__
+        (fixed, counters), jobs = count_jobs(fixup, *inputs, str(tmp_path / f"fixed{i}"))
+        _, commit_jobs = count_jobs(commit_table, lazy, str(tmp_path / f"lazy{i}"), table)
+        assert jobs == commit_jobs, fixup.__name__
         assert counters == _separate_aggregate(inputs[0], lazy, col, key), fixup.__name__
         assert counters["rows_total"] == 3
-        assert staged.inputFiles()  # a parquet stage, not the lazy plan
-        assert sorted(map(repr, staged.collect())) == sorted(map(repr, lazy.collect()))
-        assert staged.columns == lazy.columns
+        assert fixed.inputFiles()  # the committed version, not the lazy plan
+        assert sorted(map(repr, fixed.select(*lazy.columns).collect())) == sorted(
+            map(repr, lazy.collect())
+        )
 
         empty = (inputs[0].filter(F.lit(False)),) + inputs[1:]
-        staged, counters = fixup(*empty)
+        fixed, counters = fixup(*empty, str(tmp_path / f"empty{i}"))
         assert counters == {"rows_total": 0, "rows_fixed": 0, "rows_up_to_date": 0}
-        assert staged.count() == 0
+        assert fixed.count() == 0
 
 
 def _cf2_two_samples(spark):

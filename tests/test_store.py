@@ -1,9 +1,11 @@
-"""Canonical store: partition layout, pruning, dynamic overwrite."""
+"""Canonical store: partition layout, pruning, dynamic overwrite, versioned commits."""
 
 from __future__ import annotations
 
 import datetime
 import os
+import threading
+import time
 from decimal import Decimal
 
 import pytest
@@ -11,6 +13,8 @@ from pyspark.sql import functions as F
 
 from rat_strain_loader_pipeline_spark.staging import stage_to_parquet_path
 from rat_strain_loader_pipeline_spark.store import (
+    commit_table,
+    compact_table,
     overwrite_partitions,
     read_table,
     write_table,
@@ -92,8 +96,6 @@ def test_bucketed_store_elides_store_side_shuffle(spark, tmp_path):
 def test_compact_table_content_invariant(spark, tmp_path):
     """Compaction shrinks the file count without touching the row
     multiset, for both unpartitioned and partitioned tables."""
-    from rat_strain_loader_pipeline_spark.store import compact_table, read_table
-
     root = str(tmp_path)
     # unpartitioned: 20 tiny appends
     for i in range(20):
@@ -127,8 +129,6 @@ def test_compact_table_keeps_partition_values(spark, tmp_path, count_jobs):
     had: ``chromosome=01`` stays ``01`` beside ``chromosome=2`` (an
     inferring read types both as int and rewrites them as ``1`` and
     ``2``), and the read that feeds it runs no inference job."""
-    from rat_strain_loader_pipeline_spark.store import compact_table
-
     root = str(tmp_path / "store")
     for _ in range(3):
         write_table(_vmd(spark, "01", "GENIC"), root, "variant_map_data")
@@ -143,11 +143,101 @@ def test_compact_table_keeps_partition_values(spark, tmp_path, count_jobs):
     after = sorted(map(tuple, read_table(spark, root, "variant_map_data").collect()))
     assert after == before and stats["rows"] == 30
     assert stats["files_after"] < stats["files_before"]
-    # the row count and the repartitioned write; no footer-inference job
+    # the repartitioned write alone (its shuffle and its write, as many
+    # jobs as a count's two stages): no count job, no footer-inference job
     _, plain = count_jobs(
         lambda: read_table(spark, root, "variant_map_data").count()
     )
-    assert jobs <= plain + 2, jobs
+    assert jobs <= plain, jobs
+
+
+def _rows(spark, root, table):
+    return sorted(map(tuple, read_table(spark, root, table).collect()))
+
+
+def test_commit_keeps_one_version_and_leaves_other_names(spark, tmp_path):
+    """A commit over a plain table directory and one over a committed
+    table each leave the table a link to exactly one version; a sibling
+    that merely looks like a version is left alone."""
+    root = tmp_path / "store"
+    table = root / "variant_map_data"
+    write_table(_vmd(spark, "01", "INTERGENIC"), str(root), "variant_map_data")
+    (root / "variant_map_data.v0").mkdir()
+    (root / "variant_map_data.v0" / "keep").write_text("x")
+    versions = []
+    for genic in ("GENIC", "INTERGENIC"):
+        commit_table(_vmd(spark, "01", genic), str(root), "variant_map_data")
+        versions.append(os.readlink(table))
+        assert sorted(os.listdir(root)) == sorted(
+            ["variant_map_data", versions[-1], "variant_map_data.v0"]
+        )
+        assert "_SUCCESS" in os.listdir(table)
+        assert {(r["chromosome"], r["genic_status"])
+                for r in read_table(spark, str(root), "variant_map_data").collect()} == {
+            ("01", genic)
+        }
+    assert versions[0] != versions[1]
+    assert (root / "variant_map_data.v0" / "keep").read_text() == "x"
+
+
+def test_failed_commit_leaves_the_table_and_no_version(spark, tmp_path):
+    """A commit whose write fails on a row changes nothing: the table
+    keeps its rows, plain or committed, and no version is left behind."""
+    root = str(tmp_path / "store")
+    write_table(_vmd(spark, "1", "GENIC"), root, "variant_map_data")
+    for _ in range(2):  # over the plain directory, then over a committed table
+        before, listing = _rows(spark, root, "variant_map_data"), sorted(os.listdir(root))
+        bad = read_table(spark, root, "variant_map_data").withColumn(
+            "genic_status",
+            F.when(F.col("rgd_id") == 3, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("genic_status")),
+        )
+        with pytest.raises(Exception, match="boom"):
+            commit_table(bad, root, "variant_map_data")
+        assert sorted(os.listdir(root)) == listing
+        assert _rows(spark, root, "variant_map_data") == before
+        commit_table(read_table(spark, root, "variant_map_data"), root, "variant_map_data")
+
+
+def test_readers_see_one_whole_version_during_commits(spark, tmp_path):
+    """A thread lists the table path while a fixup tool and a compaction
+    replace the table: every listing is one committed version's whole
+    file set, ``_SUCCESS`` included, never a missing or partial table."""
+    from rat_strain_loader_pipeline_spark import cli
+
+    root = str(tmp_path / "store")
+    path = os.path.join(root, "variant")
+    for i in range(4):
+        write_table(spark.createDataFrame(
+            [(i * 10 + j, "A", "ins", "T") for j in range(5)],
+            "rgd_id long, ref_nuc string, variant_type string, var_nuc string",
+        ), root, "variant")
+    compact_table(spark, root, "variant")  # the plain table's first commit
+    versions, seen, stop = [frozenset(os.listdir(path))], [], threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            try:
+                seen.append(frozenset(os.listdir(path)))
+            except OSError as e:
+                seen.append(e)
+            time.sleep(0.001)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        assert cli.main(["--tool", "VariantTypeFixUp", "--store", root]) == 0
+        versions.append(frozenset(os.listdir(path)))
+        compact_table(spark, root, "variant")
+        versions.append(frozenset(os.listdir(path)))
+    finally:
+        stop.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert len(set(versions)) == 3 and all("_SUCCESS" in v for v in versions)
+    assert len(seen) > 20
+    assert [s for s in seen if s not in versions] == []
+    assert {r["variant_type"] for r in read_table(spark, root, "variant").collect()} == {"snv"}
 
 
 def _nested(spark):
@@ -314,8 +404,10 @@ def test_build_once_serves_without_a_job_and_rebuilds_when_incomplete(
     assert (len(calls), jobs, path2, value2) == (1, 0, path, 42)
     assert served.schema.json() == built.schema.json()
     assert sorted(served.collect()) == sorted(_non_nullable(spark).collect())
-    record = next(r for r in store_builds() if (r["store"], r["key"]) == ("t", key))
-    assert record["served"] == 1
+    def record():
+        return next(r for r in store_builds() if (r["store"], r["key"]) == ("t", key))
+
+    assert (record()["served"], record()["builds"]) == (1, 1)
 
     os.remove(os.path.join(_STORES[("t", key)].parts[0].path, "_SUCCESS"))
     build_once(spark, "t", key, build)
@@ -324,6 +416,7 @@ def test_build_once_serves_without_a_job_and_rebuilds_when_incomplete(
     build_once(spark, "t", key, build)
     assert len(calls) == 3
     assert build_once(spark, "t", key, build)[2] == 42 and len(calls) == 3
+    assert (record()["served"], record()["builds"]) == (1, 3)
 
 
 def test_spread_table_is_served_without_a_job(spark, tmp_path, count_jobs):
