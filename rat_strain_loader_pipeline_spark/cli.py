@@ -43,18 +43,15 @@ def _dims(spark, root: str, table: str):
 
 
 def _store_or_empty(spark, root: str, table: str, schema, **filters):
-    """The store table, or an empty relation when it is absent. The
-    ``limit(0)`` makes the empty frame a ``LocalRelation`` Catalyst can
-    see, so joins against it fold away instead of planning shuffles over
-    empty partitions."""
+    """The store table, or ``store.empty_relation`` when it is absent."""
     from pyspark.sql.utils import AnalysisException
 
-    from rat_strain_loader_pipeline_spark.store import read_table
+    from rat_strain_loader_pipeline_spark.store import empty_relation, read_table
 
     try:
         return read_table(spark, root, table, **filters)
     except AnalysisException:
-        return spark.createDataFrame([], schema).limit(0)
+        return empty_relation(spark, schema)
 
 
 def _write_lines(df, path: str) -> None:
@@ -135,7 +132,6 @@ def variant_load3(argv):
     from functools import reduce
 
     from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
 
     from rat_strain_loader_pipeline_spark.pipelines.load import (
         derive_variants_multi, load_variants, tag_sample,
@@ -164,10 +160,12 @@ def variant_load3(argv):
         spark, a.store, "variant_map_data", VARIANT_MAP_DATA_SCHEMA, map_key=a.mapKey
     )
     # only this call's samples can match a new detail row; the table is
-    # partitioned by sample_id, so the filter prunes the scan to them
+    # partitioned by sample_id, so the filter prunes the scan to them,
+    # and to an empty relation when none of them is stored yet
     existing_sd = _store_or_empty(
-        spark, a.store, "variant_sample_detail", VARIANT_SAMPLE_DETAIL_SCHEMA
-    ).filter(F.col("sample_id").isin(a.sampleId))
+        spark, a.store, "variant_sample_detail", VARIANT_SAMPLE_DETAIL_SCHEMA,
+        sample_id=a.sampleId,
+    )
     # the upsert probes the NATURAL key — pass the variant⋈map projection
     existing_v = v.join(
         existing_md.select("rgd_id", "chromosome", "start_pos", "end_pos"), "rgd_id"

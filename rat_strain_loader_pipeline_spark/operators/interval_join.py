@@ -122,13 +122,16 @@ def point_in_interval_flag(
     (padded one bin left, so a probe whose span is smaller than
     ``bin_size`` meets every overlapping interval in its own START bin),
     then grouped to ONE build row per (chr, bin[, key]) holding the set
-    of that bin's intervals — one shuffle; ``collect_set`` drops
-    duplicate intervals, and ``exists`` depends on neither order nor
-    multiplicity. The build side is broadcast and the probe runs ONE
-    left hash join on (chr, bin[, key]); the flag is ``exists`` over the
-    matched bin's intervals with the overlap predicate (false when no
-    bin matched). Intervals with a null bound explode to no bin and
-    never flag.
+    of that bin's intervals; ``collect_set`` drops duplicate intervals,
+    and ``exists`` depends on neither order nor multiplicity. The
+    intervals are coalesced to one partition first, so the grouping
+    needs no exchange: it runs in the one task of the broadcast job
+    that ships its result, and the flag costs no shuffle job. One task
+    is enough because the build side is broadcast, so it must fit on
+    the driver anyway. The probe runs ONE left hash join on (chr,
+    bin[, key]); the flag is ``exists`` over the matched bin's intervals
+    with the overlap predicate (false when no bin matched). Intervals
+    with a null bound explode to no bin and never flag.
 
     Requires probe spans < bin_size (true for variants vs the 1 Mb
     default by 4 orders of magnitude).
@@ -149,6 +152,7 @@ def point_in_interval_flag(
     group_cols = ["__i_chr", "__bin"] + (["__i_key"] if extra_key else [])
     binned = (
         intervals.select(*sel)
+        .coalesce(1)
         .withColumn(
             "__bin",
             F.explode(

@@ -8,7 +8,9 @@ timestamp ourselves, so callers always see a proper TimestampType.
 
 ``read_parquet_footer`` reads an outside parquet table (the CLI's
 ``--dims`` root) with the schema of its own footer, read on the driver,
-instead of the inference job ``spark.read.parquet`` runs.
+instead of the inference job ``spark.read.parquet`` runs. It picks the
+footer from ``leaf_files``, the driver-side listing of a file source's
+leaf files that the VCF header read shares.
 """
 
 from __future__ import annotations
@@ -79,6 +81,36 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def leaf_files(spark: SparkSession, path: str):
+    """``(hadoop_conf, leaves)``: the session's Hadoop configuration and
+    a ``(uri, hadoop Path)`` pair for every file under ``path``, listed
+    on the driver through its ``FileSystem`` and sorted by uri, as
+    Spark's file sources list a table. A directory is listed
+    recursively, skipping every file or directory name
+    ``HadoopFSUtils.shouldFilterOutPathName`` hides (``_``/``.`` names
+    except parquet summary files); a file path lists itself. A glob
+    lists what it matches, less the hidden names. A missing path lists
+    nothing."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    hidden = jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
+    fs = jpath.getFileSystem(conf)
+    leaves = []
+    globbed = any(c in path for c in "{}[]*?\\")  # SparkHadoopUtil.isGlobPath
+    for matched in fs.globStatus(jpath) or []:
+        if globbed and hidden(matched.getPath().getName()):
+            continue
+        root = matched.getPath().toString().rstrip("/")
+        listed = fs.listFiles(matched.getPath(), True)
+        while listed.hasNext():
+            leaf = listed.next().getPath()
+            name = leaf.toString()
+            if not any(hidden(part) for part in name[len(root):].split("/") if part):
+                leaves.append((name, leaf))
+    return conf, sorted(leaves, key=lambda leaf: leaf[0])
+
+
 def read_parquet_footer(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` without its schema-inference job.
 
@@ -93,33 +125,21 @@ def read_parquet_footer(spark: SparkSession, path: str) -> DataFrame:
     under inference, and partition columns are still discovered from
     the directory names. A path with no file falls back to the
     inferring read, which raises its own error."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    hidden = jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
-    fs = jpath.getFileSystem(conf)
-    leaves = []
-    if fs.exists(jpath):
-        root = fs.getFileStatus(jpath).getPath().toString().rstrip("/")
-        listed = fs.listFiles(jpath, True)
-        while listed.hasNext():
-            leaf = listed.next().getPath()
-            name = leaf.toString()
-            if not any(hidden(part) for part in name[len(root):].split("/") if part):
-                leaves.append((name, leaf.getName(), leaf))
+    conf, leaves = leaf_files(spark, path)
     if not leaves:
         return spark.read.parquet(path)
-    leaves.sort(key=lambda leaf: leaf[0])
+    named = [(uri.rsplit("/", 1)[-1], leaf) for uri, leaf in leaves]
     summaries = ("_common_metadata", "_metadata")
     chosen = next(
-        (leaf for name in summaries for leaf in leaves if leaf[1] == name),
-        next(leaf for leaf in leaves if leaf[1] not in summaries),
+        (leaf for name in summaries for base, leaf in named if base == name),
+        next(leaf for base, leaf in named if base not in summaries),
     )
+    jvm = spark._jvm
     parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
     footer = jvm.org.apache.parquet.hadoop.Footer(
-        chosen[2],
+        chosen,
         jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            conf, chosen[2],
+            conf, chosen,
             jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
         ),
     )

@@ -6,7 +6,8 @@ header row (columns 9+), then per data line fan out one record per
 (strain, allele). Spark-first:
 
 - read as text, filter ``##``, split by tab;
-- strain names come from the single header line (tiny driver-side read);
+- strain names come from the single header line, read on the driver
+  with no Spark job (the reference reads it with a plain file read);
 - melt strain columns to long form via an array+posexplode (no RDD);
 - FORMAT introspection (S4: locate GT/AD/DP indexes inside
   'GT:AD:DP:...', AD sometimes named CLCAD2) via ``array_position``;
@@ -20,27 +21,68 @@ provided mapping, reject names longer than 2 chars or 'Un'.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rat_strain_loader_pipeline_spark.schemas import VCF_FIXED_COLS
+from rat_strain_loader_pipeline_spark.sources.tables import leaf_files
+
+
+# bytes per driver-side read of a header: one py4j call each
+_HEADER_BLOCK = 1 << 16
+_EOL = re.compile(rb"\r\n|\r|\n")  # the line ends spark.read.text splits on
 
 
 def _strain_names_from_header(spark: SparkSession, path: str) -> list[str]:
-    """Read the single '#CHROM' header line; strain columns are 9+.
+    """Columns 9+ of the '#CHROM' header line: the strain names.
 
-    Driver-side but O(header) only — Spark stops at the first match.
-    """
-    header = (
-        spark.read.text(path)
-        .filter(F.col("value").startswith("#CHROM"))
-        .limit(1)
-        .collect()
-    )
-    if not header:
-        return []
-    cols = header[0]["value"].split("\t")
-    return cols[9:]
+    Read on the driver, with no Spark job, through the session's Hadoop
+    ``FileSystem``: a compressed file (``.gz``, ``.bz2``, ...) is
+    decoded by the codec its extension names and a directory is read
+    file by file over its sorted leaf listing (``tables.leaf_files``),
+    as ``spark.read.text`` reads them. Each file is read in
+    ``_HEADER_BLOCK``-byte blocks up to its '#CHROM' line, or up to its
+    first data line (one neither empty nor '#'-prefixed), which ends a
+    header that has no '#CHROM' line; a path whose files hold none has
+    no strains."""
+    conf, leaves = leaf_files(spark, path)
+    codecs = spark._jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    for _, leaf in leaves:
+        stream = leaf.getFileSystem(conf).open(leaf)
+        try:
+            codec = codecs.getCodec(leaf)
+            if codec is not None:
+                stream = codec.createInputStream(stream)
+            line = _header_line(stream)
+        finally:
+            stream.close()
+        if line is not None:
+            return line.decode("utf-8", errors="replace").split("\t")[9:]
+    return []
+
+
+def _header_line(stream) -> bytes | None:
+    """The stream's '#CHROM' line, or None when a data line or the end
+    comes first."""
+    tail = b""
+    while True:
+        block = bytes(stream.readNBytes(_HEADER_BLOCK))
+        data = tail + block
+        # the last line may be cut by the block end, and so may a '\r\n'
+        held = data.endswith(b"\r") and bool(block)
+        *lines, tail = _EOL.split(data[:-1] if held else data)
+        tail += b"\r" if held else b""
+        if not block:
+            lines.append(tail)
+        for line in lines:
+            if line.startswith(b"#CHROM"):
+                return line
+            if line and not line.startswith(b"#"):
+                return None
+        if not block:
+            return None
 
 
 def read_vcf_long(

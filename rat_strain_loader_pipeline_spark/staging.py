@@ -14,7 +14,8 @@ at cluster scale: the reference pipeline lands every stage in staging
 tables, and a 100 TB Spark deployment would land them in parquet/Delta.
 
 Stages are written under a per-process temp dir (``_stage_root``).
-Nothing deletes them, neither while the process runs nor after it
+A stage whose write fails is removed (``remove_failed_write``); nothing
+deletes a written one, neither while the process runs nor after it
 exits: a long-lived process accumulates every stage it wrote. On the
 CLI path those are ``VariantLoad3``'s ``derive-stage-a`` and
 ``load-with-ids`` stages and post-processing's ``postprocess-vt``; the
@@ -39,6 +40,7 @@ directories are long-lived by design: a stage cleanup must leave them
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import time
 import uuid
@@ -73,8 +75,27 @@ def stage_to_parquet_path(
     """``stage_to_parquet`` variant that also returns the staged
     directory path (``build_once`` memoizes it)."""
     path = os.path.join(_stage_root(), f"{label}-{uuid.uuid4().hex[:12]}")
-    df.write.mode("overwrite").parquet(path)
+    try:
+        df.write.mode("overwrite").parquet(path)
+    except BaseException:
+        remove_failed_write(df.sparkSession, path)
+        raise
     return df.sparkSession.read.schema(df.schema).parquet(path), path
+
+
+def remove_failed_write(spark: SparkSession, path: str) -> None:
+    """Delete ``path``, the output directory of a write that failed.
+
+    The failed job's other tasks are killed asynchronously and can still
+    recreate their attempt directories after the write has raised: wait
+    (at most 30 s) until no task runs, then delete."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline and any(
+        e.numRunningTasks() for e in tracker.getExecutorInfos()
+    ):
+        time.sleep(0.05)
+    shutil.rmtree(path, ignore_errors=True)
 
 
 @dataclass(frozen=True)

@@ -35,8 +35,8 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +48,7 @@ from rat_strain_loader_pipeline_spark.schemas import (
     VARIANT_SCHEMA,
     VARIANT_TRANSCRIPT_SCHEMA,
 )
+from rat_strain_loader_pipeline_spark.staging import remove_failed_write
 
 PARTITIONING: dict[str, tuple[str, ...]] = {
     "variant": (),
@@ -141,15 +142,7 @@ def _commit(df: DataFrame, root: str, table: str, **options) -> None:
     try:
         _writer(df, table, "errorifexists").options(**options).parquet(_path(root, version))
     except BaseException:
-        # the failed job's other tasks are killed asynchronously and can
-        # still recreate their attempt directories: let them end first
-        tracker = df.sparkSession.sparkContext._jsc.sc().statusTracker()
-        deadline = time.monotonic() + 30
-        while time.monotonic() < deadline and any(
-            e.numRunningTasks() for e in tracker.getExecutorInfos()
-        ):
-            time.sleep(0.05)
-        shutil.rmtree(_path(root, version), ignore_errors=True)
+        remove_failed_write(df.sparkSession, _path(root, version))
         raise
     link = _path(root, f".{version}.link")
     os.symlink(version, link)
@@ -186,27 +179,48 @@ def read_table(
     table: str,
     map_key: int | None = None,
     chromosome: str | None = None,
-    sample_id: int | None = None,
+    sample_id: int | Sequence[int] | None = None,
 ) -> DataFrame:
     """Read a store table; the keyword filters land on partition columns
     where the table has them, so they prune directories instead of
-    scanning (F2 chromosome filter → partition pruning). A table in
-    ``SCHEMAS`` is read with its declared schema: no inference job, and
-    partition values keep the declared type."""
+    scanning (F2 chromosome filter → partition pruning). ``sample_id``
+    may be one id or several. A table in ``SCHEMAS`` is read with its
+    declared schema: no inference job, and partition values keep the
+    declared type.
+
+    When a filter on the table's leading partition column names no
+    ``<col>=<value>`` directory that exists, the read is
+    ``empty_relation`` of the schema the scan would have had, planned
+    with no scan (and no broadcast of one) over no files."""
     declared = SCHEMAS.get(table)
     reader = spark.read if declared is None else spark.read.schema(declared)
     df = reader.parquet(_path(root, table))
+    leading = next(iter(PARTITIONING.get(table, ())), None)
+    absent = False
     for col, val in (("map_key", map_key), ("chromosome", chromosome), ("sample_id", sample_id)):
-        if val is not None and col in df.columns:
-            df = df.filter(F.col(col) == val)
-    if declared is not None:
-        return df
-    casts = {
-        c: F.col(c).cast(t)
-        for c, t in _PARTITION_TYPES.items()
-        if c in df.columns and c in PARTITIONING.get(table, ())
-    }
-    return df.withColumns(casts) if casts else df
+        if val is None or col not in df.columns:
+            continue
+        vals = [val] if isinstance(val, (int, str)) else list(val)
+        df = df.filter(F.col(col) == vals[0] if len(vals) == 1 else F.col(col).isin(vals))
+        if col == leading and not any(
+            os.path.isdir(os.path.join(_path(root, table), f"{col}={v}")) for v in vals
+        ):
+            absent = True
+    if declared is None:
+        casts = {
+            c: F.col(c).cast(t)
+            for c, t in _PARTITION_TYPES.items()
+            if c in df.columns and c in PARTITIONING.get(table, ())
+        }
+        df = df.withColumns(casts) if casts else df
+    return empty_relation(spark, df.schema) if absent else df
+
+
+def empty_relation(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame Catalyst can see is empty: the ``limit(0)`` makes
+    it a ``LocalRelation``, so joins against it fold away instead of
+    planning shuffles or broadcasts over empty partitions."""
+    return spark.createDataFrame([], schema).limit(0)
 
 
 def _read_as_stored(spark: SparkSession, root: str, table: str) -> DataFrame:

@@ -79,11 +79,12 @@ def test_point_in_interval_flag_genic_status(spark):
     assert len(got) == 5  # probe multiplicity preserved
 
 
-def test_point_in_interval_flag_matches_brute_force_with_one_shuffle(spark):
+def test_point_in_interval_flag_matches_brute_force_with_no_shuffle(spark):
     """The flag equals a brute-force overlap check on duplicate
     intervals, intervals spanning several bins, an ``extra_key`` and null
-    bounds on either side; the interval side is shuffled once (explode,
-    then one grouping with ``collect_set``)."""
+    bounds on either side; the interval side is never shuffled (it is
+    coalesced to one partition, exploded and grouped with
+    ``collect_set`` inside the broadcast job)."""
     from tests.test_plans import _plan
 
     bin_size = 100
@@ -123,7 +124,7 @@ def test_point_in_interval_flag_matches_brute_force_with_one_shuffle(spark):
         out = point_in_interval_flag(
             probe, iv, "hit", extra_key="k" if use_key else None, bin_size=bin_size
         )
-        assert _plan(out, "simple").count("Exchange hashpartitioning") == 1
+        assert _plan(out, "simple").count("Exchange hashpartitioning") == 0
         got = sorted(((tuple(r[:4]), r["hit"]) for r in out.collect()), key=repr)
         want = sorted(((p, brute(p, use_key)) for p in probes), key=repr)
         assert got == want, use_key

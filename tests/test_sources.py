@@ -65,6 +65,45 @@ def test_read_vcf_long_melt_and_normalize(spark, tmp_path):
     assert bn_100["format"] == "GT:AD:DP"
 
 
+def test_read_vcf_long_runs_no_job_before_an_action(spark, tmp_path, count_jobs):
+    """The strain names come from a driver-side read of the header, so
+    building the long-form frame runs no Spark job."""
+    p = tmp_path / "v.vcf"
+    p.write_text(VCF_TEXT)
+    df, jobs = count_jobs(read_vcf_long, spark, str(p))
+    assert jobs == 0
+    assert sorted({r["strain"] for r in df.collect()}) == ["BN", "SHR"]
+
+
+def test_vcf_header_read_from_gz_and_directory(spark, tmp_path):
+    """A gzipped VCF, a directory holding the VCF and a glob matching
+    it give the plain file's strains and rows; the directory's hidden
+    files are skipped, as spark.read.text skips them. A header far longer than one read
+    block and CRLF line ends change nothing."""
+    from rat_strain_loader_pipeline_spark.sources.vcf import _HEADER_BLOCK
+
+    meta = "".join(f"##contig=<ID=c{i},length={i}>\n" for i in range(_HEADER_BLOCK // 20))
+    text = VCF_TEXT.replace("##contig=<ID=1>\n", meta)
+    plain = tmp_path / "v.vcf"
+    plain.write_text(text)
+    packed = tmp_path / "v.vcf.gz"
+    packed.write_bytes(gzip.compress(text.encode()))
+    folder = tmp_path / "dir"
+    folder.mkdir()
+    (folder / "v.vcf").write_text(text)
+    (folder / "_a.vcf").write_text("#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tX\n")
+    crlf = tmp_path / "crlf.vcf"
+    crlf.write_bytes(text.replace("\n", "\r\n").encode())
+
+    def rows(path):
+        return sorted(map(tuple, read_vcf_long(spark, str(path)).collect()))
+
+    want = rows(plain)
+    assert {r[-2] for r in want} == {"BN", "SHR"}
+    for path in (packed, folder, folder / "*.vcf", crlf):
+        assert rows(path) == want, path
+
+
 def test_format_introspection_and_gt_field(spark):
     df = spark.createDataFrame(
         [("GT:AD:DP", "0/1:30,31:61"), ("GT:CLCAD2:DP", "1/1:0,40:40"), ("GT:DP", "0/1:9")],

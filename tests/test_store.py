@@ -316,6 +316,47 @@ def test_stage_read_back_runs_no_job_and_keeps_schema(spark, tmp_path, count_job
     assert sorted(map(repr, staged.collect())) == sorted(map(repr, inferred.collect()))
 
 
+def test_failed_stage_leaves_nothing_under_the_stage_root(spark):
+    """A stage whose write fails on a row removes its own directory,
+    once the failed job's killed tasks have ended."""
+    from rat_strain_loader_pipeline_spark.staging import _stage_root
+
+    root = _stage_root()
+    before = sorted(os.listdir(root))
+    bad = spark.range(0, 1000, 1, 4).withColumn(
+        "x", F.when(F.col("id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("id"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        stage_to_parquet_path(bad, "failing")
+    assert sorted(os.listdir(root)) == before
+
+
+def test_read_of_absent_leading_partitions_is_an_empty_relation(spark, tmp_path, count_jobs):
+    """A filter on the leading partition column that names no stored
+    directory reads as a LocalRelation with the scan's schema; one that
+    names a stored directory still scans it, pruned."""
+    root = str(tmp_path / "store")
+    write_table(_vmd(spark, "1", "GENIC"), root, "variant_map_data")
+    scan = read_table(spark, root, "variant_map_data", map_key=360)
+    for kw in ({"map_key": 361}, {"map_key": 361, "chromosome": "1"}):
+        df, jobs = count_jobs(read_table, spark, root, "variant_map_data", **kw)
+        assert jobs == 0 and df.schema == scan.schema
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "Relation" not in plan.replace("LocalRelation", "")
+        assert df.collect() == []
+    assert scan.count() == 5
+
+    sd = spark.createDataFrame(
+        [(1, 7, 40), (2, 8, 40)], "rgd_id long, sample_id int, total_depth int"
+    )
+    write_table(sd, root, "variant_sample_detail")
+    assert read_table(spark, root, "variant_sample_detail", sample_id=[9, 10]).collect() == []
+    assert read_table(spark, root, "variant_sample_detail", sample_id=[]).collect() == []
+    got = read_table(spark, root, "variant_sample_detail", sample_id=[8, 9])
+    assert "PartitionFilters: [" in got._jdf.queryExecution().executedPlan().toString()
+    assert [r["rgd_id"] for r in got.collect()] == [2]
+
+
 def test_partition_values_round_trip(spark, tmp_path):
     """Partition directory values read back exactly as written: an
     inferring read would type ``chromosome=01`` as int and return '1'."""
