@@ -31,12 +31,15 @@ streams through mapInPandas with no shuffle at all — output
 partitioning == input partitioning (partition by (map_key, chromosome)
 upstream).
 
-The blocks path aggregates the features table by transcript ONCE: the
-same groupBy yields each transcript's sequence span and its sorted
-feature array, and the array rides through the span extraction to the
-pair join. Its ``_SpanSeq`` view reports ``len()`` as the span's last
-genome position (``off + len(seq)``), which clamps every in-span read
-exactly as the chromosome length does on the broadcast path.
+The blocks path aggregates the features table by transcript in one
+groupBy that yields each transcript's sequence span and its sorted
+feature array; the array rides through the span extraction to the pair
+join. Every dims-sized broadcast side (genes ⋈ transcripts, the sorted
+features, the span aggregate) is built over one ``one_task_build``
+partition, inside the job that consumes it. Its ``_SpanSeq`` view
+reports ``len()`` as the span's last genome position
+(``off + len(seq)``), which clamps every in-span read exactly as the
+chromosome length does on the broadcast path.
 """
 
 from __future__ import annotations
@@ -53,6 +56,7 @@ from rat_strain_loader_pipeline_spark.functions.dna import (
     reverse_complement_str,
     translate_dna_str,
 )
+from rat_strain_loader_pipeline_spark.operators.interval_join import one_task_build
 from rat_strain_loader_pipeline_spark.sources.fasta import get_dna_chunk
 
 VT_OUTPUT_SCHEMA = (
@@ -244,8 +248,10 @@ def _candidate_spine(
     genes: DataFrame,
     transcripts: DataFrame,
 ) -> DataFrame:
-    """Shared join spine, NARROW rows only: F4 filter, J1 gene interval
-    probe (broadcast), J2 transcripts. The per-transcript feature arrays
+    """Shared join spine, NARROW rows only: F4 filter, then J1 gene
+    interval probe and J2 transcripts in ONE broadcast join: genes ⋈
+    transcripts is a merge join of two ``one_task_build`` sides, built
+    inside the broadcast job that ships it. The per-transcript feature arrays
     join later (``_sorted_feats``), after the pair-level dedup and
     store anti-join have settled which pairs actually compute — so
     neither of those exchanges carries the collected arrays. (The blocks
@@ -269,17 +275,16 @@ def _candidate_spine(
         F.col("start_pos").alias("g_start"),
         F.col("stop_pos").alias("g_stop"),
     )
-    # J1 (gene probe uses the variant START only, GeneCache.getGeneRgdIds(varStart))
-    vg = v.join(
-        broadcast(g),
-        (v["chromosome"] == g["g_chr"])
-        & (v["start_pos"] >= g["g_start"])
-        & (v["start_pos"] <= g["g_stop"]),
-    ).drop("g_chr", "g_start", "g_stop")
-
-    # J2
+    # J2, built inside J1's broadcast job
     t = transcripts.select("transcript_rgd_id", "gene_rgd_id", "is_non_coding_ind")
-    return vg.join(broadcast(t), "gene_rgd_id")
+    gt = one_task_build(g).hint("merge").join(one_task_build(t), "gene_rgd_id")
+    # J1 (gene probe uses the variant START only, GeneCache.getGeneRgdIds(varStart))
+    return v.join(
+        broadcast(gt),
+        (v["chromosome"] == gt["g_chr"])
+        & (v["start_pos"] >= gt["g_start"])
+        & (v["start_pos"] <= gt["g_stop"]),
+    ).drop("g_chr", "g_start", "g_stop")
 
 
 def _sorted_feats():
@@ -298,9 +303,11 @@ def _sorted_feats():
 
 
 def _features_sorted(features: DataFrame) -> DataFrame:
-    """Features collected per transcript (``_sorted_feats``)."""
+    """Features collected per transcript (``_sorted_feats``), aggregated
+    over one ``one_task_build`` partition, so the aggregate runs inside
+    the broadcast job that ships it."""
     return (
-        features.filter(F.col("chromosome").isNotNull())
+        one_task_build(features.filter(F.col("chromosome").isNotNull()))
         .groupBy("transcript_rgd_id")
         .agg(_sorted_feats())
     )
@@ -489,12 +496,15 @@ def variant_transcript_consequences_blocks(
     IDENTICAL to the broadcast path (equivalence-tested). Span bytes
     shipped = Σ transcript spans, not genome × executors.
 
-    The features table is aggregated by transcript ONCE: one groupBy
-    yields the span's chromosome, start and stop together with the
-    sorted feature array (W1), and ``dna_chunks`` carries that array
-    through to the spine join, so the ``repartition_to`` exchange, when
-    asked for, carries each pair's feature array along with its span
-    text. ``dna_chunks`` plans its blocks join by size: the
+    One groupBy of the features by transcript yields the span's
+    chromosome, start and stop together with the sorted feature array
+    (W1), and ``dna_chunks`` carries that array through to the spine
+    join, so the ``repartition_to`` exchange, when asked for, carries
+    each pair's feature array along with its span text. The groupBy
+    runs over a ``one_task_build`` partition: ``dna_chunks`` plans it
+    under both its span probe and its reassembly, and each copy is
+    built inside the job that consumes it, with no shuffle job of its
+    own. ``dna_chunks`` plans its blocks join by size: the
     transcript-sized probe is broadcast and the genome blocks stream,
     and a genome over the broadcast threshold is never the broadcast
     side. The inner spine join keeps exactly the pairs whose transcript
@@ -511,7 +521,7 @@ def variant_transcript_consequences_blocks(
     )
 
     transcript_feats = (
-        features.filter(F.col("chromosome").isNotNull())
+        one_task_build(features.filter(F.col("chromosome").isNotNull()))
         .groupBy(F.col("transcript_rgd_id").alias("chunk_id"))
         .agg(
             F.first("chromosome").alias("chr"),

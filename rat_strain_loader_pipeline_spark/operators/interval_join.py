@@ -30,6 +30,20 @@ from pyspark.sql.functions import broadcast
 DEFAULT_BIN_SIZE = 1_000_000
 
 
+def one_task_build(df: DataFrame) -> DataFrame:
+    """``df`` on one partition, for a dims-sized broadcast build side.
+
+    An aggregate or a merge join over one partition needs no exchange
+    (one partition satisfies every distribution), so the build of a
+    broadcast side runs inside the one task of the broadcast job that
+    ships it and costs no shuffle job of its own. One task is enough
+    because a broadcast side must fit on the driver anyway. Use it only
+    for annotation-sized inputs (genes, transcripts, features), never
+    for store-sized ones.
+    """
+    return df.coalesce(1)
+
+
 def interval_join_broadcast(
     probe: DataFrame,
     intervals: DataFrame,
@@ -124,11 +138,9 @@ def point_in_interval_flag(
     then grouped to ONE build row per (chr, bin[, key]) holding the set
     of that bin's intervals; ``collect_set`` drops duplicate intervals,
     and ``exists`` depends on neither order nor multiplicity. The
-    intervals are coalesced to one partition first, so the grouping
-    needs no exchange: it runs in the one task of the broadcast job
-    that ships its result, and the flag costs no shuffle job. One task
-    is enough because the build side is broadcast, so it must fit on
-    the driver anyway. The probe runs ONE left hash join on (chr,
+    grouping runs over ``one_task_build`` intervals, inside the one task
+    of the broadcast job that ships its result, so the flag costs no
+    shuffle job. The probe runs ONE left hash join on (chr,
     bin[, key]); the flag is ``exists`` over the matched bin's intervals
     with the overlap predicate (false when no bin matched). Intervals
     with a null bound explode to no bin and never flag.
@@ -151,8 +163,7 @@ def point_in_interval_flag(
         sel.append(F.col(extra_key).alias("__i_key"))
     group_cols = ["__i_chr", "__bin"] + (["__i_key"] if extra_key else [])
     binned = (
-        intervals.select(*sel)
-        .coalesce(1)
+        one_task_build(intervals.select(*sel))
         .withColumn(
             "__bin",
             F.explode(

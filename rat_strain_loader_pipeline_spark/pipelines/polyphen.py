@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rat_strain_loader_pipeline_spark.operators.interval_join import one_task_build
+
 
 def polyphen_candidates(
     variant: DataFrame,
@@ -44,8 +46,13 @@ def polyphen_candidates(
     """J8 export join + F10 predicate (Polyphen.java:148-165).
 
     Candidate: ref_aa <> var_aa, var_aa <> '*', ref/var nuc single ACGT,
-    both AAs present.
+    both AAs present. Transcripts ⋈ genes is ONE broadcast side: a merge
+    join of two ``one_task_build`` sides, built inside the broadcast job
+    that ships it.
     """
+    t = one_task_build(transcripts).alias("t")
+    g = one_task_build(genes).alias("g")
+    tg = t.hint("merge").join(g, F.col("g.gene_rgd_id") == F.col("t.gene_rgd_id"))
     j = (
         variant_transcript.alias("vt")
         .join(variant.alias("v"), F.col("vt.variant_rgd_id") == F.col("v.rgd_id"))
@@ -55,10 +62,9 @@ def polyphen_candidates(
             & (F.col("vmd.map_key") == F.col("vt.map_key")),
         )
         .join(
-            F.broadcast(transcripts.alias("t")),
+            F.broadcast(tg),
             F.col("t.transcript_rgd_id") == F.col("vt.transcript_rgd_id"),
         )
-        .join(F.broadcast(genes.alias("g")), F.col("g.gene_rgd_id") == F.col("t.gene_rgd_id"))
     )
     cand = j.filter(
         (F.col("vt.ref_aa") != F.col("vt.var_aa"))

@@ -41,9 +41,13 @@ def postprocess_variants(
     """Pass ``fasta_broadcast`` (a {chr: seq} broadcast) for the
     reference-scale path, or ``fasta_blocks`` (a sources.fasta block
     table) for the broadcast-free 100 TB genome path — identical output
-    either way."""
-    from rat_strain_loader_pipeline_spark.staging import stage_to_parquet
+    either way.
 
+    Nothing is staged: ``variant_transcript`` and ``sequences`` are two
+    plans over the one consequence dataflow, and each runs the
+    consequence UDF when it is executed. The CLI writes only
+    ``variant_transcript``, so it runs the UDF once; a caller that reads
+    both runs it twice."""
     if (fasta_broadcast is None) == (fasta_blocks is None):
         raise ValueError("pass exactly one of fasta_broadcast / fasta_blocks")
     if fasta_blocks is not None:
@@ -51,20 +55,14 @@ def postprocess_variants(
             variant_transcript_consequences_blocks,
         )
 
-        vt_raw = variant_transcript_consequences_blocks(
+        vt_full = variant_transcript_consequences_blocks(
             variants, genes, transcripts, features, fasta_blocks, map_key,
             verify_against, block_size=block_size,
         )
     else:
-        vt_raw = variant_transcript_consequences(
+        vt_full = variant_transcript_consequences(
             variants, genes, transcripts, features, fasta_broadcast, map_key, verify_against
         )
-    # two consumers (VT projection + sequences union) over a pandas-UDF
-    # output: land it in a parquet stage barrier so the consequence UDF
-    # runs exactly once and neither consumer pays a columnar cache build
-    # (staging.py measurements; same pattern as load_variants)
-    vt_full = stage_to_parquet(vt_raw, "postprocess-vt")
-
     aa_key = F.when(
         F.col("full_ref_aa").isNotNull(), F.xxhash64(F.lit("aa"), F.col("full_ref_aa"))
     )

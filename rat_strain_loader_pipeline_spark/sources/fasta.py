@@ -90,7 +90,7 @@ def dna_chunks(intervals: DataFrame, blocks: DataFrame, block_size: int = 100_00
 
     ``intervals``: (chunk_id long, chr string, start long, stop long),
     plus any further columns, which ride through unchanged; ``chunk_id``
-    must be unique (the pieces reassemble per id).
+    must be unique and not null (the rows reassemble per id).
     Returns every column of ``intervals`` (``chunk_id`` first) plus
     ``chunk string``, with the same clamping semantics as
     ``get_dna_chunk`` (unknown chr / empty overlap / stop < start → '' —
@@ -102,9 +102,14 @@ def dna_chunks(intervals: DataFrame, blocks: DataFrame, block_size: int = 100_00
     sides, no range predicate — planned by size: a probe under the
     broadcast threshold (transcript spans, a few narrow columns a row)
     is broadcast and the genome blocks stream through the join; a
-    genome over the threshold is never the broadcast side. Then a
-    groupBy(chunk_id) reassembles the pieces ordered by block_start,
-    and ``intervals LEFT JOIN pieces`` keeps empty spans.
+    genome over the threshold is never the broadcast side. The pieces
+    (``block_start``, text) and the interval rows themselves then meet
+    in ONE ``unionByName`` and ONE groupBy(chunk_id): each interval
+    column comes back through ``first(c, ignorenulls=True)`` (exact, as
+    a chunk has one interval row and the piece rows carry nulls there),
+    and the pieces are sorted by ``block_start`` and joined. A chunk
+    with no piece joins an empty list, ``''``; no join back onto the
+    intervals is needed.
     """
     iv = intervals.select(
         "chunk_id",
@@ -129,15 +134,17 @@ def dna_chunks(intervals: DataFrame, blocks: DataFrame, block_size: int = 100_00
         (ov_lo - F.col("block_start") + 1).cast("int"),
         (ov_hi - ov_lo + 1).cast("int"),
     )
-    pieces = j.filter(ov_hi >= ov_lo).groupBy("chunk_id").agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("block_start"), piece.alias("p")))),
-                lambda s: s["p"],
-            ),
-            "",
-        ).alias("chunk")
+    pieces = j.filter(ov_hi >= ov_lo).select(
+        "chunk_id", F.struct(F.col("block_start"), piece.alias("p")).alias("__piece")
     )
-    return intervals.join(pieces, "chunk_id", "left").withColumn(
-        "chunk", F.coalesce(F.col("chunk"), F.lit(""))
+    rest = [c for c in intervals.columns if c != "chunk_id"]
+    return (
+        intervals.unionByName(pieces, allowMissingColumns=True)
+        .groupBy("chunk_id")
+        .agg(
+            *[F.first(c, ignorenulls=True).alias(c) for c in rest],
+            F.array_join(
+                F.transform(F.sort_array(F.collect_list("__piece")), lambda s: s["p"]), ""
+            ).alias("chunk"),
+        )
     )

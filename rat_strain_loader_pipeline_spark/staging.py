@@ -18,9 +18,9 @@ A stage whose write fails is removed (``remove_failed_write``); nothing
 deletes a written one, neither while the process runs nor after it
 exits: a long-lived process accumulates every stage it wrote. On the
 CLI path those are ``VariantLoad3``'s ``derive-stage-a`` and
-``load-with-ids`` stages and post-processing's ``postprocess-vt``; the
-fixups stage nothing (they commit straight into the store with
-``store.commit_table``).
+``load-with-ids`` stages; post-processing writes ``variant_transcript``
+straight from its consequence dataflow, and the fixups stage nothing
+(they commit straight into the store with ``store.commit_table``).
 
 The read-back passes the schema the stage was written with. Spark
 would otherwise infer it by reading the parquet footers back, which

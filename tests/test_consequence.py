@@ -440,15 +440,14 @@ def _scan_paths(plan, path=()):
 
 @pytest.mark.parametrize("probe_under_threshold", [True, False])
 def test_blocks_path_never_broadcasts_a_genome_over_the_threshold(
-    spark, tmp_path, monkeypatch, probe_under_threshold
+    spark, tmp_path, probe_under_threshold
 ):
-    """In the executed plan of post-processing's ``postprocess-vt`` stage,
+    """In the executed plan of post-processing's ``variant_transcript``,
     a genome over the broadcast threshold is never the broadcast side of
     the blocks-probe join. With the features read from parquet, as the
     CLI's ``--dims`` reads them, and the transcript-sized probe under the
     threshold, the probe is broadcast and the FASTA scan feeds the join
     directly, with no exchange of either kind between them."""
-    from rat_strain_loader_pipeline_spark import staging
     from rat_strain_loader_pipeline_spark.pipelines.postprocess import (
         postprocess_variants,
     )
@@ -457,14 +456,6 @@ def test_blocks_path_never_broadcasts_a_genome_over_the_threshold(
         read_fasta,
     )
 
-    staged = {}
-    stage = staging.stage_to_parquet
-
-    def capture(df, name, *args, **kwargs):
-        staged[name] = df
-        return stage(df, name, *args, **kwargs)
-
-    monkeypatch.setattr(staging, "stage_to_parquet", capture)
     # a filler chromosome makes the genome ~20 KB, several times the
     # probe's size estimate
     fasta = tmp_path / "g.fa"
@@ -485,12 +476,11 @@ def test_blocks_path_never_broadcasts_a_genome_over_the_threshold(
     genome_bytes = fasta.stat().st_size
     spark.conf.set(key, str(genome_bytes - 1 if probe_under_threshold else 64))
     try:
-        postprocess_variants(
+        vt = postprocess_variants(
             variants, genes, transcripts, features, map_key=360,
             fasta_blocks=fasta_blocks(read_fasta(spark, str(fasta)), block_size=8),
             block_size=8,
-        ).variant_transcript.collect()
-        vt = staged["postprocess-vt"]
+        ).variant_transcript
         vt.collect()
         plan = vt._jdf.queryExecution().executedPlan()
     finally:
@@ -505,3 +495,95 @@ def test_blocks_path_never_broadcasts_a_genome_over_the_threshold(
             assert not exchanges, path
             assert join == "BroadcastHashJoinExec", path
             assert build == ("BuildLeft" if side == 1 else "BuildRight"), path
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, descending through AQE wrappers,
+    query stages and reused exchanges."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+        return
+    if name == "ReusedExchangeExec":
+        yield from _plan_nodes(plan.child())
+        return
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _broadcast_builds(df):
+    """For each BroadcastExchangeExec of ``df``'s executed plan whose
+    build side reads only parquet files: (those files, the exchanges
+    below it)."""
+    df.collect()
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() != "BroadcastExchangeExec":
+            continue
+        below = list(_plan_nodes(node.child()))
+        leaves = [n for n in below if n.children().size() == 0]
+        if any(n.getClass().getSimpleName() != "FileSourceScanExec" for n in leaves):
+            continue
+        roots = [n.relation().location().rootPaths() for n in leaves]
+        files = {paths.apply(i).getName() for paths in roots for i in range(paths.size())}
+        exchanges = [
+            n.nodeName() for n in below
+            if n.getClass().getSimpleName().endswith("ExchangeExec")
+        ]
+        yield frozenset(files), exchanges
+
+
+def test_dims_broadcast_sides_build_inside_their_broadcast_job(spark, tmp_path):
+    """genes ⋈ transcripts of the consequence spine, the broadcast path's
+    sorted features and Polyphen's transcripts ⋈ genes are each ONE
+    broadcast side, built in the one task of its broadcast job: no
+    exchange of any kind below their BroadcastExchange. The annotation
+    tables are read from parquet, as the CLI's ``--dims`` reads them."""
+    from pyspark.sql import functions as F
+
+    from rat_strain_loader_pipeline_spark.operators.consequence import (
+        variant_transcript_consequences,
+    )
+    from rat_strain_loader_pipeline_spark.pipelines.polyphen import (
+        polyphen_candidates,
+    )
+
+    genes, transcripts, features = _gene_model(spark, _EDGE_FEATURES)
+    transcripts = transcripts.withColumn(
+        "protein_acc_id", F.concat(F.lit("NP_"), F.col("transcript_rgd_id").cast("string"))
+    )
+    dims = {}
+    for name, df in (("genes", genes), ("transcripts", transcripts), ("features", features)):
+        df.write.parquet(str(tmp_path / f"{name}.parquet"))
+        dims[name] = spark.read.parquet(str(tmp_path / f"{name}.parquet"))
+    variants = spark.createDataFrame(
+        [(1, "1", 8, 9, "A", "G"), (2, "1", 17, 18, "T", "A")],
+        "rgd_id long, chromosome string, start_pos long, end_pos long, "
+        "ref_nuc string, var_nuc string",
+    )
+    vt = variant_transcript_consequences(
+        variants, dims["genes"], dims["transcripts"], dims["features"],
+        spark.sparkContext.broadcast(SEQS), 360,
+    )
+    cand = polyphen_candidates(
+        variants.select("rgd_id", "ref_nuc", "var_nuc"),
+        variants.select("rgd_id", "chromosome", F.lit(360).alias("map_key")),
+        spark.createDataFrame(vt.collect(), vt.schema),
+        dims["transcripts"],
+        dims["genes"],
+    )
+    assert "NP_200" in {r["protein_acc_id"] for r in cand.collect()}
+
+    gt = frozenset({"genes.parquet", "transcripts.parquet"})
+    consequence_builds = list(_broadcast_builds(vt))
+    polyphen_builds = list(_broadcast_builds(cand))
+    assert sorted(files for files, _ in consequence_builds) == sorted(
+        [gt, frozenset({"features.parquet"})]
+    ), consequence_builds
+    assert [files for files, _ in polyphen_builds] == [gt], polyphen_builds
+    for files, exchanges in consequence_builds + polyphen_builds:
+        assert not exchanges, (files, exchanges)

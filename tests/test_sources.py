@@ -256,6 +256,53 @@ def test_fasta_blocks_dna_chunks(spark, tmp_path):
         assert got[cid] == get_dna_chunk(seqs, chrom, start, stop), (cid, chrom, start, stop)
 
 
+def test_dna_chunks_rows_keep_their_own_values(spark):
+    """Each interval row comes back once with its own values and its
+    exact chunk: a null extra column, an unknown chromosome, stop <
+    start, and chunks spanning 3 and more blocks. The pieces and the
+    interval rows meet in one union and one groupBy; the only join in
+    the executed plan is the blocks join (no join back onto the
+    intervals)."""
+    from rat_strain_loader_pipeline_spark.sources.fasta import (
+        dna_chunks,
+        fasta_blocks,
+        fasta_from_dict,
+    )
+    from tests.test_consequence import _plan_nodes
+
+    seqs = {"1": ("ACGTTGCA" * 20)[:137], "2": "TTTTGGGGCCCCAAAA"}
+    blocks = fasta_blocks(fasta_from_dict(spark, seqs), block_size=16)
+    cases = [
+        (1, "1", 3, 50, None, None),          # 4 blocks, null extras
+        (2, "9", 1, 10, "unknown", [2]),      # chromosome missing
+        (3, "1", 40, 20, "inverted", None),   # stop < start
+        (4, "1", 1, 137, None, [4, -4]),      # whole chromosome, 9 blocks
+        (5, "2", 14, 16, "", []),             # one block, empty extras
+        (6, "1", 16, 49, "three", [6]),       # exactly 3 blocks
+    ]
+    iv = spark.createDataFrame(
+        cases,
+        "chunk_id long, chr string, start long, stop long, tag string, xs array<int>",
+    )
+    out = dna_chunks(iv, blocks, block_size=16)
+    assert out.dtypes == iv.dtypes + [("chunk", "string")]
+    rows = out.collect()
+    assert sorted(r["chunk_id"] for r in rows) == [c[0] for c in cases]
+    got = {r["chunk_id"]: r for r in rows}
+    for cid, chrom, start, stop, tag, xs in cases:
+        r = got[cid]
+        assert (r["chr"], r["start"], r["stop"], r["tag"], r["xs"]) == (
+            chrom, start, stop, tag, xs
+        ), cid
+        assert r["chunk"] == get_dna_chunk(seqs, chrom, start, stop), cid
+    assert len(got[1]["chunk"]) == 48 and len(got[4]["chunk"]) == 137
+
+    names = [n.getClass().getSimpleName()
+             for n in _plan_nodes(out._jdf.queryExecution().executedPlan())]
+    assert sum("Join" in n for n in names) == 1, names
+    assert "UnionExec" in names, names
+
+
 def test_parse_snpeff_ann(spark):
     info = (
         "AB=0.5;ANN=T|missense_variant|MODERATE|Gene1|G1|transcript|NM_1|"

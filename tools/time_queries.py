@@ -1,7 +1,11 @@
 """Time a subset of declared queries with bench.py's exact methodology
-(the same ``prepare_session`` preamble, then fn + count once per query).
+(the same ``prepare_session`` preamble, then fn + count once per query),
+and count the Spark jobs each query runs: every query runs under a job
+group of its own, so its count includes the jobs of building the plan,
+any stage or build-once store it writes, and the final ``count()``.
 
 Usage: python tools/time_queries.py q1 q2 ...   [env: SPARK_GRAFT_SF_DIR]
+Prints one ``<name>: <seconds>s jobs=<n>`` line per query.
 """
 
 from __future__ import annotations
@@ -26,10 +30,18 @@ def main() -> None:
     queries = entry_mod.queries()
     prepare_session(spark, sf_dir)
 
-    for name in names:
+    sc = spark.sparkContext
+    for i, name in enumerate(names):
+        group = f"time-queries-{i}-{name}"
+        sc.setJobGroup(group, name)
         t0 = time.perf_counter()
-        queries[name](spark, sf_dir).count()
-        print(f"{name}: {time.perf_counter() - t0:.3f}s", flush=True)
+        try:
+            queries[name](spark, sf_dir).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        secs = time.perf_counter() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"{name}: {secs:.3f}s jobs={jobs}", flush=True)
 
 
 if __name__ == "__main__":
