@@ -85,7 +85,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     import __spark_entry__ as entry_mod
-    from rat_strain_loader_pipeline_spark.session import get_spark
+    from rat_strain_loader_pipeline_spark.session import archive_state, get_spark
     from rat_strain_loader_pipeline_spark.staging import store_builds
 
     spark = get_spark("bench")
@@ -176,6 +176,9 @@ def main() -> None:
         # every build-once store: its build seconds and how many calls
         # it served after the build (built versus served)
         "store_builds": store_builds(),
+        # whether this process's driver JVM started from the class-data
+        # archive, or paid its one-time dump ("dumping")
+        "startup_archive": archive_state(),
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
     with open(full_path, "w") as f:

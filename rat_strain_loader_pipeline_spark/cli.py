@@ -17,6 +17,7 @@ so existing run scripts translate 1:1.
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 TOOLS = {}
@@ -473,6 +474,18 @@ def main(argv: list[str] | None = None) -> int:
     except Exception:
         print("\nERROR: PIPELINE ABORTED!", file=sys.stderr)
         raise
+    finally:
+        _print_archive_state()
+
+
+def _print_archive_state() -> None:
+    """One run-log line on stderr: whether the driver JVM started from
+    the class-data-sharing archive (``session.archive_state``)."""
+    from rat_strain_loader_pipeline_spark.session import archive_state
+
+    state = archive_state()
+    if state is not None:
+        print(f"startup_archive {json.dumps(state, sort_keys=True)}", file=sys.stderr)
 
 
 if __name__ == "__main__":

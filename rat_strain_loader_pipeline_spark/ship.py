@@ -6,7 +6,8 @@ BY REFERENCE to this package, so Python workers must be able to
 root, false otherwise. ``ensure_shipped`` zips the package once per
 SparkContext and registers it with ``addPyFile`` so every executor can
 import it regardless of working directory. Idempotent and cheap
-(~100 KB zip, built once).
+(~100 KB zip, built once). Spark serves the zip from its path while the
+context lives, so it is deleted only at interpreter exit.
 """
 
 from __future__ import annotations
@@ -16,6 +17,8 @@ import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from rat_strain_loader_pipeline_spark.staging import remove_at_exit
 
 _SHIPPED_ATTR = "_rat_strain_loader_pipeline_spark_shipped"
 
@@ -38,5 +41,6 @@ def ensure_shipped(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
+        remove_at_exit(zip_path)
     sc.addPyFile(zip_path)
     setattr(sc, _SHIPPED_ATTR, True)

@@ -13,10 +13,11 @@ So the engine stages through parquet — which is also the honest design
 at cluster scale: the reference pipeline lands every stage in staging
 tables, and a 100 TB Spark deployment would land them in parquet/Delta.
 
-Stages are written under a per-process temp dir (``_stage_root``).
-A stage whose write fails is removed (``remove_failed_write``); nothing
-deletes a written one, neither while the process runs nor after it
-exits: a long-lived process accumulates every stage it wrote. On the
+Stages are written under a per-process temp dir (``_stage_root``),
+which is deleted at interpreter exit (``remove_at_exit``). A stage
+whose write fails is removed (``remove_failed_write``); nothing deletes
+a written one while the process runs: a long-lived process accumulates
+every stage it wrote. On the
 CLI path those are ``VariantLoad3``'s ``derive-stage-a`` and
 ``load-with-ids`` stages; post-processing writes ``variant_transcript``
 straight from its consequence dataflow, and the fixups stage nothing
@@ -39,6 +40,7 @@ directories are long-lived by design: a stage cleanup must leave them
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -52,12 +54,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 _STAGE_ROOT: str | None = None
+_AT_EXIT: list[str] = []
+
+
+def remove_at_exit(path: str) -> None:
+    """Delete ``path``, a file or a directory tree this process made,
+    when the interpreter exits."""
+    if not _AT_EXIT:
+        atexit.register(_remove_paths)
+    _AT_EXIT.append(path)
+
+
+def _remove_paths() -> None:
+    for path in _AT_EXIT:
+        if os.path.isdir(path) and not os.path.islink(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.lexists(path):
+            os.unlink(path)
 
 
 def _stage_root() -> str:
     global _STAGE_ROOT
     if _STAGE_ROOT is None:
         _STAGE_ROOT = tempfile.mkdtemp(prefix=f"rat_strain_loader_pipeline_spark-stage-{os.getpid()}-")
+        remove_at_exit(_STAGE_ROOT)
     return _STAGE_ROOT
 
 

@@ -113,9 +113,15 @@ def _writer(df: DataFrame, table: str, mode: str):
 
 
 def write_table(df: DataFrame, root: str, table: str) -> None:
-    """Append ``df`` into the store table."""
+    """Append ``df`` into the store table. A failed append lands no file:
+    its attempt tree ``<table>/_temporary`` is removed once the failed
+    job's tasks have ended."""
     _check_declared(df, table)
-    _writer(df, table, "append").parquet(_path(root, table))
+    try:
+        _writer(df, table, "append").parquet(_path(root, table))
+    except BaseException:
+        remove_failed_write(df.sparkSession, os.path.join(_path(root, table), "_temporary"))
+        raise
 
 
 def commit_table(df: DataFrame, root: str, table: str) -> None:

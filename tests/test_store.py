@@ -199,6 +199,32 @@ def test_failed_commit_leaves_the_table_and_no_version(spark, tmp_path):
         commit_table(read_table(spark, root, "variant_map_data"), root, "variant_map_data")
 
 
+def test_failed_append_leaves_the_table_as_it_was(spark, tmp_path):
+    """An append whose write fails on a row lands no file and leaves no
+    ``_temporary`` tree, once the failed job's killed tasks have ended."""
+    root = str(tmp_path / "store")
+    path = os.path.join(root, "variant_map_data")
+    write_table(_vmd(spark, "1", "GENIC"), root, "variant_map_data")
+
+    def listing():
+        return sorted(os.path.relpath(os.path.join(d, n), path)
+                      for d, dirs, files in os.walk(path) for n in dirs + files)
+
+    before, rows = listing(), _rows(spark, root, "variant_map_data")
+    bad = spark.range(0, 1000, 1, 4).select(
+        F.col("id").alias("rgd_id"), F.lit("2").alias("chromosome"),
+        (F.col("id") + 100).alias("start_pos"), (F.col("id") + 101).alias("end_pos"),
+        F.lit(None).cast("string").alias("padding_base"),
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.lit("GENIC")).alias("genic_status"),
+        F.lit(360).alias("map_key"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_table(bad, root, "variant_map_data")
+    assert listing() == before
+    assert _rows(spark, root, "variant_map_data") == rows
+
+
 def test_readers_see_one_whole_version_during_commits(spark, tmp_path):
     """A thread lists the table path while a fixup tool and a compaction
     replace the table: every listing is one committed version's whole
